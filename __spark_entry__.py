@@ -38,21 +38,44 @@ def _ensure_shipped(spark: SparkSession) -> None:
     app = spark.sparkContext.applicationId
     if app in _shipped:
         return
-    zip_path = os.path.join(_REPO, "dist", "pastash_spark.zip")
-    if not os.path.exists(zip_path):
-        import zipfile
-        os.makedirs(os.path.dirname(zip_path), exist_ok=True)
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            pkg = os.path.join(_REPO, "pastash_spark")
-            for root, _dirs, files in os.walk(pkg):
-                if "__pycache__" in root:
-                    continue
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        zf.write(full, os.path.relpath(full, _REPO))
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(_packaged_zip())
     _shipped.add(app)
+
+
+def _packaged_zip(repo: str = _REPO) -> str:
+    """Path of ``dist/pastash_spark.zip`` holding the current
+    ``pastash_spark/**/*.py``.  The zip's comment is the sources' content
+    hash; a zip whose comment differs (missing, stale, or built by
+    scripts/package.sh) is rebuilt, so an old zip never shadows fresh
+    code on the executors."""
+    import hashlib
+    import zipfile
+    pkg = os.path.join(repo, "pastash_spark")
+    sources = sorted(
+        os.path.join(root, f)
+        for root, _dirs, files in os.walk(pkg) if "__pycache__" not in root
+        for f in files if f.endswith(".py"))
+    h = hashlib.sha256()
+    for full in sources:
+        h.update(os.path.relpath(full, repo).encode() + b"\0")
+        with open(full, "rb") as fh:
+            h.update(fh.read())
+    digest = h.hexdigest().encode()
+    zip_path = os.path.join(repo, "dist", "pastash_spark.zip")
+    try:
+        with zipfile.ZipFile(zip_path) as zf:
+            if zf.comment == digest:
+                return zip_path
+    except (OSError, zipfile.BadZipFile):
+        pass
+    os.makedirs(os.path.dirname(zip_path), exist_ok=True)
+    tmp = f"{zip_path}.{os.getpid()}.tmp"
+    with zipfile.ZipFile(tmp, "w") as zf:
+        for full in sources:
+            zf.write(full, os.path.relpath(full, repo))
+        zf.comment = digest
+    os.replace(tmp, zip_path)
+    return zip_path
 
 
 _SF_DIR = os.environ.get("SPARK_GRAFT_ENTRY_SF", "/root/testdata/sf0.001")

@@ -17,6 +17,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pastash_spark.operators.enrich import asof_join, asof_lookup
+
 
 def _epoch(c: Column) -> Column:
     """Epoch seconds for TIMESTAMP or TIMESTAMP_NTZ columns (NTZ cannot cast
@@ -77,15 +79,13 @@ def sessionize(df: DataFrame, *, key: str | Sequence[str], ts: str = "ts",
 
 
 def forward_fill_correlation(df: DataFrame, *, key: str | Sequence[str],
-                             order: str, value: str,
+                             order: str | Sequence[str], value: str,
                              target: str = "correlation_id") -> DataFrame:
     """esl-style correlation-id propagation (filter_esl.js:144-204): the id
     captured at CHANNEL_CREATE is carried to every later event of the call —
-    ``last(value) ignorenulls`` over the ordered key window."""
-    keys = [key] if isinstance(key, str) else list(key)
-    w = (Window.partitionBy(*keys).orderBy(F.col(order))
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return df.withColumn(target, F.last(F.col(value), ignorenulls=True).over(w))
+    an ``asof_lookup`` where every non-null ``value`` publishes."""
+    return asof_lookup(df, key=key, order=order, is_set=F.lit(True),
+                       value=F.col(value), target=target)
 
 
 def bleg_correlation(df: DataFrame, *, key: str = "unique_id",
@@ -1256,8 +1256,9 @@ def app_rtpproxy_correlate(df: DataFrame, *, field: str = "message",
     filter_app_rtpproxy.js:55-134): the reference keeps a driver-side
     ``ipcache`` keyed by command token (and a port->token alias map) across
     lines; replies complete the cached session and emit a call-correlation
-    object.  Relational re-expression — the caches become AS-OF JOINS on
-    (token | port) ordered by ``order``:
+    object.  Relational re-expression — each cache becomes one
+    ``enrich.asof_join`` (the writers' and readers' lines merged into one
+    stream per token or port, ordered by ``order``):
 
       * ``received command "<token> [US|U|L]c<codecs> <corr>`` rows CREATE a
         session: first codec -> RTPmap name/rate/pt, direction L->1 else 0
@@ -1267,10 +1268,10 @@ def app_rtpproxy_correlate(df: DataFrame, *, field: str = "message",
       * ``rtpc_doreply: sending reply "<port> <ip>\\n"`` resolves its token
         THROUGH the alias (:86-100); plain ``sending reply "<token> <port>
         <ip>#012`` is keyed directly (:102-115).  Either emits one
-        method='create' row with the reply's port/ip joined to the LATEST
+        method='create' row with the reply's port/ip completing the LATEST
         prior create for that token — and consumes it (the reference nulls
         the cache entry), so each create pairs with at most its FIRST
-        following reply: groupBy (token, create_order) min(reply_order).
+        following reply.
       * ``session on ports <p1>/<p2> is cleaned up`` emits method='delete'
         clones of the session(s) last seen on those ports (:117-133 —
         NOTE: in the reference this branch is dead-by-construction, since
@@ -1279,8 +1280,9 @@ def app_rtpproxy_correlate(df: DataFrame, *, field: str = "message",
 
     Output: one row per emitted correlation object — (method,
     correlation_id, token, codec_name, codec_pt, codec_rate, direction,
-    port, ip, `order`).  Everything is equi-joins + windows; the token/port
-    keys are high-cardinality, so the shuffles stay balanced at scale.
+    port, ip, `order`).  No joins: three as-of windows keyed on the
+    high-cardinality token/port, so the shuffles stay balanced at scale and
+    a hot key costs O(lines).
     """
     # PERF (r06): ONE Arrow pass evaluates every family's line regex
     # (the old branches re-ran 2-4 JVM regexp_extract per matching line —
@@ -1299,14 +1301,13 @@ def app_rtpproxy_correlate(df: DataFrame, *, field: str = "message",
                 reuse)
     m = F.col("_m")
 
-    def _fam(token_field: str, ord_alias: str,
-             *fields: "tuple[str, str]") -> DataFrame:
-        tok = m[token_field]
-        return (df.filter(tok.isNotNull() & (tok != ""))
+    def _fam(key_field: str, *fields: "tuple[str, str]") -> DataFrame:
+        k = m[key_field]
+        return (df.filter(k.isNotNull() & (k != ""))
                 .select(*[m[src].alias(dst) for src, dst in fields],
-                        F.col(order).alias(ord_alias)))
+                        F.col(order).alias("_ord")))
 
-    creates = _fam("c_token", "_c_ord",
+    creates = _fam("c_token",
                    ("c_token", "token"), ("c_mode", "_mode"),
                    ("c_codecs", "_codecs"), ("c_corr", "correlation_id"))
     pt = F.get(F.split(F.col("_codecs"), ","), 0).try_cast("int")
@@ -1314,121 +1315,53 @@ def app_rtpproxy_correlate(df: DataFrame, *, field: str = "message",
     for k, v in RTP_CODEC_MAP.items():
         codec_pairs.extend([F.lit(k), F.lit(v)])
     codec_map = F.create_map(*codec_pairs)
-    creates = creates.select(
-        "token", "correlation_id", "_c_ord",
+    session = F.struct(
+        "correlation_id",
         F.coalesce(codec_map[pt], F.lit("Dynamic")).alias("codec_name"),
-        F.coalesce(pt, F.lit(None)).alias("codec_pt"),
+        pt.alias("codec_pt"),
         F.lit(8000).alias("codec_rate"),
         F.when(F.col("_mode") == "L", 1).otherwise(0).alias("direction"))
 
-    aliases = _fam("a_port", "_a_ord",
-                   ("a_port", "_a_port"), ("a_token", "_a_token"))
-
+    aliases = _fam("a_port", ("a_port", "port"), ("a_token", "token"))
     # reply branch precedence (doreply vs plain) mirrors the reference's
-    # if/else chain — encoded in the matcher's masks
-    do_replies = _fam("d_port", "_r_ord",
-                      ("d_port", "_r_port"), ("d_ip", "ip"))
-    # port -> token through the LATEST prior alias publication
-    do_replies = (do_replies.join(
-        aliases, (F.col("_a_port") == F.col("_r_port"))
-        & (F.col("_a_ord") < F.col("_r_ord")), "inner"))
-    w_last_alias = Window.partitionBy("_r_ord").orderBy(F.col("_a_ord").desc())
-    do_replies = (do_replies
-                  .withColumn("_rn", F.row_number().over(w_last_alias))
-                  .filter(F.col("_rn") == 1))
-    # the reference NULLs ipcache['port_'+port] after emitting (:100) — an
-    # alias publication is consumed by its FIRST doreply; later doreplies
-    # on the same port need a fresh 'new session on IPv4 port' line
-    w_alias_consume = Window.partitionBy("_r_port", "_a_ord") \
-        .orderBy(F.col("_r_ord"))
-    do_replies = (do_replies
-                  .withColumn("_rn2", F.row_number().over(w_alias_consume))
-                  .filter(F.col("_rn2") == 1)
-                  .select(F.col("_a_token").alias("token"),
-                          F.col("_r_port").alias("port"), "ip", "_r_ord"))
-
-    tok_replies = _fam("r_token", "_r_ord",
-                       ("r_token", "token"), ("r_port", "port"),
-                       ("r_ip", "ip"))
-    replies = do_replies.unionByName(tok_replies)
-
-    # PERF (r06b): the as-of pairing is a MERGED per-token stream instead
-    # of a reply x create range join + two windows.  The old join emitted
-    # every (reply, prior create) combination per token before the as-of
-    # window cut it back — quadratic on a hot token — and needed two join
-    # exchanges; the merged stream is one hash(token) exchange, a
-    # forward-fill window (latest create at/before each reply = the old
-    # w_asof winner) and a first-reply-per-create row_number (the old
-    # w_first consume rule), which reuses the same partitioning (subset
-    # key) so no further shuffle.  A reply whose forward-fill is null has
-    # no prior create — exactly the rows the old inner join dropped.
-    ns = F.lit(None).cast("string")
-    merged_stream = (creates
-                     .select("token", F.col("_c_ord").alias("_ord"),
-                             F.lit(True).alias("_isc"), "correlation_id",
-                             "codec_name", "codec_pt", "codec_rate",
-                             "direction", ns.alias("port"), ns.alias("ip"))
-                     .unionByName(replies.select(
-                         "token", F.col("_r_ord").alias("_ord"),
-                         F.lit(False).alias("_isc"),
-                         ns.alias("correlation_id"), ns.alias("codec_name"),
-                         F.lit(None).cast("int").alias("codec_pt"),
-                         F.lit(None).cast("int").alias("codec_rate"),
-                         F.lit(None).cast("int").alias("direction"),
-                         "port", "ip")))
-    # _ord doubles as _c_ord on create rows, so the fill struct needs no
-    # extra column and keeps the order column's dtype
-    merged_stream = merged_stream.withColumn(
-        "_cr", F.when(F.col("_isc"), F.struct(
-            "correlation_id", "codec_name", "codec_pt", "codec_rate",
-            "direction", F.col("_ord").alias("_c_ord"))))
-    # "first reply after the latest create" == "reply whose immediate
-    # predecessor in the (token, order) stream is a create": any earlier
-    # reply after that create would itself sit between the create and this
-    # row.  So the consume rule is a lag() over the SAME window spec as
-    # the forward-fill — one sort, one Window pass (a predecessor that is
-    # a create also guarantees the fill is non-null).
-    w_fill = Window.partitionBy("token").orderBy("_ord")
-    paired = (merged_stream
-              .withColumn("_f", F.last("_cr", ignorenulls=True).over(w_fill))
-              .withColumn("_pc", F.lag("_isc").over(w_fill))
-              .filter(~F.col("_isc") & F.col("_pc")))
-    created = paired.select(
-        F.lit("create").alias("method"),
-        F.col("_f.correlation_id").alias("correlation_id"), "token",
-        F.col("_f.codec_name").alias("codec_name"),
-        F.col("_f.codec_pt").alias("codec_pt"),
-        F.col("_f.codec_rate").alias("codec_rate"),
-        F.col("_f.direction").alias("direction"), "port", "ip",
-        F.col("_ord").alias(order))
-    # `created` is both an output branch AND the delete branch's join
-    # source.  PERF (r06b): NOT checkpointed anymore — since the merged-
-    # stream rewrite both consumers share one exchange subtree that AQE's
-    # stage reuse dedups (the old as-of-join shape really did run twice:
-    # 15 Window operators from duplicated subtrees), a cleans-empty input
-    # prunes the delete branch entirely via empty-relation propagation,
-    # and each localCheckpoint cost ~0.5-1.9 s of DRIVER build time per
-    # fresh plan (toRdd planning + UDF command broadcast), which the
-    # bench's fresh-plan protocol pays every run.
+    # if/else chain — encoded in the matcher's masks.  A doreply resolves
+    # port -> token through the latest prior alias publication, which it
+    # consumes: the reference NULLs ipcache['port_'+port] after emitting
+    # (:100), so a later doreply on the same port needs a fresh
+    # 'new session on IPv4 port' line.
+    do_replies = asof_join(
+        _fam("d_port", ("d_port", "port"), ("d_ip", "ip")), aliases,
+        key="port", order="_ord", value="token", target="token",
+        consume=True).filter(F.col("token").isNotNull())
+    replies = do_replies.unionByName(
+        _fam("r_token", ("r_token", "token"), ("r_port", "port"),
+             ("r_ip", "ip")))
+    # each reply completes the latest prior create of its token and
+    # consumes it, so a create pairs with at most its first reply
+    created = (asof_join(replies, creates, key="token", order="_ord",
+                         value=session, target="_sess", consume=True)
+               .filter(F.col("_sess").isNotNull())
+               .select(F.lit("create").alias("method"), "_sess.*", "token",
+                       "port", "ip", "_ord"))
 
     # cleanup: method='delete' clone of the session last seen on each port
     cleans = (df.filter(m["x_p1"].isNotNull())
-              .select(F.explode(F.array(m["x_p1"], m["x_p2"]))
-                      .alias("_d_port"),
-                      F.col(order).alias("_d_ord"))
-              .filter(F.col("_d_port") != ""))
-    dels = cleans.join(created.withColumnRenamed(order, "_e_ord"),
-                       (F.col("port") == F.col("_d_port"))
-                       & (F.col("_e_ord") < F.col("_d_ord")), "inner")
-    w_lastsess = Window.partitionBy("_d_ord", "_d_port") \
-        .orderBy(F.col("_e_ord").desc())
-    dels = (dels.withColumn("_rn", F.row_number().over(w_lastsess))
-            .filter(F.col("_rn") == 1)
-            .select(F.lit("delete").alias("method"), "correlation_id",
-                    "token", "codec_name", "codec_pt", "codec_rate",
-                    "direction", "port", "ip",
-                    F.col("_d_ord").alias(order)))
-    return created.unionByName(dels)
+              .select(F.explode(F.array_distinct(
+                          F.array(m["x_p1"], m["x_p2"]))).alias("port"),
+                      F.col(order).alias("_ord"))
+              .filter(F.col("port") != ""))
+    dels = (asof_join(cleans, created, key="port", order="_ord",
+                      value=F.struct("correlation_id", "token",
+                                     "codec_name", "codec_pt", "codec_rate",
+                                     "direction", "ip"),
+                      target="_sess")
+            .filter(F.col("_sess").isNotNull())
+            .select(F.lit("delete").alias("method"), "_sess.*", "port",
+                    "_ord"))
+    return (created.unionByName(dels)
+            .select("method", "correlation_id", "token", "codec_name",
+                    "codec_pt", "codec_rate", "direction", "port", "ip",
+                    F.col("_ord").alias(order)))
 
 
 # --- app_audiocodes -----------------------------------------------------------
@@ -1880,21 +1813,20 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
             F.lit(0).cast("int").alias("dst_port"),
             F.lit(17).alias("protocol")))
         outs.append(call_end)
-        # other SID-carrying lines: correlation through the sidcache twin —
-        # as-of last SIP Call-ID published for that sid
+        # other SID-carrying lines: correlation through the sidcache
+        # (set :271-273, get :348) — the Call-ID of the latest SIP message
+        # before the line on its sid; the re-hold's second message comes
+        # after its primary, so it wins on the shared order value
         others = base.filter(
             (F.col("sid") != "") & ~is_sipline & ~F.col("_consumed")
             & ~l.contains("CALL_END ") & ~l.contains("MEDIA_END "))
-        sip_cids = core.filter(F.col("proto_type") == 1).select(
-            "sid", F.col(order).alias("_o"),
-            F.col("correlation_id").alias("_cid"))
-        # as-of join sip_cids to each log line (latest _o < order)
-        logline = others.select(F.col(order), "sid", "_line")
-        j = logline.join(sip_cids, "sid", "left") \
-            .filter(F.col("_o").isNull() | (F.col("_o") < F.col(order)))
-        w_last = Window.partitionBy("sid", order).orderBy(F.col("_o").desc())
-        j = (j.withColumn("_rn", F.row_number().over(w_last))
-             .filter(F.col("_rn") == 1))
+        sip_cids = (base.select(
+            F.col(order), "sid",
+            F.coalesce(F.col("_slot1.correlation_id"),
+                       F.col("_slot0.correlation_id")).alias("_cid"))
+            .filter((F.col("sid") != "") & F.col("_cid").isNotNull()))
+        j = asof_join(others.select(F.col(order), "sid", "_line"), sip_cids,
+                      key="sid", order=order, value="_cid", target="_cid")
         outs.append(j.select(
             F.col(order), "sid", F.lit(100).alias("proto_type"),
             F.col("_line").alias("payload"),

@@ -7,7 +7,8 @@ The reference enriches via per-filter LRU caches around expensive lookups
 executor, probe side streamed through codegen; the cache disappears because
 the "lookup" is a hash probe.  For keyed mutable state (the lru/gun set/get
 correlation pattern) the batch equivalent is an ordered window
-``last(value) ignorenulls`` — an as-of lookup.
+``last(value) ignorenulls`` — an as-of lookup (``asof_lookup`` on one
+stream, ``asof_join`` when the writers and readers are separate frames).
 """
 
 from __future__ import annotations
@@ -144,22 +145,63 @@ def reverse_dns(df: DataFrame, *, field: str = "host",
     return out
 
 
-def asof_lookup(df: DataFrame, *, key: str | Sequence[str], order: str,
-                is_set, value, target: str) -> DataFrame:
+def _names(cols: str | Sequence[str]) -> list[str]:
+    return [cols] if isinstance(cols, str) else list(cols)
+
+
+def asof_lookup(df: DataFrame, *, key: str | Sequence[str],
+                order: str | Sequence[str], is_set, value,
+                target: str) -> DataFrame:
     """The lru/gun set→get correlation pattern as a window as-of lookup
     (filter_lru.js:27-43, gun_helper.js:4-37): rows where ``is_set`` holds
     publish ``value`` under ``key``; every row reads the latest published
-    value at its position in ``order``.
+    value at its position in ``order`` (its own value included).
 
     last(value) ignorenulls over (partition by key order by order) — one
     shuffle on the key, no driver state.  TTL semantics (maxAge) belong to
     the streaming variant (streaming/state.py) where watermarks bound state.
     """
-    keys = [key] if isinstance(key, str) else list(key)
-    w = (Window.partitionBy(*keys).orderBy(F.col(order))
+    w = (Window.partitionBy(*_names(key)).orderBy(*_names(order))
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     published = F.when(is_set, value)
     return df.withColumn(target, F.last(published, ignorenulls=True).over(w))
+
+
+def asof_join(probe: DataFrame, build: DataFrame, *,
+              key: str | Sequence[str], order: str, value, target: str,
+              consume: bool = False) -> DataFrame:
+    """Two-stream as-of lookup — a per-key cache that ``build`` rows write
+    and later ``probe`` rows read (lru set/get across event families,
+    rtpproxy's ipcache, audiocodes' sidcache).
+
+    Both frames carry the ``key`` and ``order`` columns; ``value`` (a
+    column name or an expression over ``build``) is what a build row
+    publishes.  Each probe row gets, under ``target``, the latest non-null
+    value published by a build row of its key STRICTLY before it: the two
+    streams are unioned and read in one window over (key | order,
+    is_build), where a probe sorts before a build row of equal ``order``.
+    ``consume=True`` is the read-then-null cache rule: a probe matches
+    only when the row directly before it in its key's stream is a build
+    row, so each publication serves at most its first reader.  Probe rows
+    without a match get NULL; the result has the probe's columns plus
+    ``target``.  NULL keys form one partition, like any window key.
+
+    One exchange on the key and one sort — no candidate pairs, so a hot
+    key costs O(rows) instead of the O(probes x builds) of a range join.
+    """
+    keys = _names(key)
+    v = F.col(value) if isinstance(value, str) else value
+    stream = (probe.withColumn("_asof_b", F.lit(False))
+              .unionByName(build.select(*keys, order, v.alias("_asof_v"),
+                                        F.lit(True).alias("_asof_b")),
+                           allowMissingColumns=True))
+    w = Window.partitionBy(*keys).orderBy(order, "_asof_b")
+    hit = F.last("_asof_v", ignorenulls=True).over(
+        w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    if consume:
+        hit = F.when(F.lag("_asof_b").over(w), hit)
+    return (stream.select(*probe.columns, hit.alias(target), "_asof_b")
+            .filter(~F.col("_asof_b")).drop("_asof_b"))
 
 
 # --- external SQL lookup filters (mysql / sqlite family) ----------------------

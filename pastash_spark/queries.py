@@ -271,15 +271,12 @@ SELECT event_id,
 FROM events
 """)
 def q_asof_lru(spark, sf_dir):
-    from pyspark.sql import Window
     # split-shuffle keyed on the window key — the scan split IS the
     # window's exchange (one shuffle total)
     ev = _t(spark, sf_dir, "events", key="user_id")
-    w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    published = F.when(F.col("event_type") == "signup", F.col("value"))
-    return ev.withColumn("last_signup_value",
-                         F.last(published, ignorenulls=True).over(w)) \
+    return asof_lookup(ev, key="user_id", order=["ts", "event_id"],
+                       is_set=F.col("event_type") == "signup",
+                       value=F.col("value"), target="last_signup_value") \
         .select("event_id", "last_signup_value")
 
 
@@ -372,14 +369,12 @@ SELECT event_id,
 FROM events
 """)
 def q_ffill_corr(spark, sf_dir):
-    from pyspark.sql import Window
     ev = _t(spark, sf_dir, "events", key="user_id").withColumn(
         "corr_src", F.when(F.col("event_type") == "signup",
                            F.concat(F.lit("corr-"), F.col("user_id").cast("string"))))
-    w = (Window.partitionBy("user_id").orderBy("ts", "event_id")
-         .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    return ev.withColumn("correlation_id",
-                         F.last("corr_src", ignorenulls=True).over(w)) \
+    return C.forward_fill_correlation(ev, key="user_id",
+                                      order=["ts", "event_id"],
+                                      value="corr_src") \
         .select("event_id", "correlation_id")
 
 
@@ -1924,7 +1919,7 @@ g AS (SELECT doc_id,
              unnest(list_transform(generate_series(1, len(ws) - 1),
                                    i -> ws[i] || ' ' || ws[i + 1])) AS gram
       FROM w),
-t AS (SELECT doc_id, MAX(cnt) AS top_count, SUM(cnt) AS total
+t AS (SELECT doc_id, MAX(cnt) AS top_count, CAST(SUM(cnt) AS BIGINT) AS total
       FROM (SELECT doc_id, gram, COUNT(*) AS cnt FROM g
             GROUP BY doc_id, gram)
       GROUP BY doc_id)

@@ -46,7 +46,7 @@ def main() -> int:
     import __spark_entry__ as entrymod
     from pastash_spark.session import get_spark
 
-    spark = get_spark("oracle-check", master="local[8]")
+    spark = get_spark("oracle-check")
     spark.sparkContext.setLogLevel("ERROR")
 
     con = duckdb.connect()

@@ -12,7 +12,8 @@ from pastash_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("pastash_spark-tests", master="local[8]", shuffle_partitions=8)
+    # master defaults to local[$SPARK_GRAFT_CPUS] (else all cores)
+    s = get_spark("pastash_spark-tests", shuffle_partitions=8)
     yield s
     s.stop()
 

@@ -524,6 +524,88 @@ def test_asof_lookup_set_get(spark):
                         value=F.col("value"), target="got")
     got = {r.t: r.got for r in out.collect()}
     assert got == {1: "v1", 2: "v1", 3: "v1", 4: "v2", 5: "v2"}
+    # a multi-column order breaks ties on t: the set at (5, 1) is seen by
+    # (5, 2) but not by (5, 0)
+    ties = spark.createDataFrame(
+        [("k", 5, 0, None), ("k", 5, 1, "v3"), ("k", 5, 2, None)],
+        "key string, t int, s int, value string").unionByName(
+            df.drop("action").withColumn("s", F.lit(0)))
+    out = E.asof_lookup(ties, key="key", order=["t", "s"],
+                        is_set=F.col("value").isNotNull(),
+                        value=F.col("value"), target="got")
+    got = {(r.t, r.s): r.got for r in out.collect()}
+    assert got[(5, 0)] == "v2" and got[(5, 2)] == "v3"
+
+
+def test_asof_join_strictly_prior_and_consume(spark):
+    # sets and gets are separate frames; a get reads the latest set of its
+    # key STRICTLY before it — a set sharing its order value is not yet
+    # visible (the create/reply tie on one order value)
+    sets = spark.createDataFrame(
+        [("k", 1, "v1"), ("k", 4, "v2"), ("k", 6, "v3"), ("j", 9, "w")],
+        "key string, t int, value string")
+    gets = spark.createDataFrame(
+        [("k", 1, "a"), ("k", 2, "b"), ("k", 3, "c"), ("k", 5, "d"),
+         ("k", 6, "e"), ("j", 7, "f")],
+        "key string, t int, tag string")
+    out = E.asof_join(gets, sets, key="key", order="t", value="value",
+                      target="got")
+    assert out.columns == ["key", "t", "tag", "got"]
+    got = {r.tag: r.got for r in out.collect()}
+    assert got == {"a": None, "b": "v1", "c": "v1", "d": "v2", "e": "v2",
+                   "f": None}
+    # consume: read-then-null — only the first get after a set matches
+    out = E.asof_join(gets, sets, key="key", order="t",
+                      value=F.upper("value"), target="got", consume=True)
+    got = {r.tag: r.got for r in out.collect()}
+    assert got == {"a": None, "b": "V1", "c": None, "d": "V2", "e": None,
+                   "f": None}
+
+
+def _ipcache_replay(lines):
+    """The reference's rtpproxy ipcache (filter_app_rtpproxy.js:55-100),
+    one line at a time: a create sets ipcache[token], an alias line sets
+    ipcache['port_'+port], a doreply reads the port's token, then its
+    session, emits, and nulls both."""
+    cache, out = {}, set()
+    for no, line in lines:
+        if line.startswith("received command "):
+            tok, _mode, corr = line.split('"')[1].split()[:3]
+            cache[tok] = corr
+        elif "new session on IPv4 port " in line:
+            words = line.split()
+            cache["port_" + words[6]] = words[-1]
+        elif "rtpc_doreply: sending reply " in line:
+            port, ip = line.split('"')[1][:-2].split()
+            tok = cache.pop("port_" + port, None)
+            corr = cache.pop(tok, None) if tok is not None else None
+            if corr is not None:
+                out.add((tok, corr, port, ip, no))
+    return out
+
+
+def test_rtpproxy_hot_port_matches_ipcache_replay(spark):
+    # one hot port: 5,000 alias publications and 5,000 doreplies alternate
+    # on it, tokens drawn from a small pool, creates for about half of them
+    import random
+    rng = random.Random(11)
+    lines = []
+    for i in range(5000):
+        tok = f"t{rng.randrange(50)}"
+        if rng.random() < 0.5:
+            lines.append(f'received command "{tok} Uc0 corr-{i} 1 2"')
+        lines.append(f"rtpproxy: new session on IPv4 port 4000 created, "
+                     f"tag {tok}")
+        lines.append(f'rtpc_doreply: sending reply '
+                     f'"4000 10.0.{i // 250}.{i % 250}\\n"')
+    numbered = list(enumerate(lines, start=1))
+    df = spark.createDataFrame(numbered, "line_no long, message string")
+    out = C.app_rtpproxy_correlate(df).filter(F.col("method") == "create")
+    got = {(r.token, r.correlation_id, r.port, r.ip, r.line_no)
+           for r in out.collect()}
+    want = _ipcache_replay(numbered)
+    assert len(want) > 1000
+    assert got == want
 
 
 # --- correlate --------------------------------------------------------------

@@ -336,3 +336,24 @@ def test_entry_contract(spark):
     assert {"sink", "source", "count", "sum_tokens"} <= cols
     assert {"resume_buckets_skipped", "lineage_committed_rows"} <= cols
     assert all(r.resume_buckets_skipped == 4 for r in rows)
+
+
+def test_packaged_zip_rebuilds_when_source_changes(tmp_path):
+    """The executor zip tracks the sources' content hash: unchanged code
+    reuses it, an edited module rebuilds it (a stale zip would shadow the
+    fresh code on the workers)."""
+    import os
+    import zipfile
+
+    import __spark_entry__ as e
+    mod = tmp_path / "pastash_spark" / "mod.py"
+    mod.parent.mkdir()
+    mod.write_text("X = 1\n")
+    path = e._packaged_zip(str(tmp_path))
+    with zipfile.ZipFile(path) as zf:
+        assert zf.read("pastash_spark/mod.py") == b"X = 1\n"
+    built = os.stat(path).st_mtime_ns
+    assert os.stat(e._packaged_zip(str(tmp_path))).st_mtime_ns == built
+    mod.write_text("X = 2\n")
+    with zipfile.ZipFile(e._packaged_zip(str(tmp_path))) as zf:
+        assert zf.read("pastash_spark/mod.py") == b"X = 2\n"

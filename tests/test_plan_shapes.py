@@ -118,6 +118,17 @@ def test_audiocodes_default_is_sid_partitioned_no_global_window(spark):
     assert plan.count("ArrowEvalPython") == 1
 
 
+def test_rtpproxy_lookups_are_asof_windows_not_joins(spark):
+    """Every rtpproxy cache lookup is one as-of window over a merged
+    stream — never a range join plus a latest-row pick, which builds every
+    (reader, prior writer) pair and goes quadratic on a hot token/port."""
+    from pastash_spark.operators.correlate import app_rtpproxy_correlate
+    df = spark.createDataFrame([(1, "x")], "line_no long, message string")
+    plan = _optimized(app_rtpproxy_correlate(df))
+    assert "Join" not in plan
+    assert "WindowGroupLimit" not in plan
+
+
 def test_app_family_defaults_no_global_window(spark):
     """VERDICT r05 #3: no app_* reassembly operator may plan a
     single-partition global sort from its DEFAULT call — the window key

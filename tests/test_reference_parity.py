@@ -1197,3 +1197,15 @@ class TestAppAudiocodes:
         # SID 777 resolved to the SIP leg's Call-ID (sidcache get, :348)
         assert logs[0].correlation_id == "cid-77"
         assert logs[0].src_port == 514 and logs[0].dst_port == 514
+
+    def test_log_line_before_first_sip_message_keeps_sid(self, spark):
+        # a log line whose sid gets its Call-ID only on a LATER line still
+        # emits, correlated by the bare sid (sidcache miss)
+        early = "[S=4] [SID=ac1:12:777] early device log chatter"
+        log1 = "[S=9] [SID=ac1:12:777] some device log chatter"
+        rows = self._run(spark, [early, self.IN_LINE, log1], logs=True,
+                         qos=False)
+        got = sorted((r.line_no, r.proto_type, r.correlation_id)
+                     for r in rows)
+        assert got == [(1, 100, "777"), (2, 1, "cid-77"),
+                       (3, 100, "cid-77")]
