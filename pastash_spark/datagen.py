@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pastash_spark.session import local_frame
+
 SEED = 42
 VOCAB = 50257
 MONTHS = ["Jan", "Feb", "Mar", "Apr", "May", "Jun",
@@ -170,7 +172,7 @@ LOOKUP_SCHEMA = T.StructType([
 
 
 def source_lookup(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(_LOOKUP_ROWS, LOOKUP_SCHEMA)
+    return local_frame(spark, _LOOKUP_ROWS, LOOKUP_SCHEMA)
 
 
 def source_lookup_pandas() -> pd.DataFrame:

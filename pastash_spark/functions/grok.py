@@ -6,13 +6,13 @@ pattern library and matches with Oniguruma named groups
 pattern files under /root/reference/lib/patterns/grok/).  Here the same
 recursive expansion runs ONCE at plan-build time in Python, producing
 
-  * a Python-flavoured regex (``(?P<name>...)``) for Arrow-vectorized
-    ``pandas.Series.str.extract`` paths, and
-  * a Java-flavoured regex (``(?<name>...)``) for native
-    ``F.regexp_extract`` paths,
+  * a Python-flavoured regex (``(?P<name>...)``), which names the groups
+    (and is what tests replay with ``re``), and
+  * a Java-flavoured regex (positional groups) for the native
+    ``parse.regex_extract`` pass,
 
-so the per-row cost is a single compiled-regex match inside codegen / a
-vectorized batch — never a per-event pattern expansion.
+so the per-row cost is a single compiled-regex match inside codegen —
+never a per-event pattern expansion.
 
 The pattern library below is written from scratch (the grok pattern *language*
 and the conventional pattern names are public logstash vocabulary); it covers

@@ -1,11 +1,10 @@
 """Parsing / projection / predicate operators (SURVEY.md §2.1).
 
 Each reimplements one reference filter's semantics on columns.  Hot paths are
-native Catalyst expressions; multi-field regex extraction offers an
-Arrow-vectorized single-pass mode (one compiled-regex sweep per batch via
-``pandas.Series.str.extract``) because N native ``regexp_extract`` calls
-re-run the regex N times per row — measured crossover is a handful of fields.
-"""
+native Catalyst expressions; multi-field regex/grok extraction is one JVM
+regex pass per row (a whole-line ``regexp_replace`` that rewrites the line to
+its separator-joined captures, then ``split``) instead of one
+``regexp_extract`` per field, so no Python worker runs on the parse path."""
 
 from __future__ import annotations
 
@@ -22,6 +21,8 @@ from pastash_spark.functions.grok import CompiledGrok, GrokCompiler
 from pastash_spark.functions.interpolate import moment_to_java
 
 DEFAULT_FIELD = "message"
+# regex_extract's capture separator: a control character log text rarely holds
+_SEP = "\u0001"
 
 
 def _add_tag(df: DataFrame, cond: Column, tag: str) -> DataFrame:
@@ -48,7 +49,6 @@ def regex_extract(
     date_format: str | None = None,
     tag_on_failure: str | None = None,
     regex_flags: str | None = None,
-    mode: str = "auto",
 ) -> DataFrame:
     """Regex/grok capture extraction with reference coercion semantics.
 
@@ -81,72 +81,45 @@ def regex_extract(
                                if f in ("@timestamp", "timestamp")), None)
 
     if isinstance(regex, CompiledGrok):
-        cg = regex
-        out_fields = list(cg.fields)
-        java_re, py_re = cg.java_regex, cg.python_regex
-        group_of = {f: cg.group_index(f) for f in out_fields}
+        java_re, out_fields = regex.java_regex, list(regex.fields)
+        groups = [regex.group_index(f) for f in out_fields]
     else:
         if not fields:
             raise ValueError("plain-regex mode requires `fields`")
-        out_fields = list(fields)
-        java_re, py_re = regex, regex
-        group_of = {f: i + 1 for i, f in enumerate(out_fields)}
+        java_re, out_fields = regex, list(fields)
+        groups = list(range(1, len(out_fields) + 1))
 
     if regex_flags:
         # JS RegExp flags (filter_regex.js passes them to new RegExp):
-        # i/m/s have inline equivalents in both engines; g is meaningless
-        # for a single-extract (the reference extracts once per event too).
+        # i/m/s have inline equivalents; g is meaningless for a
+        # single-extract (the reference extracts once per event too).
         inline = "".join(ch for ch in regex_flags if ch in "ims")
         if inline:
             java_re = f"(?{inline})" + java_re
-            py_re = f"(?{inline})" + py_re
 
-    # Java character classes (\w \b \s) are ASCII-only by default while
-    # Python's are Unicode — the two modes must agree on accented text
-    # (Oniguruma, the reference grok engine, is Unicode-aware too).  (?U)
-    # turns on UNICODE_CHARACTER_CLASS for the whole Java pattern.
+    # Java character classes (\w \b \s) are ASCII-only by default; the
+    # reference's engines (Oniguruma for grok, JS for regex) are
+    # Unicode-aware.  (?U) turns on UNICODE_CHARACTER_CLASS.
     if not java_re.startswith("(?U)"):
         java_re = "(?U)" + java_re
 
-    if mode == "auto":
-        mode = "native" if len(out_fields) <= 4 else "arrow"
-
+    # ONE regex pass per row: the wrapped pattern matches the whole line at
+    # java_re's first match and rewrites it to SEP g1 SEP g2 ..., which
+    # splits to ['', g1, g2, ...]; an unmatched line is left as is and
+    # splits to one element.  A line already holding SEP would be ambiguous,
+    # so it takes one regexp_extract per group instead.
     src = F.col(field)
-
-    if mode == "native":
-        matched = F.coalesce(src.rlike(java_re), F.lit(False))
-        for f in out_fields:
-            cap = F.regexp_extract(src, java_re, group_of[f])
-            # '' from regexp_extract means unmatched/empty -> absent field
-            val = F.when(matched & (cap != ""), cap)
-            df = df.withColumn(f, val)
-    else:
-        # ONE Arrow pass computes every capture AND the match flag — the
-        # vectorized replacement for the reference's per-event regex callback
-        # (north rule: no per-row Python, no duplicate JVM regex pass).
-        struct_t = T.StructType(
-            [T.StructField(f, T.StringType()) for f in out_fields]
-            + [T.StructField("_matched", T.BooleanType())])
-
-        @F.pandas_udf(struct_t)
-        def extract_all(s: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-            for batch in s:
-                ext = batch.str.extract(py_re)  # one pass, all groups
-                if isinstance(regex, CompiledGrok):
-                    out = ext[out_fields].copy()
-                else:
-                    out = ext
-                    out.columns = out_fields
-                # a matching row has at least one non-NaN group ('' counts:
-                # extract yields '' for matched-empty, NaN for no match)
-                out["_matched"] = ext.notna().any(axis=1)
-                out[out_fields] = out[out_fields].mask(out[out_fields] == "")
-                yield out
-
-        df = df.withColumn("_ex", extract_all(src))
-        matched = F.coalesce(F.col("_ex")["_matched"], F.lit(False))
-        for f in out_fields:
-            df = df.withColumn(f, F.col("_ex")[f])
+    whole = r"\A[\s\S]*?(?:" + java_re + r")[\s\S]*\z"
+    rep = "".join(f"{_SEP}${g}" for g in groups) or _SEP
+    per_group = F.when(src.rlike(java_re), F.array(
+        F.lit(""), *[F.regexp_extract(src, java_re, g) for g in groups]))
+    df = df.withColumn("_ex", F.when(
+        src.contains(_SEP), per_group).otherwise(
+        F.split(F.regexp_replace(src, whole, rep), _SEP, -1)))
+    matched = F.coalesce(F.size("_ex") > 1, F.lit(False))
+    # '' means unmatched or an empty capture -> absent field
+    df = df.withColumns({f: F.nullif(F.get("_ex", i + 1), F.lit(""))
+                         for i, f in enumerate(out_fields)})
 
     for f in numerical_fields:
         if f in out_fields:
@@ -163,9 +136,7 @@ def regex_extract(
         )
     if tag_on_failure:
         df = _add_tag(df, ~matched, tag_on_failure)
-    if "_ex" in df.columns:
-        df = df.drop("_ex")
-    return df
+    return df.drop("_ex")
 
 
 def grok(
@@ -176,13 +147,12 @@ def grok(
     extra_patterns: dict[str, str] | None = None,
     numerical_fields: Sequence[str] = (),
     tag_on_failure: str = "_grokparsefailure",
-    mode: str = "auto",
 ) -> DataFrame:
     """Grok = offline-compiled pattern + regex_extract (filter_grok.js:151-167)."""
     cg = GrokCompiler(extra_patterns).compile(pattern)
     return regex_extract(
         df, cg, field=field, numerical_fields=numerical_fields,
-        tag_on_failure=tag_on_failure, mode=mode,
+        tag_on_failure=tag_on_failure,
     )
 
 

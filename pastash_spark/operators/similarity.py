@@ -16,6 +16,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pastash_spark.session import local_frame
+
 
 def _dot(a, b):
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -153,8 +155,8 @@ def exact_cosine_pairs(df: DataFrame, *, id_col: str = "vec_id",
                      F.col(vec_col).cast("array<double>").alias("v"),
                      F.pmod(F.xxhash64(F.col(id_col)), F.lit(B))
                      .cast("int").alias("bk"))
-    grid = spark.createDataFrame(
-        [(i, j) for i in range(B) for j in range(i, B)], "i int, j int")
+    grid = local_frame(
+        spark, [(i, j) for i in range(B) for j in range(i, B)], "i int, j int")
     left = base.join(F.broadcast(grid), F.col("bk") == F.col("i")) \
         .select("i", "j", "id", "v")
     # distinct column names on the right side keep the self-cogroup

@@ -18,6 +18,7 @@ from pastash_spark import datagen
 from pastash_spark.operators import parse as P
 from pastash_spark.operators import route as R
 from pastash_spark.operators.enrich import broadcast_lookup
+from pastash_spark.session import local_frame
 
 # Grok pattern for the rendered syslog-style header in datagen.token_sequences:
 #   <pri>MMM DD HH:mm:ss host prog[pid]: ntok=N first=T doc=ID
@@ -28,10 +29,10 @@ HEADER_PATTERN = (
 )
 
 
-def parse_stage(df: DataFrame, *, mode: str = "auto") -> DataFrame:
+def parse_stage(df: DataFrame) -> DataFrame:
     """Grok-parse the raw header; decode syslog priority; coerce numerics."""
     df = P.grok(df, HEADER_PATTERN, field="raw",
-                numerical_fields=("hdr_ntok", "hdr_first", "pid"), mode=mode)
+                numerical_fields=("hdr_ntok", "hdr_first", "pid"))
     df = P.syslog_pri(df, field="syslog_pri")
     return df
 
@@ -70,8 +71,8 @@ def aggregate_stage(routed: DataFrame) -> DataFrame:
                  F.avg("weighted_tokens").alias("avg_weighted")))
 
 
-def build(df: DataFrame, lookup: DataFrame, *, mode: str = "auto") -> dict[str, DataFrame]:
-    parsed = parse_stage(df, mode=mode)
+def build(df: DataFrame, lookup: DataFrame) -> dict[str, DataFrame]:
+    parsed = parse_stage(df)
     enriched = enrich_stage(parsed, lookup)
     routed = route_stage(enriched)
     return {
@@ -82,12 +83,12 @@ def build(df: DataFrame, lookup: DataFrame, *, mode: str = "auto") -> dict[str, 
 
 
 def run(spark: SparkSession, df: DataFrame | None = None,
-        n_rows: int = 10_000, mode: str = "auto") -> dict[str, DataFrame]:
+        n_rows: int = 10_000) -> dict[str, DataFrame]:
     """Convenience runner on the deterministic synthetic token table."""
     if df is None:
         df = datagen.token_sequences(spark, n_rows)
     lookup = datagen.source_lookup(spark)
-    return build(df, lookup, mode=mode)
+    return build(df, lookup)
 
 
 def run_with_lineage(spark: SparkSession, df: DataFrame, work_dir: str,
@@ -136,9 +137,9 @@ def run_with_lineage(spark: SparkSession, df: DataFrame, work_dir: str,
                             buckets_per_job=buckets_per_job)
     committed = log.metrics().filter(F.col("status") == "done")
     lineage_rows = committed.agg(F.sum("rows")).first()[0] or 0
-    return spark.createDataFrame(
-        [(first["processed"], first["rows"], first["tokens"],
-          int(lineage_rows), resumed["skipped"], resumed["processed"])],
+    return local_frame(
+        spark, [(first["processed"], first["rows"], first["tokens"],
+                 int(lineage_rows), resumed["skipped"], resumed["processed"])],
         "lineage_buckets_processed int, lineage_rows long, "
         "lineage_tokens long, lineage_committed_rows long, "
         "resume_buckets_skipped int, resume_buckets_processed int")

@@ -21,6 +21,7 @@ from pastash_spark.operators import mutate as M
 from pastash_spark.operators import parse as P
 from pastash_spark.operators import route as R
 from pastash_spark.operators.enrich import asof_lookup, broadcast_lookup
+from pastash_spark.session import local_frame
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
@@ -257,9 +258,9 @@ FROM events e LEFT JOIN lk ON e.event_type = lk.event_type
 """)
 def q_broadcast_enrich(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    lk = spark.createDataFrame(
-        [("click", 1.0), ("view", 0.5), ("purchase", 5.0),
-         ("signup", 3.0), ("error", 0.0)], "event_type string, weight double")
+    lk = local_frame(spark, [("click", 1.0), ("view", 0.5), ("purchase", 5.0),
+                             ("signup", 3.0), ("error", 0.0)],
+                     "event_type string, weight double")
     return broadcast_lookup(ev, lk, "event_type").select("event_id", "weight")
 
 
@@ -564,8 +565,8 @@ def q_geoip_range(spark, sf_dir):
     from pastash_spark.operators.enrich import range_lookup_bucketed
     ev = _t(spark, sf_dir, "events").withColumn(
         "ip_int", F.col("event_id") % 100000)
-    ranges = spark.createDataFrame(
-        [(i * 10000, i * 10000 + 4999, f"net-{i}") for i in range(10)],
+    ranges = local_frame(
+        spark, [(i * 10000, i * 10000 + 4999, f"net-{i}") for i in range(10)],
         "range_start long, range_end long, geo_name string")
     out = range_lookup_bucketed(ev, ranges, "ip_int", bucket_bits=12)
     return out.select("event_id", "geo_name")
@@ -1060,9 +1061,9 @@ _PIPE_GROK = (r"%{SYSLOGPRI}%{SYSLOGTIMESTAMP:ts_txt} %{NOTSPACE:hostname} "
               r"ntok=%{INT:hdr_ntok} doc=%{NOTSPACE:hdr_doc}")
 
 
-def _parsed_docs(spark, sf_dir, mode="auto"):
+def _parsed_docs(spark, sf_dir):
     df = _docs_with_header(spark, sf_dir)
-    df = P.grok(df, _PIPE_GROK, field="raw", mode=mode)
+    df = P.grok(df, _PIPE_GROK, field="raw")
     return P.syslog_pri(df, field="syslog_pri")
 
 
@@ -1116,8 +1117,8 @@ SELECT CAST(doc_id % 192 AS INT) % 8 AS sev, COUNT(*) AS n,
 FROM documents GROUP BY 1
 """)
 def q_pipeline_arrow(spark, sf_dir):
-    # forces the Arrow single-pass extractor path (mode='arrow')
-    out = _parsed_docs(spark, sf_dir, mode="arrow")
+    # exercises regex_extract's single JVM regex pass on a 7-field grok
+    out = _parsed_docs(spark, sf_dir)
     return (out.groupBy(F.col("syslog_severity").alias("sev"))
             .agg(F.count("*").alias("n"),
                  F.sum("syslog_facility").alias("fac_sum")))

@@ -10,8 +10,12 @@ sized to the local core count but overridable for a real cluster.
 from __future__ import annotations
 
 import os
+from typing import Sequence
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 # Tuned for the local[{8,32}] sandbox; on a real cluster these are overridden
 # via spark-submit --conf.  Kept low-surprise: everything here is also the
@@ -76,3 +80,16 @@ def get_spark(
     for k, v in conf.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows: Sequence[Sequence],
+                schema: "T.StructType | str") -> DataFrame:
+    """A literal table (lookup dim, range list, lineage rows) planned as
+    ``LocalTableScan`` with ``schema``'s nullability, empty or not.
+    ``createDataFrame(list)`` plans a Python-RDD scan instead, which starts
+    Python workers in every query that reads it."""
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    table = pa.Table.from_pylist([dict(zip(schema.names, r)) for r in rows],
+                                 schema=to_arrow_schema(schema))
+    return spark.createDataFrame(table, schema)

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from pastash_spark.session import local_frame
+
 BUCKET_COL = "_bucket"
 
 LINEAGE_SCHEMA = T.StructType([
@@ -87,7 +89,7 @@ class LineageLog:
             return
         rows = [(run_id, int(b), status, r, t, w, None)
                 for b, r, t, w in entries]
-        df = (self.spark.createDataFrame(rows, LINEAGE_SCHEMA)
+        df = (local_frame(self.spark, rows, LINEAGE_SCHEMA)
               .withColumn("committed_at", F.current_timestamp()))
         df.coalesce(1).write.mode("append").parquet(self.path)
 
@@ -134,7 +136,7 @@ class FileTailLog:
     def state(self) -> DataFrame:
         """Latest rows_read per marker (small: O(#files ever seen))."""
         if not _exists(self.path):
-            return self.spark.createDataFrame([], FILE_TAIL_SCHEMA) \
+            return local_frame(self.spark, [], FILE_TAIL_SCHEMA) \
                 .select("marker", "rows_read")
         return (self.spark.read.schema(FILE_TAIL_SCHEMA).parquet(self.path)
                 .groupBy("marker").agg(F.max("rows_read").alias("rows_read")))
@@ -147,7 +149,7 @@ class FileTailLog:
             return
         rid = run_id or uuid.uuid4().hex[:12]
         rows = [(m, int(n), p, rid, None) for m, n, p in entries]
-        (self.spark.createDataFrame(rows, FILE_TAIL_SCHEMA)
+        (local_frame(self.spark, rows, FILE_TAIL_SCHEMA)
          .withColumn("committed_at", F.current_timestamp())
          .coalesce(1).write.mode("append").parquet(self.path))
 

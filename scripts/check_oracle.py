@@ -1,6 +1,9 @@
 """Self-check harness mirroring the driver's correctness gate: run every
 queries() entry on Spark at sf0.01 and its oracle_sql() on DuckDB over the
-same parquet, compare row count + schema-sorted value multiset.
+same parquet, compare row count + schema-sorted value multiset.  A column
+whose type family (integer, floating, decimal, string, boolean, temporal)
+differs between the two engines is reported as a DTYPE line; the value
+comparison normalises numbers, so it would not notice.
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
 """
@@ -33,6 +36,52 @@ def norm_cell(v):
     return v
 
 
+_DUCK_FAMILY = {
+    "tinyint": "integer", "smallint": "integer", "integer": "integer",
+    "bigint": "integer", "hugeint": "integer", "utinyint": "integer",
+    "usmallint": "integer", "uinteger": "integer", "ubigint": "integer",
+    "uhugeint": "integer", "float": "floating", "double": "floating",
+    "decimal": "decimal", "varchar": "string", "boolean": "boolean",
+    "date": "temporal", "time": "temporal", "timestamp": "temporal",
+    "timestamp with time zone": "temporal", "timestamp_ns": "temporal",
+    "timestamp_ms": "temporal", "timestamp_s": "temporal",
+}
+
+
+def spark_family(dt):
+    from pyspark.sql import types as T
+    if isinstance(dt, T.ArrayType):
+        inner = spark_family(dt.elementType)
+        return inner and f"{inner}[]"
+    for cls, fam in ((T.IntegralType, "integer"), (T.DecimalType, "decimal"),
+                     (T.FractionalType, "floating"), (T.StringType, "string"),
+                     (T.BooleanType, "boolean"), (T.DateType, "temporal"),
+                     (T.TimestampType, "temporal"),
+                     (T.TimestampNTZType, "temporal")):
+        if isinstance(dt, cls):
+            return fam
+    return None
+
+
+def duck_family(t):
+    if t.id == "list":
+        inner = duck_family(t.child)
+        return inner and f"{inner}[]"
+    return _DUCK_FAMILY.get(t.id)
+
+
+def dtype_mismatches(sschema, dcols, dtypes):
+    """[(column, spark family, duckdb family)] where both are known and
+    differ.  Types outside the families (struct, map, binary) are skipped."""
+    duck = dict(zip(dcols, dtypes))
+    out = []
+    for f in sschema.fields:
+        s, d = spark_family(f.dataType), duck_family(duck[f.name])
+        if s and d and s != d:
+            out.append((f.name, s, d))
+    return out
+
+
 def norm_rows(cols, rows):
     from collections import Counter
     order = sorted(range(len(cols)), key=lambda i: cols[i])
@@ -56,14 +105,14 @@ def main() -> int:
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{p}'")
 
     qs, oracles = entrymod.queries(), entrymod.oracle_sql()
-    failures = []
+    failures, dtype_hits = [], []
     for name, fn in qs.items():
         if only and name not in only:
             continue
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
-            scols = sdf.columns
+            scols, sschema = sdf.columns, sdf.schema
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:
             print(f"FAIL  {name}: spark error: {e}")
@@ -74,9 +123,9 @@ def main() -> int:
                   f"{time.time()-t0:.1f}s) [no oracle]")
             continue
         try:
-            cur = con.execute(oracles[name])
-            dcols = [d[0] for d in cur.description]
-            drows = cur.fetchall()
+            rel = con.sql(oracles[name])
+            dcols, dtypes = rel.columns, rel.types
+            drows = rel.fetchall()
         except Exception as e:
             print(f"FAIL  {name}: duckdb error: {e}")
             failures.append(name)
@@ -100,8 +149,15 @@ def main() -> int:
             failures.append(name)
             continue
         print(f"OK    {name}: {len(srows)} rows match ({time.time()-t0:.1f}s)")
+        hits = dtype_mismatches(sschema, dcols, dtypes)
+        if hits:
+            print(f"DTYPE {name}: " + ", ".join(
+                f"{c} spark {s} vs duckdb {d}" for c, s, d in hits))
+            dtype_hits.append(name)
 
     print(f"\n{len(qs) - len(failures)}/{len(qs)} ok; failures: {failures}")
+    print(f"dtype lint: {len(dtype_hits)} queries differ in a column's type "
+          f"family: {dtype_hits}")
     spark.stop()
     return 1 if failures else 0
 

@@ -4,6 +4,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -13,6 +15,7 @@ from pastash_spark.operators import enrich as E
 from pastash_spark.operators import mutate as M
 from pastash_spark.operators import parse as P
 from pastash_spark.operators import route as R
+from pastash_spark.functions.grok import GrokCompiler
 
 
 def msgs(spark, *lines):
@@ -33,14 +36,36 @@ def test_regex_extract_native_and_coercion(spark):
     assert miss.lvl is None and miss.code is None
 
 
-def test_regex_extract_arrow_mode_matches_native(spark):
-    df = msgs(spark, "a=1 b=2 c=3 d=4 e=5", "zzz")
-    kw = dict(fields=list("abcde"),
-              numerical_fields=list("abcde"))
-    pat = r"a=(\d+) b=(\d+) c=(\d+) d=(\d+) e=(\d+)"
-    nat = P.regex_extract(df, pat, mode="native", **kw).orderBy("message").collect()
-    arw = P.regex_extract(df, pat, mode="arrow", **kw).orderBy("message").collect()
-    assert [r.asDict() for r in nat] == [r.asDict() for r in arw]
+def test_regex_extract_matches_python_re(spark):
+    """regex_extract's one JVM pass agrees with a re.search replay of the
+    compiled grok's Python flavour: '' and non-participating groups read
+    NULL, an unmatched or NULL line reads NULL everywhere and is tagged."""
+    mb = 1 << 20
+    cases = [
+        # (pattern, lines, regex_flags)
+        (r"(?<lvl>\w+) (?<code>\d+)(?:x(?<sub>\d+))? a=(?<a>\w*);",
+         [None, "no match", "warn 7 a=;", "error 12x3 a=b;",
+          "pre\u0001 error 12 a=b;", "no\u0001match",
+          "élan 5 a=crème;"], None),
+        (r"^error: (?<msg>.+)$", ["x\nERROR: multi\nline", "error"], "ims"),
+        ("".join(f"(?<g{i}>\\w)" for i in range(11)),
+         ["abcdefghijk", "abc"], None),
+        # 1 MB lines: a 1 MB capture, a match after 1 MB, no match at all
+        (r"(?<head>x+) key=(?<val>\w+)",
+         ["x" * mb + " key=v1", "y" * mb + " xx key=v2", "y" * mb], None),
+    ]
+    for pattern, lines, flags in cases:
+        cg = GrokCompiler().compile(pattern)
+        py_re = re.compile(f"(?{flags})" * bool(flags) + cg.python_regex)
+        df = spark.createDataFrame([(i, l) for i, l in enumerate(lines)],
+                                   "i int, message string")
+        got = P.regex_extract(df, cg, regex_flags=flags,
+                              tag_on_failure="_fail").orderBy("i").collect()
+        for line, row in zip(lines, got):
+            m = py_re.search(line) if line is not None else None
+            want = {f: (m.group(f) or None) if m else None for f in cg.fields}
+            assert {f: row[f] for f in cg.fields} == want, (pattern, line)
+            assert row.tags == ([] if m else ["_fail"]), (pattern, line)
 
 
 def test_grok_failure_tag(spark):

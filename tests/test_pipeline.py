@@ -10,6 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from pastash_spark import datagen
+from pastash_spark.functions.grok import GrokCompiler
 from pastash_spark.operators import route as R
 from pastash_spark.plans import flagship
 from pastash_spark.sources.lineage import (
@@ -92,16 +93,20 @@ def test_flagship_parse_fields(spark):
         assert r.tags == []                   # no grok failures
 
 
-def test_flagship_arrow_and_native_parse_agree(spark):
-    df = datagen.token_sequences(spark, 300).cache()
-    try:
-        nat = flagship.run(spark, df, mode="native")["aggregates"] \
-            .orderBy("sink", "source").collect()
-        arw = flagship.run(spark, df, mode="arrow")["aggregates"] \
-            .orderBy("sink", "source").collect()
-        assert [r.asDict() for r in nat] == [r.asDict() for r in arw]
-    finally:
-        df.unpersist()
+def test_flagship_parse_matches_python_re(spark):
+    """Every grok field of the flagship parse equals a re.search replay of
+    the header pattern's Python flavour (numeric fields coerced)."""
+    cg = GrokCompiler().compile(flagship.HEADER_PATTERN)
+    numeric = ("hdr_ntok", "hdr_first", "pid")
+    rows = flagship.parse_stage(datagen.token_sequences(spark, 300)) \
+        .select("raw", "tags", *cg.fields).collect()
+    assert len(rows) == 300
+    for r in rows:
+        m = cg.compiled.search(r.raw)
+        assert m and r.tags == []
+        for f in cg.fields:
+            assert r[f] == (float(m.group(f)) if f in numeric
+                            else m.group(f)), (f, r.raw)
 
 
 def test_flagship_aggregates_consistent(spark):

@@ -59,7 +59,7 @@ def test_enrichment_is_broadcast_join(spark, token_parquet):
 
 def test_flagship_single_stage_until_aggregate(spark, token_parquet):
     df = spark.read.parquet(token_parquet)
-    out = flagship.build(df, datagen.source_lookup(spark), mode="native")
+    out = flagship.build(df, datagen.source_lookup(spark))
     routed_plan = _plan(out["routed"])
     # parse -> enrich -> route is map-only: no Exchange before the routing
     # column exists (broadcast join exchanges only the dim side)
@@ -72,19 +72,44 @@ def test_flagship_single_stage_until_aggregate(spark, token_parquet):
     assert "partial_count" in agg_plan or "partial" in agg_plan.lower()
 
 
-def test_flagship_arrow_mode_single_python_runner(spark, token_parquet):
+def test_flagship_plans_have_no_python_workers(spark, token_parquet):
+    """Nothing in the flagship DAG is Python logic, so no plan may start a
+    Python worker: no Python UDF node and no Python-RDD scan (which is what
+    spark.createDataFrame(list) plans for a literal dim)."""
     df = spark.read.parquet(token_parquet)
-    out = flagship.build(df, datagen.source_lookup(spark), mode="arrow")
-    plan = _plan(out["routed"])
-    # the multi-field grok extract must be ONE ArrowEvalPython pass
-    assert plan.count("ArrowEvalPython") == 1
+    out = flagship.build(df, datagen.source_lookup(spark))
+    for name in ("routed", "aggregates", "sink_counts"):
+        plan = _plan(out[name])
+        for node in ("EvalPython", "MapInPandas", "ExistingRDD", "PythonRDD"):
+            assert node not in plan, (name, node)
+        assert "LocalTableScan" in plan, name
 
 
-def test_native_mode_has_no_python_at_all(spark, token_parquet):
+def test_grok_regex_runs_once_per_row(spark, token_parquet):
+    """An 8-field grok is one regex pass per row: the executed plan holds
+    the whole-line wrapped pattern exactly once (not once per field)."""
+    from pastash_spark.functions.grok import GrokCompiler
+    cg = GrokCompiler().compile(flagship.HEADER_PATTERN)
+    assert len(cg.fields) == 8
     df = spark.read.parquet(token_parquet)
-    out = flagship.build(df, datagen.source_lookup(spark), mode="native")
-    plan = _plan(out["routed"])
-    assert "EvalPython" not in plan         # pure JVM path
+    plan = _plan(flagship.parse_stage(df))
+    assert plan.count(r"\A[\s\S]*?(?:(?U)" + cg.java_regex + ")") == 1
+
+
+def test_local_frame_is_local_table_scan(spark):
+    from pyspark.sql import types as T
+
+    from pastash_spark.session import local_frame
+    schema = T.StructType([T.StructField("k", T.StringType(), False),
+                           T.StructField("v", T.DoubleType(), True)])
+    for rows in ([("a", 1.0), ("b", None)], []):
+        df = local_frame(spark, rows, schema)
+        assert "LocalTableScan" in _plan(df)
+        assert df.schema == schema
+        assert [tuple(r) for r in df.collect()] == rows
+    ddl = local_frame(spark, [(1, 2)], "i int, j int")
+    assert "LocalTableScan" in _plan(ddl)
+    assert [f.nullable for f in ddl.schema] == [True, True]
 
 
 def test_dedup_exact_is_single_shuffle(spark):
