@@ -11,12 +11,12 @@ Three parts:
      deterministic token-table parquet — run in a FRESH JVM subprocess per
      measurement (scripts/measure_throughput.py; in-JVM re-measurement is
      unstable) at two parallelism levels standing in for N vs 4N executors
-     (no real cluster in this sandbox).  Default pair local[2] -> local[8]:
-     this box's memory bandwidth saturates around 8 threads (measured:
-     local[32] is SLOWER than local[8] on array-heavy scans and bigger heaps
-     make it worse — classic single-socket-bandwidth / NUMA ceiling), so the
-     2->8 pair is where CPU scaling of the job itself is observable.
-     Override with SPARK_GRAFT_SCALE_FROM / SPARK_GRAFT_SCALE_TO.
+     (no real cluster).  Default pair local[n/2] -> local[n], n =
+     $SPARK_GRAFT_CPUS (default: all cores), so neither level oversubscribes
+     the box.  On a 32-core box memory bandwidth saturated around 8 threads
+     (local[32] was SLOWER than local[8] on array-heavy scans), so there
+     set the pair explicitly with SPARK_GRAFT_SCALE_FROM /
+     SPARK_GRAFT_SCALE_TO (e.g. local[2] -> local[8]).
   3. A payload-inclusive tokens/sec run (every token array decoded) at the
      high level — the honest bytes-moved number, reported separately
      because it is bandwidth-bound, not CPU-bound.
@@ -38,10 +38,11 @@ REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 BENCH_ROWS = int(os.environ.get("SPARK_GRAFT_BENCH_ROWS", "8000000"))
-SCALE_FROM = os.environ.get("SPARK_GRAFT_SCALE_FROM", "local[2]")
-SCALE_TO = os.environ.get("SPARK_GRAFT_SCALE_TO", "local[8]")
+SCALE_FROM = os.environ.get("SPARK_GRAFT_SCALE_FROM",
+                            f"local[{max(1, CPUS // 2)}]")
+SCALE_TO = os.environ.get("SPARK_GRAFT_SCALE_TO", f"local[{CPUS}]")
 REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
 CACHE_DIR = os.environ.get("SPARK_GRAFT_BENCH_CACHE",
                            os.path.join(REPO, ".bench_cache"))

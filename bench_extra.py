@@ -10,8 +10,8 @@ Usage:
   python bench_extra.py [query ...]            # time queries (all if none)
   python bench_extra.py --explain DIR [query ...]   # dump plans, no timing
 
-Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf1.0 — the driver's r05
-measurement scale), SPARK_GRAFT_CPUS (default 32).
+Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1, the largest scale
+the test data ships), SPARK_GRAFT_CPUS (default: all cores).
 """
 
 from __future__ import annotations
@@ -24,8 +24,8 @@ import time
 REPO = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO)
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 # Same list as bench.py HEADLINE (kept in sync manually; bench.py is frozen)
 from bench import HEADLINE, _noop_force, _steal_probe  # noqa: E402

@@ -18,6 +18,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pastash_spark.operators.enrich import asof_join, asof_lookup
+from pastash_spark.operators.parse import regex_groups
 
 
 def _epoch(c: Column) -> Column:
@@ -1195,58 +1196,46 @@ def janus_trace_spans(df: DataFrame, *, order: str = "event_id",
 RTP_CODEC_MAP = {0: "PCMU", 3: "GSM", 8: "PCMA", 9: "G722", 18: "G729",
                  34: "H263", 101: "Telephony-Event"}
 
-_RTP_STRUCT = ("c_token string, c_mode string, c_codecs string, "
-               "c_corr string, a_port string, a_token string, "
-               "d_port string, d_ip string, r_token string, "
-               "r_port string, r_ip string, x_p1 string, x_p2 string")
+# Line families (filter_app_rtpproxy.js:58-133): the contains() needle that
+# selects a line, the verbatim branch regex and the fields its groups fill.
+_RTP_FAMILIES = (
+    ("received command ",
+     r'received command "(.*)\s+(US|U|L)c(.*?)\s(.*?)\s',
+     ("c_token", "c_mode", "c_codecs", "c_corr")),
+    ("new session on IPv4 port ",
+     r"new session on IPv4 port\s+(.*) created.*tag\s+(.*)",
+     ("a_port", "a_token")),
+    ("rtpc_doreply: sending reply ",
+     r'rtpc_doreply: sending reply "(.*)\s+([0-9.].*)\\n"',
+     ("d_port", "d_ip")),
+    ("sending reply ",
+     r'sending reply "(.*)\s+(.*?)\s(.*?)#012',
+     ("r_token", "r_port", "r_ip")),
+    ("is cleaned up",
+     r"session on ports (.*)/(.*?)\sis cleaned up",
+     ("x_p1", "x_p2")))
 
 
-def _rtp_matcher_udf():
-    """ONE Arrow pass evaluating every rtpproxy line family's regex and
-    returning all groups as a nullable struct (the `_ac_matcher_udf`
-    pattern): create command, alias publication, doreply, plain reply,
-    cleanup.  Family masks are INDEPENDENT (matching the old per-branch
-    contains() filters); only doreply/plain-reply keep the reference's
-    if/else precedence.  Patterns are the verbatim branch regexes;
-    re.ASCII pins \\s and \\d to Java's ASCII character classes so the
-    extracted groups are byte-identical to the former per-group
-    regexp_extract calls."""
-    cmd = re.compile(r'received command "(.*)\s+(US|U|L)c(.*?)\s(.*?)\s',
-                     re.ASCII)
-    alias = re.compile(r"new session on IPv4 port\s+(.*) created.*tag\s+(.*)",
-                       re.ASCII)
-    dore = re.compile(r'rtpc_doreply: sending reply "(.*)\s+([0-9.].*)\\n"',
-                      re.ASCII)
-    rep = re.compile(r'sending reply "(.*)\s+(.*?)\s(.*?)#012', re.ASCII)
-    clean = re.compile(r"session on ports (.*)/(.*?)\sis cleaned up",
-                       re.ASCII)
-    fams = (("received command ", cmd,
-             ("c_token", "c_mode", "c_codecs", "c_corr")),
-            ("new session on IPv4 port ", alias, ("a_port", "a_token")),
-            (None, dore, ("d_port", "d_ip")),            # doreply (mask below)
-            (None, rep, ("r_token", "r_port", "r_ip")),  # plain reply
-            ("is cleaned up", clean, ("x_p1", "x_p2")))
-
-    @F.pandas_udf(_RTP_STRUCT)
-    def match(s: pd.Series) -> pd.DataFrame:
-        s = s.fillna("")
-        cols = {name: pd.Series(None, index=s.index, dtype="object")
-                for _, _, names in fams for name in names}
-        is_do = s.str.contains("rtpc_doreply: sending reply ", regex=False)
-        masks = [s.str.contains(fams[0][0], regex=False),
-                 s.str.contains(fams[1][0], regex=False),
-                 is_do,
-                 s.str.contains("sending reply ", regex=False) & ~is_do,
-                 s.str.contains(fams[4][0], regex=False)]
-        for mask, (_, rx, names) in zip(masks, fams):
-            if not mask.any():
-                continue
-            g = s[mask].str.extract(rx)
-            for j, name in enumerate(names):
-                cols[name].loc[g.index] = g[j]
-        return pd.DataFrame(cols)
-
-    return match
+def _rtp_match(df: DataFrame, line: Column, order: str) -> DataFrame:
+    """(`order`, _m): every rtpproxy family's groups as one nullable struct,
+    NULL where the family's mask is false or its regex misses, '' for an
+    empty capture.  Masks are independent, except that a doreply is never a
+    plain reply (the reference's if/else).  One `parse.regex_groups` pass
+    per family: the arrays are projected before the struct reads them, or
+    the optimizer would inline a pass per field.  ``(?d)``: `.` excludes
+    only \\n, as Python's does; Java's \\s/\\d are ASCII like re.ASCII."""
+    masks = [line.contains(needle) for needle, _, _ in _RTP_FAMILIES]
+    masks[3] = masks[3] & ~masks[2]     # a doreply is never a plain reply
+    arrays = [F.when(mask, regex_groups(line, "(?d)" + rx,
+                                        range(1, len(names) + 1)))
+              .alias(f"_f{i}")
+              for i, (mask, (_, rx, names))
+              in enumerate(zip(masks, _RTP_FAMILIES))]
+    fields = [F.get(F.col(f"_f{i}"), j + 1).alias(name)
+              for i, (_, _, names) in enumerate(_RTP_FAMILIES)
+              for j, name in enumerate(names)]
+    return (df.select(F.col(order), *arrays)
+            .select(F.col(order), F.struct(*fields).alias("_m")))
 
 
 def app_rtpproxy_correlate(df: DataFrame, *, field: str = "message",
@@ -1284,21 +1273,13 @@ def app_rtpproxy_correlate(df: DataFrame, *, field: str = "message",
     high-cardinality token/port, so the shuffles stay balanced at scale and
     a hot key costs O(lines).
     """
-    # PERF (r06): ONE Arrow pass evaluates every family's line regex
-    # (the old branches re-ran 2-4 JVM regexp_extract per matching line —
-    # same match, one extract per group — and each of the five branches
-    # re-scanned and re-rendered the full input).  The parsed struct is
-    # materialized once (dataset._reuse semantics/caveats) and every
-    # branch reads its own nullable field set; family masks stay
-    # INDEPENDENT exactly like the old per-branch contains() filters
-    # (only doreply/plain-reply keep their if/else precedence, as in the
-    # reference).  Patterns are verbatim; re.ASCII pins \s/\d to the Java
-    # character classes.
+    # PERF: every family's line regex runs in ONE JVM pass per line over
+    # the lines its mask selects (`_rtp_match`), with no Python worker.
+    # The parsed struct is materialized once (dataset._reuse
+    # semantics/caveats) and each branch reads its own nullable fields;
+    # without the checkpoint every branch would re-run the matcher.
     from pastash_spark.operators.dataset import _reuse
-    matcher = _rtp_matcher_udf()
-    df = _reuse(df.select(F.col(order),
-                          matcher(F.col(field).cast("string")).alias("_m")),
-                reuse)
+    df = _reuse(_rtp_match(df, F.col(field).cast("string"), order), reuse)
     m = F.col("_m")
 
     def _fam(key_field: str, *fields: "tuple[str, str]") -> DataFrame:
@@ -1449,17 +1430,13 @@ def _ac_native_reparse(mm: Column, in_re: str, out_re: str) -> Column:
     jin, jout = "(?d)" + in_re, "(?d)" + out_re
     is_in = mm.contains("Incoming SIP Message")
     is_out = ~is_in & mm.contains("Outgoing SIP Message")
-    in_ok = is_in & mm.rlike(jin)
-    out_ok = is_out & mm.rlike(jout)
-
-    def grp(i: int) -> Column:
-        return (F.when(in_ok, F.regexp_extract(mm, jin, i))
-                .when(out_ok, F.regexp_extract(mm, jout, i)))
-
-    hit = (F.when(in_ok, F.lit(1)).when(out_ok, F.lit(2))
+    # one regex pass per direction: ['', g2, g5, g6] on a match
+    g = (F.when(is_in, regex_groups(mm, jin, (2, 5, 6)))
+         .when(is_out, regex_groups(mm, jout, (2, 5, 6))))
+    hit = (F.when(F.size(g) > 1, F.when(is_in, F.lit(1)).otherwise(F.lit(2)))
            .otherwise(F.lit(0)).cast("tinyint"))
-    return F.struct(hit.alias("hit"), grp(2).alias("remote"),
-                    grp(5).alias("raw_pay"), grp(6).alias("tail"),
+    return F.struct(hit.alias("hit"), F.get(g, 1).alias("remote"),
+                    F.get(g, 2).alias("raw_pay"), F.get(g, 3).alias("tail"),
                     F.lit(None).cast("long").alias("s"),
                     F.lit(None).cast("string").alias("sid"),
                     F.lit(None).cast("array<string>").alias("q"))
@@ -1618,14 +1595,13 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
             # guarded regex now, not a second Arrow pass — the old matcher
             # call round-tripped every row through Python (1M-row Arrow
             # serialization) to parse only the rare merged lines.  The when()
-            # guards make each rlike/regexp_extract evaluate ONLY on rows
-            # where merge_cond|refrag_cond holds (codegen branches are
+            # guards make its one regex pass per direction evaluate ONLY on
+            # rows where merge_cond|refrag_cond holds (codegen branches are
             # lazy); the operator already relies on these patterns being
             # semantically identical under Java and Python `re` (both
             # search, both greedy, `.` excludes newline), and the `(.*)`
-            # groups always participate so regexp_extract's ""-on-miss
-            # never diverges from the UDF's null (guarded by the rlike
-            # hit test exactly like the UDF's notna() gate).  Fields
+            # groups always participate, so a capture reads '' only when
+            # it is empty, exactly like the UDF's.  Fields
             # s/sid are null — no _pf consumer reads them (non-merge rows
             # take _p's real values through the otherwise branch).
             .withColumn("_pm", _ac_native_reparse(

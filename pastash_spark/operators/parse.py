@@ -37,6 +37,21 @@ def _add_tag(df: DataFrame, cond: Column, tag: str) -> DataFrame:
     )
 
 
+def regex_groups(src: Column, java_re: str, groups: Sequence[int]) -> Column:
+    """ONE JVM regex pass capturing ``groups`` of java_re's first match:
+    ``['', g1, g2, ...]`` on a match ('' for an empty or absent group), at
+    most one element on a miss, NULL for a NULL line.  The wrapped pattern
+    rewrites the whole line to SEP g1 SEP g2 ... and splits it; a line
+    already holding SEP would be ambiguous, so it takes one regexp_extract
+    per group instead (NULL on a miss)."""
+    whole = r"\A[\s\S]*?(?:" + java_re + r")[\s\S]*\z"
+    rep = "".join(f"{_SEP}${g}" for g in groups) or _SEP
+    per_group = F.when(src.rlike(java_re), F.array(
+        F.lit(""), *[F.regexp_extract(src, java_re, g) for g in groups]))
+    return F.when(src.contains(_SEP), per_group).otherwise(
+        F.split(F.regexp_replace(src, whole, rep), _SEP, -1))
+
+
 def regex_extract(
     df: DataFrame,
     regex: "CompiledGrok | str | None" = None,
@@ -103,19 +118,7 @@ def regex_extract(
     if not java_re.startswith("(?U)"):
         java_re = "(?U)" + java_re
 
-    # ONE regex pass per row: the wrapped pattern matches the whole line at
-    # java_re's first match and rewrites it to SEP g1 SEP g2 ..., which
-    # splits to ['', g1, g2, ...]; an unmatched line is left as is and
-    # splits to one element.  A line already holding SEP would be ambiguous,
-    # so it takes one regexp_extract per group instead.
-    src = F.col(field)
-    whole = r"\A[\s\S]*?(?:" + java_re + r")[\s\S]*\z"
-    rep = "".join(f"{_SEP}${g}" for g in groups) or _SEP
-    per_group = F.when(src.rlike(java_re), F.array(
-        F.lit(""), *[F.regexp_extract(src, java_re, g) for g in groups]))
-    df = df.withColumn("_ex", F.when(
-        src.contains(_SEP), per_group).otherwise(
-        F.split(F.regexp_replace(src, whole, rep), _SEP, -1)))
+    df = df.withColumn("_ex", regex_groups(F.col(field), java_re, groups))
     matched = F.coalesce(F.size("_ex") > 1, F.lit(False))
     # '' means unmatched or an empty capture -> absent field
     df = df.withColumns({f: F.nullif(F.get("_ex", i + 1), F.lit(""))

@@ -48,6 +48,20 @@ _SPLIT_KEY = {"events": "event_id", "documents": "doc_id",
               "embeddings": "vec_id"}
 
 
+def _file_scan_partitions(spark: SparkSession, size: int) -> int:
+    """Partitions of Spark's scan of ONE file of ``size`` bytes without
+    planning an RDD (~0.1 s): FilePartition.maxSplitBytes splits, each its
+    own partition (no split fits beside a full one plus its open cost)."""
+    conf = spark._jsparkSession.sessionState().conf()
+    open_cost = conf.filesOpenCostInBytes()
+    min_parts = conf.filesMinPartitionNum()
+    min_parts = (min_parts.get() if min_parts.isDefined()
+                 else spark._jsparkSession.leafNodeDefaultParallelism())
+    split = min(conf.filesMaxPartitionBytes(),
+                max(open_cost, (size + open_cost) // min_parts))
+    return -(-size // split)
+
+
 def _t(spark: SparkSession, sf_dir: str, table: str,
        key: str | None = None) -> DataFrame:
     path = f"{sf_dir}/{table}.parquet"
@@ -73,7 +87,7 @@ def _t(spark: SparkSession, sf_dir: str, table: str,
         return df
     par = spark.sparkContext.defaultParallelism
     target = min(par, max(1, size // (256 * 1024)))
-    if df.rdd.getNumPartitions() < target:
+    if target > 1 and _file_scan_partitions(spark, size) < target:
         # PERF (r06): HASH repartition on a deterministic key instead of
         # round-robin.  Keyless repartition(n) first locally SORTS every
         # input partition (spark.sql.execution.sortBeforeRepartition, on by

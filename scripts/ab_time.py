@@ -3,7 +3,8 @@ alternating rounds see the same noise; report min per variant).
 
 Usage: python scripts/ab_time.py <module:factory> [rounds]
   factory() -> dict[label, callable(spark, sf_dir) -> DataFrame]
-Env: SPARK_GRAFT_SF_DIR (default sf1.0), SPARK_GRAFT_CPUS.
+Env: SPARK_GRAFT_SF_DIR (default sf0.1), SPARK_GRAFT_CPUS (default: all
+cores).
 """
 from __future__ import annotations
 
@@ -15,8 +16,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
 
 def main() -> None:

@@ -633,6 +633,80 @@ def test_rtpproxy_hot_port_matches_ipcache_replay(spark):
     assert got == want
 
 
+
+# the rtpproxy branch regexes verbatim (filter_app_rtpproxy.js:58-133)
+_RTP_REPLAY = (
+    (r'received command "(.*)\s+(US|U|L)c(.*?)\s(.*?)\s',
+     ("c_token", "c_mode", "c_codecs", "c_corr")),
+    (r"new session on IPv4 port\s+(.*) created.*tag\s+(.*)",
+     ("a_port", "a_token")),
+    (r'rtpc_doreply: sending reply "(.*)\s+([0-9.].*)\\n"',
+     ("d_port", "d_ip")),
+    (r'sending reply "(.*)\s+(.*?)\s(.*?)#012',
+     ("r_token", "r_port", "r_ip")),
+    (r"session on ports (.*)/(.*?)\sis cleaned up",
+     ("x_p1", "x_p2")),
+)
+
+
+def _rtp_replay(line):
+    """The Python matcher's line masks, then a re.ASCII search per family."""
+    s = line or ""
+    is_do = "rtpc_doreply: sending reply " in s
+    masks = ("received command " in s, "new session on IPv4 port " in s,
+             is_do, "sending reply " in s and not is_do, "is cleaned up" in s)
+    out = {}
+    for mask, (rx, names) in zip(masks, _RTP_REPLAY):
+        m = re.search(rx, s, re.ASCII) if mask else None
+        out.update(zip(names, m.groups() if m else [None] * len(names)))
+    return out
+
+
+def test_rtp_matcher_matches_python_re(spark):
+    """rtpproxy's JVM matcher reads the same groups as a re.ASCII search
+    of each verbatim family regex under the family's line mask: NULL where
+    the mask is false or the regex misses, '' for an empty capture."""
+    mb = 1 << 20
+    lines = [
+        None,
+        "nothing to see here",
+        'received command "no mode here"',              # mask only
+        'received command " Uc   ',                     # empty captures
+        'received command "tok\r1 Uc8,101 call x\u0085 y z "',
+        'received command "t 1 Lc0 c\u0001d 1 2"',  # holds the SEP
+        'sending reply "tok\u0001 35000 10.0.0.2#012"',
+        # two families on one line
+        'received command "4442_5 Uc8 call-1 1 2" session on ports '
+        '35000/36000 is cleaned up',
+        'rtpproxy: new session on IPv4 port 36000 created, tag 7000_1',
+        'new session on IPv4 port 1\u2028 created, tag t\u2028u\rv',
+        'new session on IPv4 port\u00a036000 created, tag t',  # not \s
+        # doreply wins over a plain reply on the same line, and its mask
+        # still keeps the plain-reply regex off when the doreply one misses
+        'rtpc_doreply: sending reply "36000 10.0.0.3 x#012\\n"',
+        'rtpc_doreply: sending reply "36000 x y#012"',
+        'sending reply "4442_5 35000 10.0.0.2#012"',
+        'session on ports 35000/36000 is cleaned up',
+        'session on ports /\tis cleaned up',
+        # 1 MB lines: a 1 MB token, a match after 1 MB, a mask-only miss
+        'received command "' + "a" * mb + ' Uc8 corr 1 2"',
+        "y" * mb + 'rtpproxy: new session on IPv4 port 1 created, tag t',
+        "sending reply " + "z" * mb,
+    ]
+    df = spark.createDataFrame([(i, l) for i, l in enumerate(lines)],
+                               "i int, message string")
+    got = C._rtp_match(df, F.col("message"), "i").orderBy("i").collect()
+    assert len(got) == len(lines)
+    for line, row in zip(lines, got):
+        want = _rtp_replay(line)
+        assert row._m.asDict() == want, (line or "")[:80]
+    # the cases above exercise every family, an empty capture and a miss
+    seen = [_rtp_replay(l) for l in lines]
+    for _, names in _RTP_REPLAY:
+        assert any(r[names[0]] for r in seen), names
+    assert any(v == "" for r in seen for v in r.values())
+
+
 # --- correlate --------------------------------------------------------------
 
 def test_multiline_reassembly(spark):

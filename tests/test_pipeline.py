@@ -362,3 +362,40 @@ def test_packaged_zip_rebuilds_when_source_changes(tmp_path):
     mod.write_text("X = 2\n")
     with zipfile.ZipFile(e._packaged_zip(str(tmp_path))) as zf:
         assert zf.read("pastash_spark/mod.py") == b"X = 2\n"
+
+
+@pytest.mark.parametrize("split_conf", [
+    {},
+    # small splits, so the derived count is far above 1
+    {"spark.sql.files.maxPartitionBytes": "64k",
+     "spark.sql.files.openCostInBytes": "8k"},
+])
+def test_scan_partitions_derived_from_confs(spark, split_conf):
+    """queries._t decides its split from the scan's partition count derived
+    from the file size and the split confs, without planning an RDD: it
+    equals getNumPartitions() of the real scan on every split table."""
+    import os
+
+    from pastash_spark import queries as Q
+    saved = {k: spark.conf.get(k, None) for k in split_conf}
+    try:
+        for k, v in split_conf.items():
+            spark.conf.set(k, v)
+        n = 0
+        for sf in ("sf0.001", "sf0.01", "sf0.1"):
+            for table in ("events", "documents", "embeddings"):
+                path = f"/root/testdata/{sf}/{table}.parquet"
+                if not os.path.exists(path):
+                    continue
+                n += 1
+                want = spark.read.parquet(path).rdd.getNumPartitions()
+                got = Q._file_scan_partitions(spark, os.path.getsize(path))
+                assert got == want, (path, split_conf)
+        if n == 0:
+            pytest.skip("driver testdata absent")
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

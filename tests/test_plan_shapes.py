@@ -154,6 +154,24 @@ def test_rtpproxy_lookups_are_asof_windows_not_joins(spark):
     assert "WindowGroupLimit" not in plan
 
 
+def test_rtpproxy_matcher_is_one_jvm_regex_pass_per_family(spark):
+    """The rtpproxy line matcher runs in the JVM: no Python evaluation node
+    anywhere in the operator's plan, and the matcher (the subtree `_reuse`
+    checkpoints) runs each family's pattern once per line, not once per
+    captured field."""
+    from pastash_spark.operators.correlate import (
+        _RTP_FAMILIES, _rtp_match, app_rtpproxy_correlate)
+    df = spark.createDataFrame([(1, "x")], "line_no long, message string")
+    # reuse=False: with the checkpoint the matcher's nodes do not show
+    plan = _plan(app_rtpproxy_correlate(df, reuse=False))
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert node not in plan, node
+    plan = _plan(_rtp_match(df, F.col("message"), "line_no"))
+    assert plan.count("regexp_replace") == len(_RTP_FAMILIES)
+    for _, rx, _ in _RTP_FAMILIES:
+        assert plan.count(r"\A[\s\S]*?(?:(?d)" + rx + ")") == 1, rx
+
+
 def test_app_family_defaults_no_global_window(spark):
     """VERDICT r05 #3: no app_* reassembly operator may plan a
     single-partition global sort from its DEFAULT call — the window key
