@@ -33,8 +33,3 @@ def coerce_numeric_str(col: Column | str) -> Column:
         .otherwise(F.lit(None).cast("double"))
     )
 
-
-def coerce_int_str(col: Column | str) -> Column:
-    """String -> LongType only for pure-digit strings (reference int path)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.when(c.rlike(NUM_INT_RE), c.cast("long")).otherwise(F.lit(None).cast("long"))

@@ -467,32 +467,6 @@ def dedup_minhash(df: DataFrame, *, id_col: str = "doc_id", col: str = "text",
 
 # --- simhash -----------------------------------------------------------------
 
-def simhash64(col: str = "text") -> Column:
-    """64-bit simhash over word hashes, ONE vectorized Arrow pass per batch:
-    hash all words (C siphash), unpack the 64 bits as a numpy matrix,
-    majority-vote per bit, repack.  (The pure-Catalyst formulation — 64
-    F.aggregate expressions — evaluates interpreted and re-walks the word
-    array per bit; measured ~2 orders slower.)"""
-    bit_idx = np.arange(64, dtype=np.uint64)
-
-    @F.pandas_udf("long")
-    def sh(texts: pd.Series) -> pd.Series:
-        out = np.empty(len(texts), dtype=np.int64)
-        for j, t in enumerate(texts):
-            ws = (t or "").split(" ")
-            h = pd.util.hash_array(np.asarray(ws, dtype=object),
-                                   categorize=False)
-            bits = ((h[:, None] >> bit_idx) & np.uint64(1)).astype(np.int64)
-            votes = (2 * bits - 1).sum(axis=0)
-            out[j] = np.int64(
-                np.bitwise_or.reduce(
-                    np.where(votes > 0, np.uint64(1) << bit_idx, np.uint64(0)))
-                .astype(np.int64))
-        return pd.Series(out)
-
-    return sh(F.col(col))
-
-
 def simhash60_portable(col: str = "text") -> Column:
     """60-bit simhash whose word hash is ENGINE-PORTABLE (first 15 hex chars
     of md5 as an int), so a DuckDB SQL oracle recomputes the identical

@@ -4,8 +4,9 @@ The reference fans events out by attaching per-output routing predicates
 (base_output.js:19-23) compiled from config if/else chains, where an `else`
 branch means "all earlier conditions false" (config_mapper.js:32-58).  Here a
 chain compiles to ONE routing column via a mutually-exclusive ``F.when``
-cascade — evaluated once per row — and every sink is a filtered view of the
-same cached DataFrame, so the source is scanned once no matter how many sinks.
+cascade — evaluated once per row.  Sinks are values of that one column, not
+separate filtered plans: ``fan_out_write`` writes them all in one job (one
+scan of the source however many sinks there are).
 """
 
 from __future__ import annotations
@@ -43,7 +44,7 @@ def fan_out_write(df: DataFrame, base_path: str, *,
                   target: str = ROUTE_COL, fmt: str = "parquet",
                   partition_cols: Sequence[str] = (),
                   mode: str = "overwrite") -> list[str]:
-    """Write each routed branch once from a single cached scan.
+    """Write each routed branch once, all in one job over one scan.
 
     Uses ONE dynamic-partitioned write on the route column (the Spark-native
     version of the reference's interpolated output paths,

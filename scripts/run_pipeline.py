@@ -6,12 +6,13 @@
         --lineage /data/lineage \
         --buckets 4096 --buckets-per-job 64
 
-Reads the token table (BASELINE.json input_hint shape; the `raw` header
-column is rendered on the fly if absent), runs parse → enrich → route,
-writes the per-sink fan-out + per-sink aggregates, and checkpoints
-per-bucket lineage so a killed job resumes where it stopped (anti-join on
-completed buckets — the table-native analogue of paStash's --db_file,
-/root/reference/bin/pastash:210-234).
+Reads the token table (BASELINE.json input_hint shape plus the rendered
+`raw` header, which the input must carry), runs parse → enrich → route,
+writes the per-sink fan-out, and checkpoints per-bucket lineage so a killed
+job resumes where it stopped (anti-join on completed buckets — the
+table-native analogue of paStash's --db_file, bin/pastash:210-234).  Each batch's per-bucket
+counts are read back from the partitions it wrote, so the parse runs once
+per batch.
 
 Build the zip with:  make package   (or scripts/package.sh)
 """
@@ -55,8 +56,7 @@ def main() -> None:
     log = LineageLog(spark, args.lineage)
 
     def process(subset, buckets):
-        out = flagship.build(subset, lookup)
-        routed = out["routed"]
+        routed = flagship.build(subset, lookup)["routed"]
         # Idempotent per-bucket sink write: the bucket column LEADS the
         # partition layout, so dynamic overwrite replaces exactly this
         # batch's (bucket, route) partitions — a retry rewrites the same
@@ -66,7 +66,9 @@ def main() -> None:
          .partitionBy("_bucket", "_route")
          .option("partitionOverwriteMode", "dynamic")
          .parquet(args.output))
-        per_bucket = (routed.groupBy("_bucket")
+        per_bucket = (spark.read.parquet(args.output)
+                      .filter(F.col("_bucket").isin(list(buckets)))
+                      .groupBy("_bucket")
                       .agg(F.count("*").alias("r"), F.sum("n_tok").alias("t"))
                       .collect())
         return {r["_bucket"]: (r.r, int(r.t)) for r in per_bucket}

@@ -87,7 +87,7 @@ def test_minhash_lsh_finds_exact_and_near(docs):
 
 
 def test_simhash_near_pairs(docs):
-    sh = docs.select(D.simhash64("text").alias("s"), "doc_id").collect()
+    sh = docs.select(D.simhash60_portable("text").alias("s"), "doc_id").collect()
     by_id = {r.doc_id: r.s for r in sh}
     assert by_id[1] == by_id[2]                  # identical docs, same simhash
     pairs = {(r.id_a, r.id_b): r.hamming

@@ -110,14 +110,35 @@ def test_flagship_parse_matches_python_re(spark):
 
 
 def test_flagship_aggregates_consistent(spark):
+    """Both aggregate outputs agree with a separate per-row count of the
+    routed frame (sink_counts is derived from the aggregates, so comparing
+    the two with each other would check nothing)."""
     out = flagship.run(spark, datagen.token_sequences(spark, 1000))
+    want = {r.sink: r.rows for r in R.sink_counts(out["routed"]).collect()}
     counts = {r.sink: r.rows for r in out["sink_counts"].collect()}
-    aggs = out["aggregates"].collect()
     per_sink = {}
-    for r in aggs:
+    for r in out["aggregates"].collect():
         per_sink[r.sink] = per_sink.get(r.sink, 0) + r["count"]
-    assert per_sink == counts
+    assert counts == want
+    assert per_sink == want
     assert sum(counts.values()) == 1000
+
+
+def test_flagship_output_schemas(spark, tmp_path):
+    """The aggregate outputs keep the schemas of the frames they stand for,
+    nullability included, on a generated frame and on a parquet read-back
+    (where every column, `source` too, comes back nullable)."""
+    path = str(tmp_path / "tokens")
+    datagen.token_sequences(spark, 200).write.parquet(path)
+    lookup = datagen.source_lookup(spark)
+    for df in (datagen.token_sequences(spark, 200), spark.read.parquet(path)):
+        out = flagship.build(df, lookup)
+        routed = out["routed"]
+        assert out["aggregates"].schema == flagship.aggregate_stage(routed).schema
+        assert out["sink_counts"].schema == R.sink_counts(routed).schema
+    assert spark.read.parquet(path).schema["source"].nullable
+    rows = out["sink_counts"].schema["rows"]
+    assert (rows.dataType.simpleString(), rows.nullable) == ("bigint", False)
 
 
 def test_token_array_invariant_through_pipeline(spark):

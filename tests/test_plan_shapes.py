@@ -66,8 +66,9 @@ def test_flagship_single_stage_until_aggregate(spark, token_parquet):
     assert "Exchange hashpartitioning" not in routed_plan
     # (WholeStageCodegen markers only appear in the final AQE plan after
     # execution; the no-Exchange assertion above is the load-bearing one)
-    # aggregate adds exactly one shuffle (partial -> final)
-    agg_plan = _plan(out["aggregates"])
+    # the one job behind both aggregate outputs adds exactly one shuffle
+    # (partial -> final)
+    agg_plan = _plan(flagship.aggregate_stage(out["routed"]))
     assert agg_plan.count("Exchange hashpartitioning") == 1
     assert "partial_count" in agg_plan or "partial" in agg_plan.lower()
 
@@ -78,11 +79,41 @@ def test_flagship_plans_have_no_python_workers(spark, token_parquet):
     spark.createDataFrame(list) plans for a literal dim)."""
     df = spark.read.parquet(token_parquet)
     out = flagship.build(df, datagen.source_lookup(spark))
-    for name in ("routed", "aggregates", "sink_counts"):
-        plan = _plan(out[name])
+    frames = dict(out, aggregate_job=flagship.aggregate_stage(out["routed"]))
+    for name, frame in frames.items():
+        plan = _plan(frame)
         for node in ("EvalPython", "MapInPandas", "ExistingRDD", "PythonRDD"):
             assert node not in plan, (name, node)
         assert "LocalTableScan" in plan, name
+
+
+def _sql_executions(spark) -> dict[int, str]:
+    """Physical plan of every SQL execution so far, by execution id, read
+    from the SQL status store (the UI is off)."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    executions = spark._jsparkSession.sharedState().statusStore() \
+        .executionsList()
+    return {e.executionId(): e.physicalPlanDescription()
+            for e in (executions.apply(i) for i in range(executions.size()))}
+
+
+def test_flagship_outputs_share_one_job(spark, token_parquet):
+    """Reading ``routed`` (or testing a key) runs nothing; collecting both
+    aggregate outputs runs exactly one job over the token parquet, not one
+    per output."""
+    df = spark.read.parquet(token_parquet)
+    out = flagship.build(df, datagen.source_lookup(spark))
+    assert set(out) == {"routed", "aggregates", "sink_counts"}
+    before = _sql_executions(spark)
+    assert "_route" in out["routed"].columns and "aggregates" in out
+    assert _sql_executions(spark).keys() == before.keys()
+    aggs = out["aggregates"].collect()
+    sinks = out["sink_counts"].collect()
+    new = [plan for eid, plan in _sql_executions(spark).items()
+           if eid not in before]
+    assert sum("Scan parquet" in plan and token_parquet in plan
+               for plan in new) == 1
+    assert sum(r["count"] for r in aggs) == sum(r.rows for r in sinks) == 2000
 
 
 def test_grok_regex_runs_once_per_row(spark, token_parquet):
