@@ -425,21 +425,13 @@ def app_janus_sip_correlate(df: DataFrame, *, order: str = "event_id",
 
     ws_dim = (df.filter((t == 128) & (F.col("ws_event") == "connected")
                         & F.col("ws_id").isNotNull())
-              .select(F.col("ws_id").alias("_w_id"),
-                      F.col("ws_ip").alias("_w_ip"),
-                      F.col(order).alias("_w_o")))
-    w_ws = Window.partitionBy("_w_id").orderBy(F.col("_w_o").desc())
-    ws_dim = (ws_dim.withColumn("_rn", F.row_number().over(w_ws))
-              .filter(F.col("_rn") == 1).select("_w_id", "_w_ip"))
+              .groupBy(F.col("ws_id").alias("_w_id"))
+              .agg(F.max_by("ws_ip", order).alias("_w_ip")))
 
-    sess_pub = (df.filter((t == 1) & F.col("ws_id").isNotNull()
+    sess_dim = (df.filter((t == 1) & F.col("ws_id").isNotNull()
                           & F.col("session_id").isNotNull())
-                .select(F.col("session_id").alias("_s_id"),
-                        F.col("ws_id").alias("_s_ws"),
-                        F.col(order).alias("_s_o")))
-    w_sess = Window.partitionBy("_s_id").orderBy(F.col("_s_o").desc())
-    sess_dim = (sess_pub.withColumn("_rn", F.row_number().over(w_sess))
-                .filter(F.col("_rn") == 1)
+                .groupBy(F.col("session_id").alias("_s_id"))
+                .agg(F.max_by("ws_id", order).alias("_s_ws"))
                 .join(ws_dim, F.col("_s_ws") == F.col("_w_id"), "left")
                 .select("_s_id", F.col("_w_ip").alias("_sess_ip")))
 
@@ -537,10 +529,8 @@ def app_genesys_correlate(df: DataFrame, *, field: str = "message",
                     F.get(cid_pub, 1).alias("_uuid"),
                     ord_c.alias("_po"))
             .filter(F.col("_cid").isNotNull()
-                    & F.col("_uuid").isNotNull()))
-    w_pub = Window.partitionBy("_cid").orderBy(F.col("_po").desc())
-    pubs = (pubs.withColumn("_rn", F.row_number().over(w_pub))
-            .filter(F.col("_rn") == 1).select("_cid", "_uuid"))
+                    & F.col("_uuid").isNotNull())
+            .groupBy("_cid").agg(F.max_by("_uuid", "_po").alias("_uuid")))
 
     rcv_re = r"Received \[(.*),(.*)\] (.*) bytes from (.*):(.*) "
     snd_re = r"Sending  \[(.*),(.*)\] (.*) bytes to (.*):(.*) "
@@ -1030,7 +1020,7 @@ def janus_trace_spans(df: DataFrame, *, order: str = "event_id",
     pre = df.select(
         tk.alias("_tk"), F.col(order),
         F.col(ts).cast("long").alias("_ts"),
-        F.col(session).cast("string").alias("_session"),
+        F.col(session).alias("_session"),
         (F.when(open_att, 0).when(open_sdp, 1).when(open_ice, 2)
          .when(open_sess, 3)).alias("_ofl"),
         (F.when(close_att, 0).when(close_sdp, 1).when(close_ice, 2)

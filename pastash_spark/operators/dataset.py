@@ -7,11 +7,12 @@ All are expressed shuffle-consciously:
   * exact dedup        one hash-groupBy (partial agg map-side)
   * minhash LSH        signature in one vectorized Arrow pass (pandas C
                        hashing + numpy permutation matrix), then band ->
-                       bucket -> within-bucket pair join; candidate pairs
-                       only, never the full O(n^2) cross join
+                       bucket -> in-bucket pairs (bucket_pairs); candidate
+                       pairs only, never the full O(n^2) cross join
   * simhash            majority bit-vote over word hashes, one Arrow pass
-  * n-gram jaccard     shingle explode + equi-join on shingle (the exact
-                       small-scale oracle for the LSH path)
+  * n-gram jaccard     shingle explode + in-bucket pairs per shingle
+                       posting (the exact small-scale oracle for the LSH
+                       path)
   * quality/lang/count pure column arithmetic (argument arrays evaluated
                        once per row — no expressions embedded in HOF lambdas)
 """
@@ -97,41 +98,26 @@ def shingles(col: str = "text", k: int = 3) -> Column:
 
 def ngram_jaccard_pairs(df: DataFrame, *, id_col: str = "doc_id",
                         col: str = "text", k: int = 3,
-                        threshold: float = 0.5,
-                        reuse: bool = True) -> DataFrame:
+                        threshold: float = 0.5) -> DataFrame:
     """Exact Jaccard similarity over k-shingles for all pairs sharing >=1
-    shingle: explode shingles, self-equi-join on shingle, count common per
-    pair, jaccard = common / (n1 + n2 - common).
+    shingle: explode shingles, pair the docs of each shingle's posting
+    (bucket_pairs), count common per pair, jaccard = common / (n1 + n2 -
+    common).  The shingle count per doc rides each pair, so n_a/n_b arrive
+    as groupBy keys instead of two size joins.
 
     This is the *oracle* path — O(pairs sharing a shingle).  At 100 TB use
     minhash_lsh_pairs to cut candidates first, then verify with this on the
     candidate set only.
-
-    PERF (r06b): two exchanges, no joins, no checkpoint — the shingle
-    count per doc rides each exploded row (shingles() is already
-    per-doc-distinct and ``id_col`` identifies the row, so the old
-    .distinct() was a pure no-op exchange), pairs are generated inside
-    each shingle's posting (sorted collect + i<j explode == the old
-    a.id < b.id self-join rows), and n_a/n_b arrive as groupBy keys
-    instead of two size joins.  Same (id_a, id_b, jaccard) values.
     """
     shr = (df.select(F.col(id_col).alias("id"),
                      shingles(col, k).alias("_shs"))
            .select("id", F.size("_shs").alias("n"),
                    F.explode("_shs").alias("sh")))
-    posting = (shr.groupBy("sh")
-               .agg(F.sort_array(F.collect_list(F.struct("id", "n")))
-                    .alias("_ids"))
-               .filter(F.size("_ids") >= 2))
-    e1 = posting.select("_ids", F.posexplode("_ids").alias("_i", "_a"))
-    pairs = (e1.select(F.col("_a.id").alias("id_a"),
+    common = (bucket_pairs(shr, "sh", "id", "n")
+              .groupBy(F.col("_a.id").alias("id_a"),
                        F.col("_a.n").alias("n_a"),
-                       F.explode(F.slice("_ids", F.col("_i") + 2,
-                                         F.size("_ids"))).alias("_b"))
-             .filter(F.col("id_a") < F.col("_b.id")))
-    common = (pairs.groupBy("id_a", "n_a",
-                            F.col("_b.id").alias("id_b"),
-                            F.col("_b.n").alias("n_b"))
+                       F.col("_b.id").alias("id_b"),
+                       F.col("_b.n").alias("n_b"))
               .agg(F.count("*").alias("common")))
     out = common.withColumn(
         "jaccard",
@@ -142,19 +128,19 @@ def ngram_jaccard_pairs(df: DataFrame, *, id_col: str = "doc_id",
 
 def _reuse(df: DataFrame, enabled: bool) -> DataFrame:
     """Materialize-once for a subtree consumed by multiple branches of ONE
-    query (self-joins, candidate-fetch + anti-join).  Catalyst's
-    ReuseExchange only fires for byte-identical canonical subplans, which
-    per-branch column pruning defeats here — so without this every
-    consumer re-runs the Arrow signature/window pass (measured: the
-    dedup/simhash/winnow queries halve with it).  Lazy localCheckpoint:
-    materializes during the first action, shared by all branches.
+    query (a candidate fetch plus an anti-join, two verify joins).
+    Catalyst's ReuseExchange only fires for byte-identical canonical
+    subplans, which per-branch column pruning defeats here — so without
+    this every consumer re-runs the Arrow signature/window pass.  Lazy
+    localCheckpoint: materializes during the first action, shared by all
+    branches.
     Cluster note: checkpoint blocks live in executor storage with no
     lineage — an executor loss fails the job instead of recomputing; for
     a giant run, persist the subtree to a table and pass reuse=False."""
     return df.localCheckpoint(eager=False) if enabled else df
 
 
-# --- hot-group cap with observable drop metrics -------------------------------
+# --- in-bucket pairs and hot-group caps with observable drop metrics ---------
 
 
 class CapHandle:
@@ -167,23 +153,27 @@ class CapHandle:
     not accumulate query plans.
     """
 
-    def __init__(self, metric: str, obs, fallback: DataFrame | None):
+    def __init__(self, metric: str, obs, fallback: DataFrame):
         self.metric = metric
         self._obs = obs
         self._fallback = fallback
         self._cached: dict | None = None
 
     def get(self) -> dict:
-        """{'dropped_rows','dropped_groups','total_groups'} — call after an
-        action has run the observed query (the Observation path blocks
-        until then).  Falls back to a small standalone aggregation when AQE
-        empty-relation propagation pruned the observed branch."""
+        """{'dropped_rows','dropped_groups','total_groups'} of the capped
+        query.  ``Observation.get`` blocks until the query has run — forever
+        when it never does — so wait at most ~100 ms for the observed row
+        (``getRowOrEmpty``).  When there is none, or it came back empty
+        (Spark drops the metrics of a node AQE pruned, and of one whose
+        output feeds a later distinct), run the small standalone
+        aggregation over the same frame: the same numbers, one extra
+        job."""
         if self._cached is None:
-            try:
+            row = self._obs._jo.getRowOrEmpty()
+            if row.isDefined() and row.get().length():
                 self._cached = dict(self._obs.get)
-            except Exception:
-                self._cached = (self._fallback.first().asDict()
-                                if self._fallback is not None else {})
+            else:
+                self._cached = self._fallback.first().asDict()
             self._obs = None
             self._fallback = None  # release plan references once read
         return dict(self._cached)
@@ -194,57 +184,79 @@ class CapHandle:
 _CAP_LATEST: dict[str, CapHandle] = {}
 
 
-def _cap_groups(keyed: DataFrame, keys: list[str], cap: int,
-                metric: str, stats_out: dict | None = None) -> DataFrame:
-    """Drop groups with more than ``cap`` members — OBSERVABLY.
+def observe_cap(frame: DataFrame, metric: str, stats: list[Column],
+                stats_out: dict | None = None) -> DataFrame:
+    """Record a hot-group cap's drop counts — OBSERVABLY, in the same query.
 
     A silent cap reads as "covered everything" when it didn't: at 100 TB an
     oversized LSH bucket / posting list being discarded must surface as a
-    metric, not vanish.  The rows are annotated with their group size
-    (count-join, broadcast-friendly) and an ``Observation`` on the MAIN
-    stream — before the cap filter — records dropped rows/groups inside the
-    SAME query execution, zero extra jobs.  (Observing the count subtree
-    itself would lose the metrics: a CollectMetrics node executed inside a
-    BroadcastExchange never reaches the query's observed-metrics map.)
-    ``dropped_groups`` is recovered exactly as sum(1/group_size) over
-    dropped rows — each group contributes size * 1/size = 1.  Read the
-    stats after any action on the downstream DataFrame via
-    ``cap_drop_stats(metric)``; on a cluster they also land in the
-    QueryExecutionListener / SQL-UI observed-metrics channel, the standard
-    place ops dashboards scrape.
+    metric, not vanish.  ``stats`` are the aggregate columns
+    ``dropped_rows``, ``dropped_groups`` and ``total_groups`` over
+    ``frame``, the stream just BEFORE the cap filter; an ``Observation``
+    collects them inside the same query execution (when Spark drops them,
+    CapHandle.get runs ``frame.select(*stats)`` as one small job).  Read
+    them after any action on the downstream DataFrame via
+    ``cap_drop_stats(metric)`` or the CapHandle in ``stats_out``; on a
+    cluster they also land in the QueryExecutionListener / SQL-UI
+    observed-metrics channel, the standard place ops dashboards scrape.
     """
     from pyspark.sql import Observation
 
-    counts = keyed.groupBy(*keys).agg(F.count("*").alias("_grp_n"))
-    annotated = keyed.join(counts, keys)
-    dropped = F.col("_grp_n") > cap
     obs = Observation()
-    annotated = annotated.observe(
-        obs,
-        F.coalesce(F.sum(F.when(dropped, 1)), F.lit(0))
-         .alias("dropped_rows"),
-        F.round(F.coalesce(
-            F.sum(F.when(dropped, 1.0 / F.col("_grp_n"))), F.lit(0.0)))
-         .cast("long").alias("dropped_groups"),
-        F.round(F.coalesce(F.sum(1.0 / F.col("_grp_n")), F.lit(0.0)))
-         .cast("long").alias("total_groups"))
-    # Degenerate-input escape hatch: if the cap drops EVERYTHING, AQE's
-    # empty-relation propagation can prune the whole observed branch from
-    # the final plan and the metrics row comes back empty — exactly the run
-    # where the numbers matter most.  Keep a tiny standalone aggregation
-    # over the group counts; CapHandle.get runs it (one extra small job,
-    # diagnostics path only) when the in-query observation is unavailable.
-    fallback = counts.select(
-        F.coalesce(F.sum(F.when(dropped, F.col("_grp_n"))), F.lit(0))
-         .alias("dropped_rows"),
-        F.coalesce(F.sum(F.when(dropped, 1)), F.lit(0))
-         .alias("dropped_groups"),
-        F.count(F.lit(1)).alias("total_groups"))
-    handle = CapHandle(metric, obs, fallback)
+    handle = CapHandle(metric, obs, frame.select(*stats))
     _CAP_LATEST[metric] = handle
     if stats_out is not None:
         stats_out[metric] = handle
-    return annotated.filter(~dropped).drop("_grp_n")
+    return frame.observe(obs, *stats)
+
+
+def bucket_pairs(df: DataFrame, keys, order: str, *payload: str,
+                 max_bucket: int | None = None, metric: str | None = None,
+                 stats_out: dict | None = None) -> DataFrame:
+    """Every pair of rows of ``df`` that share a bucket key — the one
+    in-bucket pair generator (LSH bands, simhash blocks, shingle and
+    fingerprint postings, qrelate handles).
+
+    One exchange on ``keys``: each bucket collects its rows as a sorted
+    array of ``struct(order, *payload)``, then a posexplode × slice-explode
+    emits every i<j pair inside the bucket.  No self-join (two shuffled or
+    broadcast sides plus join sorts) and no checkpoint to feed both sides:
+    the input stream is consumed once.  Output: ``(*keys, _a, _b)`` where
+    ``_a``/``_b`` are the two row structs with ``_a.<order> <
+    _b.<order>`` — rows with equal ``order`` are never paired, so a row
+    never pairs with itself — i.e. exactly the rows of the self-join
+    ``a.key = b.key AND a.order < b.order``.  A pair is emitted once per
+    bucket it shares; callers dedupe or count across buckets.
+
+    Unlike an equi-join, a NULL key forms a bucket of its own; every call
+    site's keys are non-null by construction (hashes, chunk values,
+    shingles, gated handle values).
+
+    Cost: a bucket of m rows is one m-element array in one task and emits
+    m(m-1)/2 pairs.  ``max_bucket`` drops whole buckets of MORE than
+    ``max_bucket`` rows before any pair is generated, and records the drop
+    under ``metric`` (observe_cap over the collected ``size``; no extra
+    exchange).
+    """
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    occ = (df.groupBy(*keys)
+           .agg(F.sort_array(F.collect_list(F.struct(order, *payload)))
+                .alias("_occ")))
+    n = F.size("_occ")
+    if max_bucket is not None:
+        dropped = n > max_bucket
+        occ = observe_cap(occ, metric, [
+            F.coalesce(F.sum(F.when(dropped, n)), F.lit(0))
+            .alias("dropped_rows"),
+            F.count(F.when(dropped, 1)).alias("dropped_groups"),
+            F.count(F.lit(1)).alias("total_groups")], stats_out)
+        occ = occ.filter(~dropped)
+    e1 = (occ.filter(n >= 2)
+          .select(*keys, "_occ", F.posexplode("_occ").alias("_i", "_a")))
+    return (e1.select(*keys, "_a",
+                      F.explode(F.slice("_occ", F.col("_i") + 2, n))
+                      .alias("_b"))
+            .filter(F.col(f"_a.{order}") < F.col(f"_b.{order}")))
 
 
 def cap_drop_stats(metric: str) -> dict:
@@ -257,7 +269,7 @@ def cap_drop_stats(metric: str) -> dict:
 
 
 CAP_METRICS = ("minhash_lsh_max_bucket", "simhash_max_bucket",
-               "winnow_max_posting")
+               "winnow_max_posting", "hsp_max_bucket")
 
 
 def cap_drop_report() -> dict[str, dict]:
@@ -330,7 +342,6 @@ def minhash_lsh_pairs(df: DataFrame, *, id_col: str = "doc_id",
                       bands: int = 16,
                       max_bucket: int | None = None,
                       stats_out: dict | None = None,
-                      reuse: bool = True,
                       distinct: bool = True) -> DataFrame:
     """Candidate near-dup pairs via banded LSH: equal band-slice of the
     minhash signature -> same bucket -> pair.  rows_per_band = n_hashes/bands.
@@ -338,13 +349,14 @@ def minhash_lsh_pairs(df: DataFrame, *, id_col: str = "doc_id",
     tolerate multi-band duplicates (e.g. a semi-join candidate fetch).
 
     Scale shape: explode to (band_id, band_hash) — the shuffle key is the
-    band bucket, uniformly hash-distributed; within-bucket self-join only.
-    Output is DISTINCT candidate pairs; verify with ngram_jaccard_pairs.
+    band bucket, uniformly hash-distributed; pairs only inside a bucket
+    (bucket_pairs).  Output is DISTINCT candidate pairs; verify with
+    ngram_jaccard_pairs.
 
     ``max_bucket`` is the hot-bucket guard: a bucket holding m docs emits
     m^2/2 candidate pairs, so one degenerate bucket (boilerplate / empty
-    docs) goes quadratic.  Buckets above the cap are DROPPED before the
-    self-join (count-join filter); pairs inside them are lost, which is why
+    docs) goes quadratic.  Buckets above the cap are DROPPED before any
+    pair is generated; pairs inside them are lost, which is why
     dedup_minhash collapses exact duplicates FIRST — after that prepass a
     hot bucket can only come from a pathological near-identical mass, and
     the cap bounds worst-case work instead of letting one key stall the
@@ -376,26 +388,12 @@ def minhash_lsh_pairs(df: DataFrame, *, id_col: str = "doc_id",
         "id", F.explode(F.expr("array(" + ", ".join(band_exprs) + ")"))
         .alias("bb")) \
         .select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
-    if max_bucket is not None:
-        # the observable cap consumes `banded` twice (count + join) —
-        # materialize once for it; the uncapped path is single-consumer
-        banded = _cap_groups(_reuse(banded, reuse), ["band", "bucket"],
-                             max_bucket, "minhash_lsh_max_bucket", stats_out)
-    # PERF (r06b): pairs are generated INSIDE each bucket (groupBy +
-    # sorted collect + i<j explode) instead of a bucket self-join — one
-    # exchange and no join sorts, and the band stream is consumed once
-    # (the old shape re-shuffled a localCheckpoint for both join sides).
-    # Identical pair set: sort_array + posexplode(i<j) emits exactly the
-    # a.id < b.id pairs per bucket; worst-case work per bucket is the
-    # same m^2/2 the join had, bounded by the same max_bucket drop.
-    buckets = (banded.groupBy("band", "bucket")
-               .agg(F.sort_array(F.collect_list("id")).alias("_ids"))
-               .filter(F.size("_ids") >= 2))
-    e1 = buckets.select("_ids", F.posexplode("_ids").alias("_i", "id_a"))
-    pairs = (e1.select("id_a",
-                       F.explode(F.slice("_ids", F.col("_i") + 2,
-                                         F.size("_ids"))).alias("id_b"))
-             .filter(F.col("id_a") < F.col("id_b")))
+    pairs = (bucket_pairs(banded, ["band", "bucket"], "id",
+                          max_bucket=max_bucket,
+                          metric="minhash_lsh_max_bucket",
+                          stats_out=stats_out)
+             .select(F.col("_a.id").alias("id_a"),
+                     F.col("_b.id").alias("id_b")))
     return pairs.distinct() if distinct else pairs
 
 
@@ -451,7 +449,7 @@ def dedup_minhash(df: DataFrame, *, id_col: str = "doc_id", col: str = "text",
     cand = minhash_lsh_pairs(work, id_col=id_col, col=col, k=k,
                              n_hashes=n_hashes, bands=bands,
                              max_bucket=max_bucket, stats_out=stats_out,
-                             reuse=reuse, distinct=False)
+                             distinct=False)
     # PERF (r06): one explode instead of union-of-two-selects — the union
     # form re-ran the whole candidate-pair join once per side.
     cand_docs = (work.join(
@@ -517,20 +515,22 @@ def simhash60_portable(col: str = "text") -> Column:
 def simhash_near_pairs(df: DataFrame, *, id_col: str = "doc_id",
                        col: str = "text", max_hamming: int = 3,
                        max_bucket: int | None = None,
-                       stats_out: dict | None = None,
-                       reuse: bool = True) -> DataFrame:
+                       stats_out: dict | None = None) -> DataFrame:
     """Near-dup pairs by simhash hamming distance, blocked on CHUNK PAIRS:
     the 60-bit portable simhash splits into 6 chunks of 10 bits; hamming<=3
     flips at most 3 chunks, so at least 3 chunks are equal and hence at
     least one of the C(6,2)=15 chunk PAIRS is equal on both sides — the
-    join is an equi-join on (pair_no, 20-bit value).
+    candidates are the in-block pairs (bucket_pairs) of block key
+    (pair_no, 20-bit value).
 
     vs. blocking on single chunks: 15 x 2^20 ≈ 1.6e7 distinct block keys
     instead of 4 x 2^16 ≈ 2.6e5 — at 10^10 docs the expected block
-    population drops ~60x, which is the difference between a balanced
-    equi-join and a quadratic within-block blowup.  ``max_bucket`` caps the
+    population drops ~60x, which is the difference between balanced
+    blocks and a quadratic within-block blowup.  ``max_bucket`` caps the
     residual hot blocks (identical-doc mass): oversized blocks are dropped
-    before the self-join; run exact dedup first so that mass never arrives.
+    before any pair is generated; run exact dedup first so that mass never
+    arrives.  The hamming filter runs BEFORE the distinct, so only
+    qualifying pairs reach it.
     """
     chunk_bits, n_chunks = 10, 6
     mask = (1 << chunk_bits) - 1
@@ -547,33 +547,13 @@ def simhash_near_pairs(df: DataFrame, *, id_col: str = "doc_id",
             (F.shiftleft(chunk(i), chunk_bits) + chunk(j)).alias("val")))
     blocks = sh.select("id", "sh", F.explode(F.array(*pair_structs)).alias("c")) \
         .select("id", "sh", "c.blk", "c.val")
-    if max_bucket is not None:
-        # the observable cap consumes `blocks` twice — materialize for it;
-        # the uncapped path below is single-consumer
-        blocks = _cap_groups(_reuse(blocks, reuse), ["blk", "val"],
-                             max_bucket, "simhash_max_bucket", stats_out)
-    # PERF (r06b): pairs generated INSIDE each block (sorted collect +
-    # i<j explode) instead of a block self-join — one exchange, no join
-    # sorts, no checkpoint; the hamming filter runs BEFORE the distinct
-    # so only qualifying pairs reach it.  Identical result: filter and
-    # distinct commute (hamming is a function of the pair), and sorted
-    # i<j == the old a.id < b.id.
-    occ = (blocks.groupBy("blk", "val")
-           .agg(F.sort_array(F.collect_list(F.struct("id", "sh")))
-                .alias("_ids"))
-           .filter(F.size("_ids") >= 2))
-    e1 = occ.select("_ids", F.posexplode("_ids").alias("_i", "_a"))
-    pairs = (e1.select(F.col("_a.id").alias("id_a"),
-                       F.col("_a.sh").alias("sh_a"),
-                       F.explode(F.slice("_ids", F.col("_i") + 2,
-                                         F.size("_ids"))).alias("_b"))
-             .filter(F.col("id_a") < F.col("_b.id"))
-             .select("id_a", F.col("_b.id").alias("id_b"),
-                     "sh_a", F.col("_b.sh").alias("sh_b")))
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int")
-    return (pairs.withColumn("hamming", ham)
+    pairs = bucket_pairs(blocks, ["blk", "val"], "id", "sh",
+                         max_bucket=max_bucket, metric="simhash_max_bucket",
+                         stats_out=stats_out)
+    ham = F.bit_count(F.col("_a.sh").bitwiseXOR(F.col("_b.sh"))).cast("int")
+    return (pairs.select(F.col("_a.id").alias("id_a"),
+                         F.col("_b.id").alias("id_b"), ham.alias("hamming"))
             .filter(F.col("hamming") <= max_hamming)
-            .select("id_a", "id_b", "hamming")
             .distinct())
 
 
@@ -624,25 +604,19 @@ def winnow_containment_pairs(df: DataFrame, *, id_col: str = "doc_id",
                              col: str = "text", k: int = 3, window: int = 4,
                              min_shared: int = 5,
                              max_posting: int | None = None,
-                             stats_out: dict | None = None,
-                             reuse: bool = True) -> DataFrame:
+                             stats_out: dict | None = None) -> DataFrame:
     """Containment / plagiarism-style candidate pairs: docs sharing at least
     ``min_shared`` winnowing fingerprints.  The sketch is an inverted index
-    (fp -> docs); candidates come from the posting-list self-equi-join —
-    never an all-pairs comparison.  ``max_posting`` caps degenerate posting
-    lists (ubiquitous boilerplate fingerprints) the same way the LSH
-    hot-bucket guards do."""
-    fps = _reuse(
-        winnow_fingerprints(df, id_col=id_col, col=col, k=k, window=window),
-        reuse)
-    if max_posting is not None:
-        fps = _cap_groups(fps, ["fp"], max_posting, "winnow_max_posting",
-                          stats_out)
-    a, b = fps.alias("a"), fps.alias("b")
-    return (a.join(b, (F.col("a.fp") == F.col("b.fp")) &
-                   (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .groupBy(F.col(f"a.{id_col}").alias("id_a"),
-                     F.col(f"b.{id_col}").alias("id_b"))
+    (fp -> docs); candidates are the pairs inside each posting list
+    (bucket_pairs) — never an all-pairs comparison.  ``max_posting`` caps
+    degenerate posting lists (ubiquitous boilerplate fingerprints) the same
+    way the LSH hot-bucket guards do."""
+    fps = winnow_fingerprints(df, id_col=id_col, col=col, k=k,
+                              window=window)
+    return (bucket_pairs(fps, "fp", id_col, max_bucket=max_posting,
+                         metric="winnow_max_posting", stats_out=stats_out)
+            .groupBy(F.col(f"_a.{id_col}").alias("id_a"),
+                     F.col(f"_b.{id_col}").alias("id_b"))
             .agg(F.count("*").alias("shared"))
             .filter(F.col("shared") >= min_shared))
 

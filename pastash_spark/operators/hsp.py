@@ -18,6 +18,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pastash_spark.operators.dataset import bucket_pairs, observe_cap
+
 # filter_app_hsp.js:22-30 — the default qrelate vector table
 HSP_VECTORS: tuple[dict, ...] = (
     {"score": 100, "key": "callid", "suffix": "_b2b-1"},
@@ -51,8 +53,7 @@ def scored_correlation(df: DataFrame, *,
                        vectors: Sequence[Mapping[str, Any]] = HSP_VECTORS,
                        id_col: str = "callid", order: str = "line_no",
                        threshold: int = 100, max_bucket: int = 64,
-                       out_prefix: str = "hsp_",
-                       reuse: bool = True) -> DataFrame:
+                       out_prefix: str = "hsp_") -> DataFrame:
     """qrelate-style weighted multi-key correlation
     (filter_app_hsp.js:20-30 vectors + :156 qrelate.process).
 
@@ -78,11 +79,12 @@ def scored_correlation(df: DataFrame, *,
 
     Scale shape: handles explode to <= 2x#vectors rows per record; the
     bucket key (name, value) is high-cardinality (call ids), and each
-    handle bucket is capped at ``max_bucket`` occupants (the LRU's
-    maxSize analogue) BEFORE pairs are generated inside it, so a
-    degenerate hot value is bounded at cap^2/2 pairs instead of going
-    quadratic.  ``reuse`` is accepted for API stability but unused since
-    the r06b single-consumer rewrite (no subtree is consumed twice).
+    handle bucket is capped at its earliest ``max_bucket`` occupants (the
+    LRU's maxSize analogue) BEFORE pairs are generated inside it
+    (bucket_pairs), so a degenerate hot value is bounded at cap^2/2 pairs
+    instead of going quadratic.  The truncated rows and buckets are
+    counted under the ``hsp_max_bucket`` cap metric (see
+    dataset.cap_drop_report), never silently discarded.
     Adds: ``{out_prefix}correlation`` (adopted id, NULL when unlinked)
     and ``{out_prefix}score``."""
     cols = set(df.columns)
@@ -129,43 +131,30 @@ def scored_correlation(df: DataFrame, *,
          .select("_o", "_id", F.col("_h.hname").alias("hname"),
                  F.col("_h.hval").alias("hval"),
                  F.col("_h.hscore").alias("hscore")))
-    # LRU maxSize analogue: cap each handle bucket (keep the earliest
-    # occupants — the ones the reference's cache would have retained)
+    # LRU maxSize analogue: cap each handle bucket, keeping the earliest
+    # occupants (the ones the reference's cache would have retained).  The
+    # cap window hash-partitions the stream by (hname, hval), so the
+    # bucket_pairs groupBy reuses that exchange, and every bucket array is
+    # bounded by max_bucket before aggregation.
     w_bucket = Window.partitionBy("hname", "hval").orderBy("_o")
-    h = (h.withColumn("_rn", F.row_number().over(w_bucket))
-         .filter(F.col("_rn") <= max_bucket).drop("_rn"))
-    # PERF (r06b): candidate pairs are generated INSIDE each handle bucket
-    # instead of via a handle self-join.  The cap window above already
-    # hash-partitions the stream by (hname, hval), so the bucket
-    # collect_list groupBy reuses that exchange (zero extra shuffles) and
-    # every array is bounded by max_bucket BEFORE aggregation — the
-    # in-bucket pair explode is then <= cap^2/2 rows per bucket, the same
-    # bound the capped self-join had.  This replaces the old shape
-    # (localCheckpoint materialization + self-join with two shuffled
-    # sides + a second two-level groupBy + a best-partner sort window —
-    # ~7 exchanges) with 4 exchanges and no checkpoint; what crosses the
-    # pair exchange is one row per (pair, bucket), strictly fewer than
-    # the old join output.  Value-equivalence: for a pair sharing several
-    # buckets of one namespace, max over buckets of max(s_a, s_b) equals
-    # the old greatest(max(_as), max(_bs)) over the joined rows, and
-    # min_by(_ao) equals row_number()==1 over (partition _bo order _ao)
-    # because pair-level aggregation leaves _ao unique per _bo.
-    occ = (h.groupBy("hname", "hval")
-           .agg(F.sort_array(F.collect_list(
-               F.struct("_o", "_id", "hscore"))).alias("_occ")))
-    e1 = occ.select("hname", "_occ",
-                    F.posexplode("_occ").alias("_i", "_a"))
-    e2 = (e1.select("hname",
-                    F.col("_a._o").alias("_ao"),
-                    F.col("_a._id").alias("_aid"),
-                    F.col("_a.hscore").alias("_as"),
-                    F.explode(F.slice("_occ", F.col("_i") + 2,
-                                      F.size("_occ"))).alias("_b"))
-          # same-record duplicate handles share _o — never self-pair
-          .filter(F.col("_ao") < F.col("_b._o")))
-    bucket_pairs = e2.select(
-        "_ao", "_aid", F.col("_b._o").alias("_bo"), "hname",
-        F.greatest("_as", F.col("_b.hscore")).alias("_ns"))
+    h = h.withColumn("_rn", F.row_number().over(w_bucket))
+    rn = F.col("_rn")
+    h = observe_cap(h, "hsp_max_bucket", [
+        F.count(F.when(rn > max_bucket, 1)).alias("dropped_rows"),
+        F.count(F.when(rn == max_bucket + 1, 1)).alias("dropped_groups"),
+        F.count(F.when(rn == 1, 1)).alias("total_groups")])
+    h = h.filter(rn <= max_bucket).drop("_rn")
+    # What crosses the pair exchange is one row per (pair, bucket).  For a
+    # pair sharing several buckets of one namespace, the pivoted max below
+    # takes the max over buckets of greatest(s_a, s_b); min_by(_ao) picks
+    # the earliest partner, _ao being unique per _bo after the pair
+    # groupBy.  Same-record duplicate handles share _o, so bucket_pairs
+    # never self-pairs them.
+    handle_pairs = bucket_pairs(h, ["hname", "hval"], "_o", "_id",
+                                "hscore").select(
+        F.col("_a._o").alias("_ao"), F.col("_a._id").alias("_aid"),
+        F.col("_b._o").alias("_bo"), "hname",
+        F.greatest("_a.hscore", "_b.hscore").alias("_ns"))
     # one namespace counts once per pair, at its max score; the namespace
     # set is static (the vectors table), so the per-name max is a PIVOTED
     # single aggregation instead of groupBy(.., hname) + a second groupBy.
@@ -186,7 +175,7 @@ def scored_correlation(df: DataFrame, *,
     # multiple bucket rows), which is a win whenever records share few
     # buckets — the qrelate workload shape (handles are call-id-grade
     # keys).
-    pairs = (bucket_pairs.repartition(F.col("_bo"))
+    pairs = (handle_pairs.repartition(F.col("_bo"))
              .groupBy("_ao", "_bo", "_aid").agg(*per_name)
              .withColumn("_score", score_expr)
              .filter(F.col("_score") >= threshold))

@@ -197,9 +197,9 @@ def lsh_near_dup_pairs(df: DataFrame, *, id_col: str = "vec_id",
                        dim: int | None = None, seed0: int = 42,
                        reuse: bool = True) -> DataFrame:
     """HIGH-threshold embedding near-dup pairs — the 100 TB path: candidates
-    from T independent random-projection tables (equi-join within each
-    bucket; a pair qualifies if ANY table buckets it together), then exact
-    cosine verification on candidates only.
+    from T independent random-projection tables (pairs inside each bucket,
+    bucket_pairs; a pair qualifies if ANY table buckets it together), then
+    exact cosine verification on candidates only.
 
     vs exact_cosine_pairs: the grid join evaluates all O(n^2) pairs — right
     for LOW thresholds where no blocking can guarantee recall; at near-dup
@@ -209,17 +209,16 @@ def lsh_near_dup_pairs(df: DataFrame, *, id_col: str = "vec_id",
     replicate the exact candidate condition — the approximation itself is
     driver-verifiable.
     """
-    from pastash_spark.operators.dataset import _reuse
-    # base feeds the bucket UDF AND both verify sides; bk self-joins —
-    # materialize each once (see dataset._reuse for the ReuseExchange
-    # rationale and the cluster-scale note)
+    from pastash_spark.operators.dataset import _reuse, bucket_pairs
+    # base feeds the bucket UDF AND both verify sides — materialize it once
+    # (see dataset._reuse for the ReuseExchange rationale and the
+    # cluster-scale note)
     base = _reuse(df.select(F.col(id_col).alias("id"),
                             F.col(vec_col).cast("array<double>").alias("v")),
                   reuse)
     # ALL tables' buckets in ONE Arrow pass (one (T*P, dim) matmul per
-    # batch), then the T per-table self-joins fuse into a single equi-join
-    # on (table, bucket): a pair is a candidate iff some table buckets it
-    # together — identical semantics, one shuffle instead of T.
+    # batch), then ONE pair pass keyed on (table, bucket): a pair is a
+    # candidate iff some table buckets it together — one shuffle, not T.
     all_planes = np.concatenate(
         [_plane_matrix(n_planes, dim, seed0 + t) for t in range(n_tables)])
     weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
@@ -231,15 +230,10 @@ def lsh_near_dup_pairs(df: DataFrame, *, id_col: str = "vec_id",
         bits = ((m @ all_planes.T) > 0).reshape(len(vs), n_tables, n_planes)
         return pd.Series(list((bits * weights).sum(axis=2).astype(np.int64)))
 
-    bk = _reuse(base.select("id",
-                            F.posexplode(buckets_udf("v")).alias("t", "bk")),
-                reuse)
-    a_, b_ = bk.alias("a"), bk.alias("b")
-    cand_ids = (a_.join(b_, (F.col("a.t") == F.col("b.t")) &
-                        (F.col("a.bk") == F.col("b.bk")) &
-                        (F.col("a.id") < F.col("b.id")))
-                .select(F.col("a.id").alias("id_a"),
-                        F.col("b.id").alias("id_b"))
+    bk = base.select("id", F.posexplode(buckets_udf("v")).alias("t", "bk"))
+    cand_ids = (bucket_pairs(bk, ["t", "bk"], "id")
+                .select(F.col("_a.id").alias("id_a"),
+                        F.col("_b.id").alias("id_b"))
                 .distinct())
     va = base.select(F.col("id").alias("id_a"), F.col("v").alias("_va"))
     vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("_vb"))

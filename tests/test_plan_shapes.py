@@ -387,3 +387,21 @@ def test_sqlite_lookup_is_broadcast_no_fact_shuffle(spark, tmp_path):
     assert "BroadcastHashJoin" in plan
     assert "SortMergeJoin" not in plan
     assert "Exchange hashpartitioning" not in plan
+
+
+def test_capped_pair_operators_observe_in_query(spark):
+    """A hot-bucket cap is one observed filter inside bucket_pairs: the
+    plan gains a CollectMetrics node, but no count join and no checkpoint
+    scan feeding two consumers."""
+    from pastash_spark.operators import dataset as D
+    docs = spark.range(20).select(
+        F.col("id").alias("doc_id"),
+        F.concat(F.lit("shared words for every doc "),
+                 F.col("id").cast("string")).alias("text"))
+    for capped in (D.minhash_lsh_pairs(docs, max_bucket=5),
+                   D.simhash_near_pairs(docs, max_bucket=5),
+                   D.winnow_containment_pairs(docs, max_posting=5)):
+        plan = _plan(capped)
+        assert "CollectMetrics" in plan
+        assert "Join" not in plan
+        assert "ExistingRDD" not in plan

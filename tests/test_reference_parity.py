@@ -984,6 +984,22 @@ class TestAppHsp:
         # two 50-point namespaces sum to the 100 threshold (:22-30)
         assert out[2].hsp_score == 100
 
+    def test_scored_correlation_counts_its_cap(self, spark):
+        """The max_bucket cap keeps each handle bucket's earliest rows and
+        counts what it truncates: 10 records share callid X, so both X
+        buckets (X and the derived X_b2b-1) keep 4 rows and drop 6."""
+        from pastash_spark.operators import dataset as D
+        from pastash_spark.operators import hsp as H
+        rows = [(i, "X") for i in range(1, 11)] + [(11, "Y"), (12, "Y")]
+        df = spark.createDataFrame(rows, "line_no long, callid string")
+        out = {r.line_no: r for r in H.scored_correlation(
+            df, order="line_no", max_bucket=4).collect()}
+        assert [out[i].hsp_correlation for i in range(1, 13)] == (
+            [None, "X", "X", "X"] + [None] * 6 + [None, "Y"])
+        counts = {"dropped_rows": 12, "dropped_groups": 2, "total_groups": 4}
+        assert D.cap_drop_stats("hsp_max_bucket") == counts
+        assert D.cap_drop_report()["hsp_max_bucket"] == counts
+
 
 class TestJanusTraceSpans:
     """filter_app_janus_tracer.js:174-919 / filter_app_janus_uptrace.js:
@@ -1088,6 +1104,32 @@ class TestJanusTraceSpans:
         assert got["Transport connected"].service == "Transport Originated"
         assert got["Startup"].service == "Core"
         assert got["Shutdown"].trace_id == tid
+
+    def test_session_id_keeps_input_type(self, spark):
+        """A bigint session_id comes back as bigint, with the same spans
+        (trace ids hash the session's string form either way)."""
+        from pyspark.sql import functions as F
+        from pastash_spark.operators import correlate as C
+        rows = [self._ev(1, 10, "7", 1, name="created"),
+                self._ev(2, 20, "7", 2, name="attached"),
+                self._ev(3, 50, "7", 2, name="detached"),
+                self._ev(4, 90, "7", 1, name="destroyed")]
+        df = spark.createDataFrame(
+            rows, "ord long, ts_us long, session_id string, type int, "
+                  "subtype int, event_name string, jsep_type string, "
+                  "jsep_owner string, ice_state string, dtls_state string, "
+                  "data_event string, emitter string")
+        as_long = df.withColumn("session_id", F.col("session_id")
+                                .cast("bigint"))
+        out = C.janus_trace_spans(as_long, order="ord", ts="ts_us")
+        assert out.schema["session_id"].dataType.simpleString() == "bigint"
+        def key(r):
+            return r["ord"], r["span_id"]
+        got = sorted((r.asDict() for r in out.collect()), key=key)
+        want = sorted((r.asDict() for r in self._spans(spark, rows)),
+                      key=key)
+        assert got and {r["session_id"] for r in got} == {7}
+        assert got == [dict(r, session_id=7) for r in want]
 
     def test_type_filter(self, spark):
         rows = [
