@@ -27,7 +27,7 @@ sys.path.insert(0, REPO)
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
 
-# Same list as bench.py HEADLINE (kept in sync manually; bench.py is frozen)
+# HEADLINE is imported from bench.py (frozen), so the two lists never differ
 from bench import HEADLINE, _noop_force, _steal_probe  # noqa: E402
 
 

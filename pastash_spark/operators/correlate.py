@@ -1337,99 +1337,71 @@ def app_rtpproxy_correlate(df: DataFrame, *, field: str = "message",
 
 # --- app_audiocodes -----------------------------------------------------------
 
-_AC_STRUCT = ("hit tinyint, remote string, raw_pay string, tail string, "
-              "s long, sid string, q array<string>")
+# per-version (Incoming, Outgoing) SIP-message regexes, verbatim from
+# filter_app_audiocodes.js :151-162/:222-230; any other version string takes
+# the 7.20A.260.012 pair, like the reference's else branch
+_AC_SIP_RES = {
+    "7.40A.500": (
+        r"(.*)---- Incoming SIP Message from (.*) to SIPInterface "
+        r"#[0-9] \((.*)\) (.*) TO\(#[0-9]\) ----  (.*)()",
+        r"(.*) ---- Outgoing SIP Message to (.*) from SIPInterface "
+        r"#[0-9] \((.*)\) (.*) TO\(#.*\) ----  (.*)()"),
+    "7.20A.256.511": (
+        r"(.*)---- Incoming SIP Message from (.*) to SIPInterface "
+        r"#[0-9] \((.*)\) (.*) TO.*---  (.*)()",
+        r"(.*)---- Outgoing SIP Message to (.*) from SIPInterface "
+        r"#[0-9] \((.*)\) (.*) TO.*---  (.*)()"),
+    "7.20A.260.012": (
+        r"(.*)---- Incoming SIP Message from (.*) to SIPInterface "
+        r"#[0-9] \((.*)\) (.*) TO.*---\s?#012(.*)#012\s?#012(.*)",
+        r"(.*)---- Outgoing SIP Message to (.*) from SIPInterface "
+        r"#[0-9] \((.*)\) (.*) TO.*---\s?#012(.*)#012\s?#012 (.*)"),
+}
+
+# the reference's /(\s+\|)/ pipe tokenizer (:297) as one regex pass: each
+# match is a separator plus the token after it, whose group 1 is the token
+# stripped of spaces when that leaves more than 1 character, else ''.
+# Leading spaces stay with the next separator when a '|' follows them.
+# \s is Java's default ASCII class, [ \t\n\x0B\f\r] (the reference's JS
+# \s would also split at a Unicode space before a '|').
+_AC_TOKEN = (r"(?s)\s+\|(?: ++(?!\|))?(?:((?!\s+\|)[^ ](?:(?!\s+\|).)+?"
+             r"(?<! ))|(?:(?!\s+\|).)*?) *(?=\s+\||\z)")
 
 
-def _ac_matcher_udf(in_re: str, out_re: str):
-    """ONE Arrow pass evaluating the two heavy audiocodes SIP-message
-    regexes per line and returning every needed group at once — hit
-    (0 none / 1 incoming / 2 outgoing), remote ip:port (group 2), raw
-    payload (group 5) and the trailing group 6 (the reference's ``ip[6]``
-    fragment-seek input) — plus (r06) the ``[S=n]`` sequence and
-    ``[SID=..]`` session id, which the operator previously re-extracted
-    with two more JVM regex passes over every line.  Replaces ~6-8
-    per-row JVM regex evaluations (rlike + per-group regexp_extract,
-    re-run on lag/lead copies) with a single compiled-regex search per
-    line; the patterns are plain ``(.*)``-class expressions, identical
-    under Java and Python `re` semantics (both ``search``, both greedy,
-    ``.`` excludes newline; sid falls back to "" on no match exactly
-    like regexp_extract)."""
-    rin, rout = re.compile(in_re), re.compile(out_re)
-
-    @F.pandas_udf(_AC_STRUCT)
-    def match(s: pd.Series) -> pd.DataFrame:
-        s = s.fillna("")
-        hit = pd.Series(0, index=s.index, dtype="int8")
-        remote = pd.Series(None, index=s.index, dtype="object")
-        raw = pd.Series(None, index=s.index, dtype="object")
-        tail = pd.Series(None, index=s.index, dtype="object")
-        is_in = s.str.contains("Incoming SIP Message", regex=False)
-        # reference branch order: Incoming checked first (elif Outgoing)
-        is_out = ~is_in & s.str.contains("Outgoing SIP Message", regex=False)
-        for mask, rx, code in ((is_in, rin, 1), (is_out, rout, 2)):
-            if not mask.any():
-                continue
-            g = s[mask].str.extract(rx)  # one regex eval per line
-            ok = g[0].notna()
-            idx = g.index[ok]
-            hit.loc[idx] = code
-            remote.loc[idx] = g.loc[idx, 1]
-            raw.loc[idx] = g.loc[idx, 4]
-            tail.loc[idx] = g.loc[idx, 5]
-        seq = pd.array(
-            pd.to_numeric(s.str.extract(r"\[S=([0-9]+)\]", expand=False),
-                          errors="coerce"), dtype="Int64")
-        sid = s.str.extract(r"\[SID=(.*?):(.*?):(.*?)\]")[2].fillna("")
-        # PERF (r06b): the MEDIA_END tokenizer rides the same pass — the
-        # old JVM filter(transform(split)) HOF chain is CodegenFallback
-        # and its guarded column cost ~0.8 s/1M rows interpreted even
-        # with ZERO matching lines.  Same tokens: re.ASCII \s+\| split
-        # (= Java \s), trim = strip(' ') (= F.trim, spaces only),
-        # keep len > 1, then the 25-field drop of idx 15/5 exactly like
-        # the old slice-concat fixup.
-        # [None]*n, not scalar None — pandas coerces a scalar fill to NaN
-        # even at dtype=object, and Arrow can't serialize NaN as a null
-        # list value
-        q = pd.Series([None] * len(s), index=s.index, dtype="object")
-        med = s.str.contains("MEDIA_END ", regex=False)
-        if med.any():
-            for i in s.index[med]:
-                toks = [t for t in
-                        (t0.strip(" ") for t0 in _AC_SPLIT.split(s[i]))
-                        if len(t) > 1]
-                if len(toks) == 25:
-                    toks = toks[0:5] + toks[6:15] + toks[16:25]
-                q[i] = toks
-        return pd.DataFrame(
-            {"hit": hit, "remote": remote, "raw_pay": raw, "tail": tail,
-             "s": seq, "sid": sid, "q": q})
-
-    return match
+def _ac_tokens(line: Column) -> Column:
+    """``line`` split on whitespace + '|', each token stripped of spaces
+    and kept when longer than 1 character; NULL for a NULL line."""
+    return F.array_remove(F.regexp_extract_all(
+        F.concat(F.lit(" |"), line), F.lit(_AC_TOKEN), 1), "")
 
 
-_AC_SPLIT = re.compile(r"\s+\|", re.ASCII)
+def _ac_parse(line: Column, in_re: str, out_re: str) -> Column:
+    """Every field the operator reads from one audiocodes line, as the
+    struct (hit, remote, raw_pay, tail, s, sid, q):
 
-def _ac_native_reparse(mm: Column, in_re: str, out_re: str) -> Column:
-    """Native (JVM, guarded) twin of `_ac_matcher_udf` for the re-parse of
-    reassembled lines: same branch order (Incoming contains-check first),
-    same search semantics, returns the same struct shape with s/sid null
-    (no consumer reads them on the merge path)."""
-    # (?d) = Java UNIX_LINES: `.` excludes only \n, matching Python re's
-    # dot exactly (Java's default dot also excludes \r/ /...)
-    jin, jout = "(?d)" + in_re, "(?d)" + out_re
-    is_in = mm.contains("Incoming SIP Message")
-    is_out = ~is_in & mm.contains("Outgoing SIP Message")
-    # one regex pass per direction: ['', g2, g5, g6] on a match
-    g = (F.when(is_in, regex_groups(mm, jin, (2, 5, 6)))
-         .when(is_out, regex_groups(mm, jout, (2, 5, 6))))
-    hit = (F.when(F.size(g) > 1, F.when(is_in, F.lit(1)).otherwise(F.lit(2)))
-           .otherwise(F.lit(0)).cast("tinyint"))
-    return F.struct(hit.alias("hit"), F.get(g, 1).alias("remote"),
-                    F.get(g, 2).alias("raw_pay"), F.get(g, 3).alias("tail"),
-                    F.lit(None).cast("long").alias("s"),
-                    F.lit(None).cast("string").alias("sid"),
-                    F.lit(None).cast("array<string>").alias("q"))
+      * hit 0 (no message), 1 (Incoming) or 2 (Outgoing) — Incoming is
+        checked first, as the reference's if/elif — and the matched
+        message's remote ``ip:port``, payload and trailing groups (2, 5, 6),
+        one `parse.regex_groups` pass per direction;
+      * s, the ``[S=n]`` sequence (NULL when absent or out of long range);
+      * sid, the ``[SID=mac:seq:sid]`` session ('' when absent);
+      * q, the `_ac_tokens` of a MEDIA_END line.
+
+    ``(?dU)``: `.` excludes only \\n and `\\s` is Unicode whitespace, as in
+    the reference's JS and in Python's `re`."""
+    is_in = line.contains("Incoming SIP Message")
+    is_out = ~is_in & line.contains("Outgoing SIP Message")
+    g = (F.when(is_in, regex_groups(line, "(?dU)" + in_re, (2, 5, 6)))
+         .when(is_out, regex_groups(line, "(?dU)" + out_re, (2, 5, 6))))
+    hit = F.when(F.size(g) > 1, F.when(is_in, 1).otherwise(2)).otherwise(0)
+    sid = F.regexp_extract(line, r"(?d)\[SID=(.*?):(.*?):(.*?)\]", 3)
+    return F.struct(
+        hit.cast("tinyint").alias("hit"), F.get(g, 1).alias("remote"),
+        F.get(g, 2).alias("raw_pay"), F.get(g, 3).alias("tail"),
+        F.regexp_extract(line, r"\[S=([0-9]+)\]", 1).try_cast("long")
+         .alias("s"),
+        F.coalesce(sid, F.lit("")).alias("sid"),
+        F.when(line.contains("MEDIA_END "), _ac_tokens(line)).alias("q"))
 
 
 def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
@@ -1467,9 +1439,9 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
         ``' SIP Message '`` also merges with the next [S=n+1] line and
         emits that SECOND message (chained re-holds — a third message in
         the same line — are not re-held, matching the single-slot model).
-        Both heavy version regexes run ONCE per line inside a single
-        Arrow pass (`_ac_matcher_udf`); lead/lag ride precomputed
-        struct/ tail columns, never regex re-evaluation.
+        One `_ac_parse` serves the line and the reassembled line: each
+        version regex runs once per line in the JVM; lead/lag ride
+        precomputed columns, never regex re-evaluation.
       * ``MEDIA_END`` lines (:294-341, qos=True) split on ``|`` into the
         QoS vector and emit TWO proto_type=35 rows (A-leg / B-leg) whose
         payload is the reference's JSON report — MOS = 4.5*int(q)/127,
@@ -1489,29 +1461,11 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
     # (identical result to the old regexp_replace of the literal pattern,
     # without regex-engine cost per line)
     line0 = F.replace(F.col(field), F.lit("\r\n"), F.lit("#012"))
-    # per-version regex pairs, verbatim from filter_app_audiocodes.js
-    # :151-162/:222-230; any other version string falls back to the
-    # 7.20A.260.012 defaults exactly like the reference's else branch.
     # debug/file_debug/bypass/iniwatch are accepted for recipe
     # compatibility but inert (logging / raw-passthrough knobs);
     # ini/autolocal interface-alias resolution is config-file plumbing —
     # out of scope, pass the resolved values via localip/localport.
-    if version == "7.40A.500":
-        in_re = (r"(.*)---- Incoming SIP Message from (.*) to SIPInterface "
-                 r"#[0-9] \((.*)\) (.*) TO\(#[0-9]\) ----  (.*)()")
-        out_re = (r"(.*) ---- Outgoing SIP Message to (.*) from SIPInterface "
-                  r"#[0-9] \((.*)\) (.*) TO\(#.*\) ----  (.*)()")
-    elif version == "7.20A.256.511":
-        in_re = (r"(.*)---- Incoming SIP Message from (.*) to SIPInterface "
-                 r"#[0-9] \((.*)\) (.*) TO.*---  (.*)()")
-        out_re = (r"(.*)---- Outgoing SIP Message to (.*) from SIPInterface "
-                  r"#[0-9] \((.*)\) (.*) TO.*---  (.*)()")
-    else:
-        in_re = (r"(.*)---- Incoming SIP Message from (.*) to SIPInterface "
-                 r"#[0-9] \((.*)\) (.*) TO.*---\s?#012(.*)#012\s?#012(.*)")
-        out_re = (r"(.*)---- Outgoing SIP Message to (.*) from SIPInterface "
-                  r"#[0-9] \((.*)\) (.*) TO.*---\s?#012(.*)#012\s?#012 (.*)")
-    matcher = _ac_matcher_udf(in_re, out_re)
+    in_re, out_re = _AC_SIP_RES.get(version, _AC_SIP_RES["7.20A.260.012"])
 
     # ``key`` partitions the reassembly stream (one device/file per
     # partition — pass e.g. ["path"]); ``partition_by_sid`` (the DEFAULT)
@@ -1530,9 +1484,7 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
              else Window.partitionBy()).orderBy(F.col(order))
     tail_re = r".*\[S=[0-9]+\].*?\[SID=.*?\]\s?(.*)\[Time:.*\]"
     base = (df.select(*(key or ()), F.col(order), line0.alias("_l"))
-            .withColumn("_p", matcher(F.col("_l")))
-            # seq + sid come out of the same Arrow pass (was two more
-            # JVM regex evaluations per line)
+            .withColumn("_p", _ac_parse(F.col("_l"), in_re, out_re))
             .withColumn("_s", F.col("_p.s"))
             .withColumn("sid", F.col("_p.sid")))
     is_sipline = (F.col("_l").contains("Incoming SIP Message")
@@ -1581,20 +1533,9 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
             # window-expression conditions must be materialized before any
             # .filter can reference them (no window funcs in WHERE)
             .withColumn("_refrag_ok", refrag_cond)
-            # PERF (r06b): the reassembled-string re-parse is NATIVE
-            # guarded regex now, not a second Arrow pass — the old matcher
-            # call round-tripped every row through Python (1M-row Arrow
-            # serialization) to parse only the rare merged lines.  The when()
-            # guards make its one regex pass per direction evaluate ONLY on
-            # rows where merge_cond|refrag_cond holds (codegen branches are
-            # lazy); the operator already relies on these patterns being
-            # semantically identical under Java and Python `re` (both
-            # search, both greedy, `.` excludes newline), and the `(.*)`
-            # groups always participate, so a capture reads '' only when
-            # it is empty, exactly like the UDF's.  Fields
-            # s/sid are null — no _pf consumer reads them (non-merge rows
-            # take _p's real values through the otherwise branch).
-            .withColumn("_pm", _ac_native_reparse(
+            # the re-parse reads NULL, so costs nothing, on every row
+            # but the rare merged ones
+            .withColumn("_pm", _ac_parse(
                 F.when(merge_cond | refrag_cond, merged), in_re, out_re)))
     base = base.withColumn(
         "_pf", F.when(merge_cond, F.col("_pm")).otherwise(F.col("_p")))
@@ -1623,14 +1564,11 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
         F.coalesce(F.col("_ph") & (F.col("_ps") == F.col("_s") - 1),
                    F.lit(False)))
 
-    # PERF (r06): ONE pass over `base` instead of three — the primary SIP
-    # emission, the re-hold second message and (qos) both MEDIA_END legs
-    # become four nullable struct SLOTS exploded from a single array; the
-    # previous unionByName branches each re-ran the whole scan + Arrow
-    # matcher + lead/lag window subtree (plan showed it triplicated).
-    # Slot values/conditions are byte-identical to the old branch
-    # filters/selects; a null slot (condition false/null) is dropped after
-    # the explode exactly as the old .filter dropped its row.
+    # ONE pass over `base`: the primary SIP emission, the re-hold second
+    # message and (qos) both MEDIA_END legs are four nullable struct SLOTS
+    # exploded from a single array — a union of branches would re-run the
+    # scan, parse and window subtree per branch.  A null slot (condition
+    # false/null) is dropped after the explode.
     def _sip_struct(hit: Column, remote: Column, raw_pay: Column,
                     extra_filter: Column) -> Column:
         """proto_type=1 SIP slot from one parsed (hit, remote, raw_pay)
@@ -1692,22 +1630,21 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
                    "src_port", "dst_ip", "dst_port", "protocol"]
 
     if qos:
-        # MEDIA_END: split on whitespace+pipe like the reference's
-        # /(\s+\|)/ tokenizer (:297) — a '|' NOT preceded by whitespace
-        # stays inside its field; 25-field variants drop idx 15 then idx 5
-        # (:299-302) so both shapes index identically.  Divergence (doc'd):
-        # we trim each token, the reference keeps a leading space when the
-        # separator has trailing whitespace (' | b' -> ' b') — real
-        # MEDIA_END vectors use 'field |field' so the planes agree.
-        # PERF (r06b): the tokens come pre-split from the Arrow matcher
-        # pass (`_p.q`, MEDIA_END lines only) — the old JVM
-        # filter(transform(split)) HOF chain was CodegenFallback and its
-        # guarded column cost ~0.8 s per 1M rows interpreted even with
-        # zero MEDIA_END lines.  The matcher tokenizes the RAW line;
-        # `_line` differs only for reassembled SIP fragments, which are
-        # never MEDIA_END records (doc'd divergence class as above).
-        base = base.withColumn(
-            "_q", F.when(~F.col("_consumed"), F.col("_qraw")))
+        # MEDIA_END: the `_ac_tokens` of the raw line (`_p.q`; `_line`
+        # differs only for reassembled SIP fragments, never MEDIA_END
+        # records) — a '|' NOT preceded by whitespace stays inside its
+        # field; 25-field variants drop idx 15 then idx 5 (:299-302) so
+        # both shapes index identically.  Divergence (doc'd): we trim each
+        # token, the reference keeps a leading space when the separator
+        # has trailing whitespace (' | b' -> ' b') — real MEDIA_END
+        # vectors use 'field |field' so the planes agree.
+        qraw = F.col("_qraw")
+        base = base.withColumn("_q", F.when(
+            ~F.col("_consumed"),
+            F.when(F.size(qraw) == 25,
+                   F.concat(F.slice(qraw, 1, 5), F.slice(qraw, 7, 9),
+                            F.slice(qraw, 17, 9)))
+            .otherwise(qraw)))
         q = F.col("_q")
         media_ok = ((F.size(q) > 21)
                     & (F.get(q, 2) != "")
@@ -1762,12 +1699,9 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
     outs = [core]
 
     if logs:
-        cdr_toks = F.filter(
-            F.transform(F.split(l, r"\s+\|"), lambda x: F.trim(x)),
-            lambda x: F.length(x) > 1)
         call_end = (base.filter(l.contains("CALL_END ")
                                 & ~F.col("_consumed"))
-                    .withColumn("_cdr", cdr_toks)
+                    .withColumn("_cdr", _ac_tokens(l))
                     .select(
             F.col(order), "sid", F.lit(100).alias("proto_type"),
             F.to_json(F.col("_cdr")).alias("payload"),

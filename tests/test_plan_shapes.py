@@ -167,11 +167,15 @@ def test_audiocodes_default_is_sid_partitioned_no_global_window(spark):
     df = spark.createDataFrame([(1, "x")], "line_no long, message string")
     plan = _plan(app_audiocodes_correlate(df, order="line_no"))
     assert "Exchange SinglePartition" not in plan
-    # exactly ONE ArrowEvalPython pass feeds the parse (the matcher UDF
-    # batch).  The reassembly re-parse runs as NATIVE regex guarded by
-    # merge_cond (r06b) — it must never come back as a second Arrow
-    # round-trip over every row.
-    assert plan.count("ArrowEvalPython") == 1
+    # the line parse and the reassembly re-parse run in the JVM: no Python
+    # evaluation node, and (logs=True adds the CALL_END tokenizer) no
+    # higher-order function, which would run interpreted
+    plan_logs = _plan(app_audiocodes_correlate(df, order="line_no",
+                                               logs=True))
+    for p in (plan, plan_logs):
+        for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas",
+                     "lambdafunction"):
+            assert node not in p, node
 
 
 def test_rtpproxy_lookups_are_asof_windows_not_joins(spark):

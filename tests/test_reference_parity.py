@@ -1230,6 +1230,50 @@ class TestAppAudiocodes:
         assert ("10.0.0.5", 6000, "10.0.0.6", 7000) in srcs
         assert ("10.0.0.6", 7000, "10.0.0.5", 6000) in srcs
 
+    def test_media_end_25_fields_drop_idx_5_and_15(self, spark):
+        # a 25-field vector drops fields 5 and 15 (:299-302), so both QoS
+        # legs read the same fields as the 23-field line
+        toks = ["f%02d" % i for i in range(23)]
+        toks[2], toks[4], toks[5] = "cid-9", "RTP1", "G711"
+        toks[7], toks[8], toks[9], toks[10] = ("10.0.0.5", "6000",
+                                               "10.0.0.6", "7000")
+        toks[11], toks[12], toks[17], toks[18] = "1000", "2000", "127", "64"
+        wide = toks[:5] + ["x5"] + toks[5:14] + ["x15"] + toks[14:]
+
+        def line(sid, ts):
+            return (f"[S=9] [SID=ac1:12:{sid}] MEDIA_END " + ts[0]
+                    + " |" + " |".join(ts[1:]))
+
+        rows = self._run(spark, [line(23, toks), line(25, wide)], qos=True)
+        legs = {ln: sorted((r.payload, r.correlation_id, r.src_ip,
+                            r.src_port, r.dst_ip, r.dst_port)
+                           for r in rows if r.line_no == ln)
+                for ln in (1, 2)}
+        assert len(legs[1]) == 2 and legs[1] == legs[2]
+        assert all(r.proto_type == 35 for r in rows)
+
+    def test_call_end_row_under_logs(self, spark):
+        line = ("[S=3] [SID=ac1:12:555] CALL_END |a1 |b2 |cid-x | e |f6  "
+                "|g|h")
+        rows = self._run(spark, [line], logs=True)
+        assert len(rows) == 1
+        r = rows[0]
+        import json
+        assert r.proto_type == 100
+        assert json.loads(r.payload) == [
+            "[S=3] [SID=ac1:12:555] CALL_END", "a1", "b2", "cid-x", "f6",
+            "g|h"]
+        assert r.correlation_id == "cid-x"
+
+    def test_sequence_past_long_range_still_emits(self, spark):
+        # an [S=n] above 2^63 reads as a NULL sequence: the line emits its
+        # SIP row and merges with nothing
+        big = self.IN_LINE.replace("[S=5]", "[S=99999999999999999999]")
+        rows = self._run(spark, [big, self.OUT_LINE])
+        got = sorted((r.line_no, r.proto_type, r.correlation_id)
+                     for r in rows)
+        assert got == [(1, 1, "cid-77"), (2, 1, "cid-77")]
+
     def test_log_lines_resolve_via_sidcache(self, spark):
         log1 = "[S=9] [SID=ac1:12:777] some device log chatter"
         rows = self._run(spark, [self.IN_LINE, log1], logs=True, qos=False,
