@@ -85,8 +85,8 @@ def forward_fill_correlation(df: DataFrame, *, key: str | Sequence[str],
     """esl-style correlation-id propagation (filter_esl.js:144-204): the id
     captured at CHANNEL_CREATE is carried to every later event of the call —
     an ``asof_lookup`` where every non-null ``value`` publishes."""
-    return asof_lookup(df, key=key, order=order, is_set=F.lit(True),
-                       value=F.col(value), target=target)
+    return asof_lookup(df, key=key, order=order,
+                       values={target: F.col(value)})
 
 
 def bleg_correlation(df: DataFrame, *, key: str = "unique_id",
@@ -355,7 +355,7 @@ def app_sonus_reassemble(df: DataFrame, *, source: str = "path",
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     direction = F.when(
         F.col(field).rlike("sending from|Incoming message"), F.col(field))
-    ctx = df.withColumn("_dir", F.last(direction, ignorenulls=True).over(w))
+    ctx = asof_lookup(df, key=source, order=order, values={"_dir": direction})
     # blank line closes a message; running count of blanks = message group
     grp = F.sum((F.trim(F.col(field)) == "").cast("int")).over(w)
     grouped = (ctx.withColumn("_grp", grp)
@@ -653,17 +653,14 @@ def app_avaya_correlate(df: DataFrame, *, field: str = "message",
             r"#012--------------------", ""),
         r"SIPMSGT\+ "), 1)
 
-    w = (Window.partitionBy(*key) if key else Window.partitionBy()) \
-        .orderBy(F.col(order))
-    base = (df.select(*key, F.col(order),
+    lines = df.select(*key, F.col(order),
                       F.regexp_replace(F.col(field), r"\r\n", "#012")
                       .alias("_m"))
+    base = (asof_lookup(lines, key=key, order=order, values={
+                "_blk_ord": F.when(is_block & full.isNotNull(),
+                                   F.col(order))})
             .withColumn("_is_block", is_block)
             .withColumn("_is_cont", is_cont)
-            .withColumn("_blk_ord",
-                        F.last(F.when(is_block & full.isNotNull(),
-                                      F.col(order)),
-                               ignorenulls=True).over(w))
             .filter((F.col("_is_block") & full.isNotNull())
                     | F.col("_is_cont")))
     pieces = F.when(F.col("_is_block"), full).otherwise(cont_tail)
@@ -675,13 +672,10 @@ def app_avaya_correlate(df: DataFrame, *, field: str = "message",
                        F.struct(F.col(order).alias("o"),
                                 F.col("_piece").alias("p")))).getField("p"))
                    .alias("_buf")))
-    w_blk = (Window.partitionBy(*key) if key else Window.partitionBy()) \
-        .orderBy(F.col("_blk_ord"))
     ranked = (grouped
-              .withColumn("_rk", F.row_number().over(w_blk))
-              .withColumn("_n", F.count("*").over(
-                  Window.partitionBy(*key) if key
-                  else Window.partitionBy())))
+              .withColumn("_rk", F.row_number().over(
+                  Window.partitionBy(*key).orderBy(F.col("_blk_ord"))))
+              .withColumn("_n", F.count("*").over(Window.partitionBy(*key))))
     emit = ranked.filter((F.col("_rk") % 2 == 1)
                          & (F.col("_rk") < F.col("_n")))
 
@@ -771,14 +765,11 @@ def app_ingate_correlate(df: DataFrame, *, field: str = "message",
             g(recv_re, 1).alias("sip_"), g(recv_re, 2).alias("sport"),
             g(recv_re, 3).alias("dip"), g(recv_re, 4).alias("dport"),
             g(recv_re, 5).alias("proto")))
-    base = df.withColumn("_pub", pub)
-    w = (Window.partitionBy(*key) if key else Window.partitionBy()) \
-        .orderBy(F.col(order))
-    filled = F.last("_pub", ignorenulls=True).over(w)
     cols = [F.col(order)]
     if ts:
         cols.append(F.col(ts))
-    base = base.select(*cols, msg.alias("_m"), filled.alias("_rc"))
+    base = asof_lookup(df, key=key, order=order, values={"_rc": pub}) \
+        .select(*cols, msg.alias("_m"), "_rc")
 
     @F.pandas_udf("string")
     def assemble(s: pd.Series) -> pd.Series:
@@ -875,22 +866,14 @@ def app_cisco_correlate(df: DataFrame, *, field: str = "message",
         r"\s.*SIP/Msg/ccsipDisplayMsg:\n(Sent|Received):\n", ""),
         F.lit("\r\n"))
 
-    base = df.withColumn("_f", F.struct(
-        F.when(cid.isNotNull(), cid).alias("cid"),
-        F.when(src.isNotNull() & (src != ""), src).alias("src"),
-        F.when(dst.isNotNull() & (dst != ""), dst).alias("dst"),
-        ts_sec.alias("tsec")))
-    w = (Window.partitionBy(*key) if key else Window.partitionBy()) \
-        .orderBy(F.col(order))
-
-    def ff(name):
-        return F.last(F.col("_f." + name), ignorenulls=True).over(w)
-
-    sec = ff("tsec")
+    base = asof_lookup(df, key=key, order=order, values={
+        "_cid": cid, "_src": F.when(src != "", src),
+        "_dst": F.when(dst != "", dst), "_tsec": ts_sec})
+    sec = F.col("_tsec")
     return base.select(
         F.col(order), dev.alias("host"), payload.alias("payload"),
-        F.coalesce(ff("cid"), F.lit("")).alias("correlation_id"),
-        ff("src").alias("src_ip"), ff("dst").alias("dst_ip"),
+        F.coalesce(F.col("_cid"), F.lit("")).alias("correlation_id"),
+        F.col("_src").alias("src_ip"), F.col("_dst").alias("dst_ip"),
         F.floor(sec).cast("long").alias("ts_sec"),
         F.round((sec - F.floor(sec)) * 1000000).cast("long")
         .alias("ts_usec"),
@@ -978,7 +961,6 @@ def janus_trace_spans(df: DataFrame, *, order: str = "event_id",
 
     tk = F.when(t.isin(128, 256), F.concat(F.lit("em:"), F.coalesce(
         emitter, F.lit("")))).otherwise(F.col(session).cast("string"))
-    w = Window.partitionBy("_tk").orderBy(F.col(order))
     ts_c = F.col("_ts")
 
     open_sess = (t == 1) & (name_ev == "created")
@@ -990,9 +972,8 @@ def janus_trace_spans(df: DataFrame, *, order: str = "event_id",
     open_ice = (t == 16) & (sub == 1) & (ice == "gathering")
     close_ice = (t == 16) & (sub == 1) & (ice == "ready")
 
-    def ffill(fam: int, val: Column) -> Column:
-        return F.last(F.when(F.col("_ofl") == fam, val),
-                      ignorenulls=True).over(w)
+    def opened(fam: int, val: Column) -> Column:
+        return F.when(F.col("_ofl") == fam, val)
 
     ice16 = (t == 16) & sub.isin(2, 3, 4, 5, 6)
     ice16_name = (
@@ -1049,22 +1030,12 @@ def janus_trace_spans(df: DataFrame, *, order: str = "event_id",
          .when((t == 256) & (sub == 2), F.lit("Shutdown")))
         .alias("_pname"))
 
-    # PERF (r06): all seven forward-fills in ONE select — chained
-    # withColumn calls leave Project nodes between the Window operators,
-    # which defeats CollapseWindow and ran SEVEN sequential Window passes
-    # over the exploded stream (one sort, but 7 full running-aggregate
-    # iterations).  A single projection puts all last()-over-w expressions
-    # into one Window operator; values are unchanged (same spec, same
-    # frame, independent expressions).
-    base = pre.select(
-        "*",
-        ffill(3, ts_c).alias("_sess_ts"),
-        ffill(0, F.col(order)).alias("_att_ord"),
-        ffill(0, ts_c).alias("_att_ts"),
-        ffill(1, F.col(order)).alias("_sdp_ord"),
-        ffill(1, ts_c).alias("_sdp_ts"),
-        ffill(2, F.col(order)).alias("_ice_ord"),
-        ffill(2, ts_c).alias("_ice_ts"))
+    # each family's open (order, ts), carried to its close
+    base = asof_lookup(pre, key="_tk", order=order, values={
+        "_sess_ts": opened(3, ts_c),
+        "_att_ord": opened(0, F.col(order)), "_att_ts": opened(0, ts_c),
+        "_sdp_ord": opened(1, F.col(order)), "_sdp_ts": opened(1, ts_c),
+        "_ice_ord": opened(2, F.col(order)), "_ice_ts": opened(2, ts_c)})
 
     # PERF (r06): every deterministic id is computed ONCE per row as a
     # named column (the old per-branch span structs re-derived the same
@@ -1480,8 +1451,7 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
     seq_keys = list(key or ())
     if partition_by_sid:
         seq_keys.append("sid")
-    w_seq = (Window.partitionBy(*seq_keys) if seq_keys
-             else Window.partitionBy()).orderBy(F.col(order))
+    w_seq = Window.partitionBy(*seq_keys).orderBy(F.col(order))
     tail_re = r".*\[S=[0-9]+\].*?\[SID=.*?\]\s?(.*)\[Time:.*\]"
     base = (df.select(*(key or ()), F.col(order), line0.alias("_l"))
             .withColumn("_p", _ac_parse(F.col("_l"), in_re, out_re))

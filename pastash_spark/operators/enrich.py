@@ -5,19 +5,22 @@ The reference enriches via per-filter LRU caches around expensive lookups
 (/root/reference/lib/lib/cache_helper.js:30-47).  The Spark-native shape is a
 **broadcast hash join** against the lookup table — build side shipped once per
 executor, probe side streamed through codegen; the cache disappears because
-the "lookup" is a hash probe.  For keyed mutable state (the lru/gun set/get
-correlation pattern) the batch equivalent is an ordered window
-``last(value) ignorenulls`` — an as-of lookup (``asof_lookup`` on one
-stream, ``asof_join`` when the writers and readers are separate frames).
+the "lookup" is a hash probe; a range table probes through a prefix-bucket
+equi-join (``range_lookup``).  For keyed mutable state (the lru/gun set/get
+correlation pattern, and every carried-context forward fill such as the
+ipcache of the app_* reassemblers) the batch equivalent is an ordered window
+``last(value) ignorenulls`` — an as-of lookup: ``asof_lookup`` on one stream
+(any number of targets in one Window operator), ``asof_join`` when the
+writers and readers are separate frames.
 """
 
 from __future__ import annotations
 
-from typing import Iterator, Sequence
+from typing import Iterator, Mapping, Sequence
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -36,46 +39,31 @@ def broadcast_lookup(df: DataFrame, lookup: DataFrame, on: str | Sequence[str],
 
 
 def range_lookup(df: DataFrame, ranges: DataFrame, value_col: str,
-                 lo_col: str = "range_start", hi_col: str = "range_end") -> DataFrame:
-    """IP-range style enrichment: value BETWEEN lo AND hi against a broadcast
-    range table (the maxmind geoip block-file model, filter_geoip.js:88-143).
-    Broadcast keeps it a nested-loop probe per executor — fine for the
-    classic ~300k-block geo table; beyond that, bucketize the value into a
-    prefix key first and equi-join on the prefix."""
-    cond = (F.col(value_col) >= ranges[lo_col]) & (F.col(value_col) <= ranges[hi_col])
-    return df.join(F.broadcast(ranges), on=cond, how="left")
-
-
-def range_lookup_bucketed(df: DataFrame, ranges: DataFrame, value_col: str,
-                          lo_col: str = "range_start",
-                          hi_col: str = "range_end", *,
-                          bucket_bits: int = 16,
-                          broadcast: bool = True,
-                          how: str = "left") -> DataFrame:
-    """Equi-join formulation of the range join — the scale path when the
-    range table outgrows a nested-loop probe (a real maxmind block file is
-    3-4M ranges; BNLJ would evaluate facts x ranges).
+                 lo_col: str = "range_start", hi_col: str = "range_end", *,
+                 bucket_bits: int = 16) -> DataFrame:
+    """IP-range style enrichment: value BETWEEN lo AND hi against a
+    broadcast range table (the maxmind geoip block-file model,
+    filter_geoip.js:88-143), left join — facts outside every range keep
+    NULL attributes.
 
     Each range explodes to the fixed-width prefix buckets it covers
     (bucket = value >> bucket_bits, the /16-style trick for IPv4-as-int);
     facts compute their own bucket, and the join becomes a plain HASH
     equi-join on the bucket with BETWEEN as a residual filter — never a
-    BroadcastNestedLoopJoin (pinned by test_plan_shapes).  Non-overlapping
-    ranges (the geoip block contract) give <= 1 match per fact, so row
-    multiplicity is preserved.  ``broadcast=False`` falls back to a shuffle
-    hash join for expanded range tables too big to broadcast.
+    BroadcastNestedLoopJoin, which would evaluate facts x ranges (a real
+    maxmind block file is 3-4M ranges; pinned by test_plan_shapes).
+    Non-overlapping ranges (the geoip block contract) give <= 1 match per
+    fact, so row multiplicity is preserved.
     """
     v = F.col(value_col).cast("long")
-    r = ranges.withColumn(
+    r = F.broadcast(ranges.withColumn(
         "_bkt", F.explode(F.sequence(
             F.shiftright(F.col(lo_col).cast("long"), bucket_bits),
-            F.shiftright(F.col(hi_col).cast("long"), bucket_bits))))
-    if broadcast:
-        r = F.broadcast(r)
+            F.shiftright(F.col(hi_col).cast("long"), bucket_bits)))))
     fact = df.withColumn("_bkt", F.shiftright(v, bucket_bits))
     cond = ((fact["_bkt"] == r["_bkt"]) &
             (v >= r[lo_col]) & (v <= r[hi_col]))
-    return fact.join(r, on=cond, how=how) \
+    return fact.join(r, on=cond, how="left") \
         .drop(fact["_bkt"]).drop(r["_bkt"])
 
 
@@ -150,21 +138,29 @@ def _names(cols: str | Sequence[str]) -> list[str]:
 
 
 def asof_lookup(df: DataFrame, *, key: str | Sequence[str],
-                order: str | Sequence[str], is_set, value,
-                target: str) -> DataFrame:
+                order: str | Sequence[str],
+                values: Mapping[str, Column]) -> DataFrame:
     """The lru/gun set→get correlation pattern as a window as-of lookup
-    (filter_lru.js:27-43, gun_helper.js:4-37): rows where ``is_set`` holds
-    publish ``value`` under ``key``; every row reads the latest published
-    value at its position in ``order`` (its own value included).
+    (filter_lru.js:27-43, gun_helper.js:4-37), and every carried-context
+    forward fill (the ipcache of sonus/avaya/ingate/cisco, janus's open
+    spans): each ``values`` entry maps a target column to the value a row
+    publishes under ``key`` (NULL publishes nothing); every row reads, per
+    target, the latest published value at its position in ``order`` (its
+    own publication included).  Targets fill independently: a row that
+    publishes one target leaves the others at their earlier values.
 
-    last(value) ignorenulls over (partition by key order by order) — one
-    shuffle on the key, no driver state.  TTL semantics (maxAge) belong to
+    last(value) ignorenulls over (partition by key order by order ROWS
+    UNBOUNDED PRECEDING) — one shuffle on the key, no driver state.  All
+    targets go in ONE ``withColumns``: chained ``withColumn`` calls over
+    computed values leave a Project between the Window operators, which
+    defeats CollapseWindow and runs one sequential Window pass per target.  ``order`` must be unique
+    per key for a deterministic result.  TTL semantics (maxAge) belong to
     the streaming variant (streaming/state.py) where watermarks bound state.
     """
     w = (Window.partitionBy(*_names(key)).orderBy(*_names(order))
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-    published = F.when(is_set, value)
-    return df.withColumn(target, F.last(published, ignorenulls=True).over(w))
+    return df.withColumns({t: F.last(v, ignorenulls=True).over(w)
+                           for t, v in values.items()})
 
 
 def asof_join(probe: DataFrame, build: DataFrame, *,

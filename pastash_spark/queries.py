@@ -20,6 +20,7 @@ from pastash_spark.operators import correlate as C
 from pastash_spark.operators import mutate as M
 from pastash_spark.operators import parse as P
 from pastash_spark.operators import route as R
+from pastash_spark.operators.correlate import _epoch
 from pastash_spark.operators.enrich import asof_lookup, broadcast_lookup
 from pastash_spark.session import local_frame
 
@@ -102,11 +103,6 @@ def _t(spark: SparkSession, sf_dir: str, table: str,
         # the key — one exchange instead of two).
         df = df.repartition(int(target), F.col(key or _SPLIT_KEY[table]))
     return df
-
-
-def _epoch(c):
-    """Epoch seconds robust to TIMESTAMP_NTZ (session TZ pinned to UTC)."""
-    return c.cast("timestamp").cast("double")
 
 
 # =========================================================================
@@ -289,9 +285,9 @@ def q_asof_lru(spark, sf_dir):
     # split-shuffle keyed on the window key — the scan split IS the
     # window's exchange (one shuffle total)
     ev = _t(spark, sf_dir, "events", key="user_id")
+    signup = F.when(F.col("event_type") == "signup", F.col("value"))
     return asof_lookup(ev, key="user_id", order=["ts", "event_id"],
-                       is_set=F.col("event_type") == "signup",
-                       value=F.col("value"), target="last_signup_value") \
+                       values={"last_signup_value": signup}) \
         .select("event_id", "last_signup_value")
 
 
@@ -332,14 +328,11 @@ FROM (
 GROUP BY user_id
 """)
 def q_sessionize(spark, sf_dir):
-    from pyspark.sql import Window
+    # no event_id tiebreak needed: of rows sharing a ts, only the first in
+    # the window's order can open a session (the rest see a 0 s gap), so the
+    # per-user session count is the same under any tie order
     ev = _t(spark, sf_dir, "events", key="user_id")
-    # deterministic tiebreak on event_id to match the oracle exactly
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    prev = F.lag("ts").over(w)
-    new_sess = (prev.isNull() | (_epoch(F.col("ts")) - _epoch(prev) > 1800)).cast("int")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sess = ev.withColumn("session_id", F.sum(new_sess).over(run))
+    sess = C.sessionize(ev, key="user_id", gap_seconds=1800)
     return sess.groupBy("user_id").agg(
         F.max("session_id").alias("n_sessions"),
         F.count("*").alias("n_events"))
@@ -574,15 +567,15 @@ FROM events
 def q_geoip_range(spark, sf_dir):
     """The maxmind block-file pattern, in its SCALE shape: ranges explode
     to prefix buckets and the lookup is a hash EQUI-join on the bucket with
-    BETWEEN residual (range_lookup_bucketed) — never a nested-loop probe of
+    BETWEEN residual (range_lookup) — never a nested-loop probe of
     every fact against every range; gaps stay NULL."""
-    from pastash_spark.operators.enrich import range_lookup_bucketed
+    from pastash_spark.operators.enrich import range_lookup
     ev = _t(spark, sf_dir, "events").withColumn(
         "ip_int", F.col("event_id") % 100000)
     ranges = local_frame(
         spark, [(i * 10000, i * 10000 + 4999, f"net-{i}") for i in range(10)],
         "range_start long, range_end long, geo_name string")
-    out = range_lookup_bucketed(ev, ranges, "ip_int", bucket_bits=12)
+    out = range_lookup(ev, ranges, "ip_int", bucket_bits=12)
     return out.select("event_id", "geo_name")
 
 

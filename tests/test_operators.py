@@ -544,9 +544,8 @@ def test_asof_lookup_set_get(spark):
         [("k", 1, "set", "v1"), ("k", 2, "get", None), ("k", 3, "get", None),
          ("k", 4, "set", "v2"), ("k", 5, "get", None)],
         "key string, t int, action string, value string")
-    out = E.asof_lookup(df, key="key", order="t",
-                        is_set=F.col("action") == "set",
-                        value=F.col("value"), target="got")
+    out = E.asof_lookup(df, key="key", order="t", values={
+        "got": F.when(F.col("action") == "set", F.col("value"))})
     got = {r.t: r.got for r in out.collect()}
     assert got == {1: "v1", 2: "v1", 3: "v1", 4: "v2", 5: "v2"}
     # a multi-column order breaks ties on t: the set at (5, 1) is seen by
@@ -556,10 +555,26 @@ def test_asof_lookup_set_get(spark):
         "key string, t int, s int, value string").unionByName(
             df.drop("action").withColumn("s", F.lit(0)))
     out = E.asof_lookup(ties, key="key", order=["t", "s"],
-                        is_set=F.col("value").isNotNull(),
-                        value=F.col("value"), target="got")
+                        values={"got": F.col("value")})
     got = {(r.t, r.s): r.got for r in out.collect()}
     assert got[(5, 0)] == "v2" and got[(5, 2)] == "v3"
+
+
+def test_asof_lookup_targets_fill_independently(spark):
+    # src and dst publish on interleaved rows: a row publishing src alone
+    # keeps the earlier dst, and both targets share one Window operator
+    df = spark.createDataFrame(
+        [("k", 1, "a", "x"), ("k", 2, "b", None), ("k", 3, None, None),
+         ("k", 4, None, "y"), ("k", 5, "c", None), ("j", 1, None, "z")],
+        "key string, t int, s string, d string")
+    out = E.asof_lookup(df, key="key", order="t",
+                        values={"src": F.col("s"), "dst": F.col("d")})
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert len(re.findall(r"(?m)^\W*Window \[", plan)) == 1
+    got = {(r.key, r.t): (r.src, r.dst) for r in out.collect()}
+    assert got == {("k", 1): ("a", "x"), ("k", 2): ("b", "x"),
+                   ("k", 3): ("b", "x"), ("k", 4): ("b", "y"),
+                   ("k", 5): ("c", "y"), ("j", 1): (None, "z")}
 
 
 def test_asof_join_strictly_prior_and_consume(spark):

@@ -9,6 +9,8 @@ a benchmark would catch it.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,6 +21,11 @@ from pastash_spark.plans import flagship
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _windows(plan: str) -> int:
+    """Number of Window operators in a plan string."""
+    return len(re.findall(r"(?m)^\W*Window \[", plan))
 
 
 def _optimized(df) -> str:
@@ -240,8 +247,36 @@ def test_janus_trace_spans_single_window_shuffle(spark):
         "event_name string")
     plan = _plan(janus_trace_spans(df, order="ord", ts="ts_us"))
     assert plan.count("Exchange hashpartitioning") == 1
+    assert _windows(plan) == 1
     assert "Exchange SinglePartition" not in plan
     assert "SortMergeJoin" not in plan and "BroadcastHashJoin" not in plan
+
+
+def test_carried_context_fills_are_row_frames(spark):
+    """Every carried-context forward fill goes through enrich.asof_lookup:
+    a ROWS UNBOUNDED PRECEDING frame, never the RANGE frame a bare
+    ordered window defaults to (a RANGE frame reads rows that tie on the
+    order column too).  All of an operator's fills share one Window node,
+    and its Window and Exchange counts are pinned."""
+    from pastash_spark.operators import correlate as C
+    lines = spark.createDataFrame(
+        [(1, "p1", "h1", "x")],
+        "line_no long, path string, host string, message string")
+    janus = spark.createDataFrame(
+        [(1, 10, "s1", 1, 0, "created")],
+        "ord long, ts_us long, session_id string, type int, subtype int, "
+        "event_name string")
+    plans = {
+        "sonus": (_plan(C.app_sonus_reassemble(lines.drop("host"))), 2),
+        "avaya": (_plan(C.app_avaya_correlate(lines.drop("host"))), 3),
+        "ingate": (_plan(C.app_ingate_correlate(lines.drop("host"))), 1),
+        "cisco": (_plan(C.app_cisco_correlate(lines.drop("path"))), 1),
+        "janus": (_plan(C.janus_trace_spans(janus, order="ord",
+                                            ts="ts_us")), 1)}
+    for op, (plan, n_windows) in plans.items():
+        assert "RangeFrame" not in plan, op
+        assert _windows(plan) == n_windows, op
+        assert plan.count("Exchange") == 1, op
 
 
 def test_salted_aggregate_is_two_stage(spark):
@@ -346,12 +381,12 @@ def test_range_lookup_bucketed_is_hash_join_not_nlj(spark):
     """The prefix-bucketed range join must plan as a HASH equi-join on the
     bucket (BETWEEN as residual) — a BroadcastNestedLoopJoin would probe
     every fact against every range (3-4M ranges in a real geo table)."""
-    from pastash_spark.operators.enrich import range_lookup_bucketed
+    from pastash_spark.operators.enrich import range_lookup
     df = spark.range(1000).select(F.col("id").alias("v"))
     ranges = spark.createDataFrame(
         [(i * 100, i * 100 + 49, f"r{i}") for i in range(10)],
         "range_start long, range_end long, name string")
-    out = range_lookup_bucketed(df, ranges, "v", bucket_bits=6)
+    out = range_lookup(df, ranges, "v", bucket_bits=6)
     plan = _plan(out)
     assert "BroadcastNestedLoopJoin" not in plan
     assert "CartesianProduct" not in plan
