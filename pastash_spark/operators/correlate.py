@@ -355,18 +355,24 @@ def app_sonus_reassemble(df: DataFrame, *, source: str = "path",
          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
     direction = F.when(
         F.col(field).rlike("sending from|Incoming message"), F.col(field))
-    ctx = asof_lookup(df, key=source, order=order, values={"_dir": direction})
-    # blank line closes a message; running count of blanks = message group
-    grp = F.sum((F.trim(F.col(field)) == "").cast("int")).over(w)
-    grouped = (ctx.withColumn("_grp", grp)
-               .filter(F.trim(F.col(field)) != "")
+    # blank line closes a message; running count of blanks = message group.
+    # The blank flag is a plain column BEFORE the fill, so the running sum
+    # shares asof_lookup's Window operator (a Project between two windows
+    # of one spec keeps them apart).
+    blank = (F.trim(F.col(field)) == "").cast("int")
+    ctx = asof_lookup(df.withColumn("_blank", blank), key=source,
+                      order=order, values={"_dir": direction})
+    grouped = (ctx.withColumn("_grp", F.sum("_blank").over(w))
+               .filter(F.col("_blank") == 0)
                .filter(~F.col(field).rlike("sending from|Incoming message")))
+    # rcinfo is the fill in force at the message's last kept line, not
+    # whichever row the groupBy shuffle delivers first
     return (grouped.groupBy(source, "_grp")
             .agg(F.concat_ws("\n", F.array_sort(F.collect_list(
                      F.struct(F.col(order).alias("o"),
                               F.col(field).alias("m")))).getField("m"))
                  .alias("payload"),
-                 F.first("_dir").alias("rcinfo"),
+                 F.max_by("_dir", F.col(order)).alias("rcinfo"),
                  F.min(order).alias(order))
             .withColumn("correlation_id",
                         F.regexp_extract("payload", corr_regex, 1))
@@ -1200,8 +1206,7 @@ def _rtp_match(df: DataFrame, line: Column, order: str) -> DataFrame:
 
 
 def app_rtpproxy_correlate(df: DataFrame, *, field: str = "message",
-                           order: str = "line_no",
-                           reuse: bool = True) -> DataFrame:
+                           order: str = "line_no") -> DataFrame:
     """RTPProxy debug-log correlation (plugins/filters/app_rtpproxy/
     filter_app_rtpproxy.js:55-134): the reference keeps a driver-side
     ``ipcache`` keyed by command token (and a port->token alias map) across
@@ -1236,11 +1241,12 @@ def app_rtpproxy_correlate(df: DataFrame, *, field: str = "message",
     """
     # PERF: every family's line regex runs in ONE JVM pass per line over
     # the lines its mask selects (`_rtp_match`), with no Python worker.
-    # The parsed struct is materialized once (dataset._reuse
-    # semantics/caveats) and each branch reads its own nullable fields;
-    # without the checkpoint every branch would re-run the matcher.
-    from pastash_spark.operators.dataset import _reuse
-    df = _reuse(_rtp_match(df, F.col(field).cast("string"), order), reuse)
+    # The parsed struct is materialized once (lazy localCheckpoint; see
+    # dataset.dedup_minhash for the caveats) and each branch reads its own
+    # nullable fields; without the checkpoint every branch would re-run
+    # the matcher.
+    df = (_rtp_match(df, F.col(field).cast("string"), order)
+          .localCheckpoint(eager=False))
     m = F.col("_m")
 
     def _fam(key_field: str, *fields: "tuple[str, str]") -> DataFrame:

@@ -126,93 +126,43 @@ def ngram_jaccard_pairs(df: DataFrame, *, id_col: str = "doc_id",
         .select("id_a", "id_b", "jaccard")
 
 
-def _reuse(df: DataFrame, enabled: bool) -> DataFrame:
-    """Materialize-once for a subtree consumed by multiple branches of ONE
-    query (a candidate fetch plus an anti-join, two verify joins).
-    Catalyst's ReuseExchange only fires for byte-identical canonical
-    subplans, which per-branch column pruning defeats here — so without
-    this every consumer re-runs the Arrow signature/window pass.  Lazy
-    localCheckpoint: materializes during the first action, shared by all
-    branches.
-    Cluster note: checkpoint blocks live in executor storage with no
-    lineage — an executor loss fails the job instead of recomputing; for
-    a giant run, persist the subtree to a table and pass reuse=False."""
-    return df.localCheckpoint(eager=False) if enabled else df
-
-
 # --- in-bucket pairs and hot-group caps with observable drop metrics ---------
 
-
-class CapHandle:
-    """Per-invocation drop-stats handle for one hot-group cap.
-
-    Returned to callers via the operators' ``stats_out`` dict so concurrent
-    or repeated pipelines each read their OWN invocation's numbers (a
-    name-keyed global would clobber).  ``get()`` caches the result and then
-    releases the fallback DataFrame reference, so a long-lived driver does
-    not accumulate query plans.
-    """
-
-    def __init__(self, metric: str, obs, fallback: DataFrame):
-        self.metric = metric
-        self._obs = obs
-        self._fallback = fallback
-        self._cached: dict | None = None
-
-    def get(self) -> dict:
-        """{'dropped_rows','dropped_groups','total_groups'} of the capped
-        query.  ``Observation.get`` blocks until the query has run — forever
-        when it never does — so wait at most ~100 ms for the observed row
-        (``getRowOrEmpty``).  When there is none, or it came back empty
-        (Spark drops the metrics of a node AQE pruned, and of one whose
-        output feeds a later distinct), run the small standalone
-        aggregation over the same frame: the same numbers, one extra
-        job."""
-        if self._cached is None:
-            row = self._obs._jo.getRowOrEmpty()
-            if row.isDefined() and row.get().length():
-                self._cached = dict(self._obs.get)
-            else:
-                self._cached = self._fallback.first().asDict()
-            self._obs = None
-            self._fallback = None  # release plan references once read
-        return dict(self._cached)
+# per cap metric, its latest invocation: (Observation, standalone stats
+# aggregation) until read, then the stats dict it read — one live entry per
+# metric, replaced per call, so a long-lived driver holds no old plans
+_CAP_LATEST: dict[str, tuple | dict] = {}
 
 
-# latest handle per metric name — the convenience path for single-pipeline
-# use (tests, bench); bounded: one live entry per metric, replaced per call
-_CAP_LATEST: dict[str, CapHandle] = {}
-
-
-def observe_cap(frame: DataFrame, metric: str, stats: list[Column],
-                stats_out: dict | None = None) -> DataFrame:
-    """Record a hot-group cap's drop counts — OBSERVABLY, in the same query.
+def observe_cap(frame: DataFrame, metric: str,
+                stats: list[Column]) -> DataFrame:
+    """Record a hot-group cap's drop counts under ``metric``.
 
     A silent cap reads as "covered everything" when it didn't: at 100 TB an
     oversized LSH bucket / posting list being discarded must surface as a
     metric, not vanish.  ``stats`` are the aggregate columns
     ``dropped_rows``, ``dropped_groups`` and ``total_groups`` over
-    ``frame``, the stream just BEFORE the cap filter; an ``Observation``
-    collects them inside the same query execution (when Spark drops them,
-    CapHandle.get runs ``frame.select(*stats)`` as one small job).  Read
-    them after any action on the downstream DataFrame via
-    ``cap_drop_stats(metric)`` or the CapHandle in ``stats_out``; on a
-    cluster they also land in the QueryExecutionListener / SQL-UI
-    observed-metrics channel, the standard place ops dashboards scrape.
+    ``frame``, the stream just BEFORE the cap filter.  An ``Observation``
+    collects them while the downstream query runs, but Spark drops the
+    metrics of a node AQE pruned and of one whose output feeds a later
+    distinct — on the hot-bucket fixtures every operator's cap read ends
+    up there — and then ``cap_drop_stats(metric)`` runs
+    ``frame.select(*stats)`` as one small extra job.  Read them after any
+    action on the downstream DataFrame via ``cap_drop_stats`` or
+    ``cap_drop_report``; on a cluster an observed row also lands in the
+    QueryExecutionListener / SQL-UI observed-metrics channel, the standard
+    place ops dashboards scrape.
     """
     from pyspark.sql import Observation
 
     obs = Observation()
-    handle = CapHandle(metric, obs, frame.select(*stats))
-    _CAP_LATEST[metric] = handle
-    if stats_out is not None:
-        stats_out[metric] = handle
+    _CAP_LATEST[metric] = (obs, frame.select(*stats))
     return frame.observe(obs, *stats)
 
 
 def bucket_pairs(df: DataFrame, keys, order: str, *payload: str,
-                 max_bucket: int | None = None, metric: str | None = None,
-                 stats_out: dict | None = None) -> DataFrame:
+                 max_bucket: int | None = None,
+                 metric: str | None = None) -> DataFrame:
     """Every pair of rows of ``df`` that share a bucket key — the one
     in-bucket pair generator (LSH bands, simhash blocks, shingle and
     fingerprint postings, qrelate handles).
@@ -236,7 +186,8 @@ def bucket_pairs(df: DataFrame, keys, order: str, *payload: str,
     m(m-1)/2 pairs.  ``max_bucket`` drops whole buckets of MORE than
     ``max_bucket`` rows before any pair is generated, and records the drop
     under ``metric`` (observe_cap over the collected ``size``; no extra
-    exchange).
+    exchange in the pair query — reading the counts may run one small
+    job, see observe_cap).
     """
     keys = [keys] if isinstance(keys, str) else list(keys)
     occ = (df.groupBy(*keys)
@@ -249,7 +200,7 @@ def bucket_pairs(df: DataFrame, keys, order: str, *payload: str,
             F.coalesce(F.sum(F.when(dropped, n)), F.lit(0))
             .alias("dropped_rows"),
             F.count(F.when(dropped, 1)).alias("dropped_groups"),
-            F.count(F.lit(1)).alias("total_groups")], stats_out)
+            F.count(F.lit(1)).alias("total_groups")])
         occ = occ.filter(~dropped)
     e1 = (occ.filter(n >= 2)
           .select(*keys, "_occ", F.posexplode("_occ").alias("_i", "_a")))
@@ -260,12 +211,23 @@ def bucket_pairs(df: DataFrame, keys, order: str, *payload: str,
 
 
 def cap_drop_stats(metric: str) -> dict:
-    """Drop stats of the LATEST invocation of a named cap (convenience for
-    single-pipeline use); empty dict if the metric never registered.
-    Concurrent/repeated pipelines should pass ``stats_out`` to the operator
-    and read their own CapHandle instead."""
-    h = _CAP_LATEST.get(metric)
-    return h.get() if h is not None else {}
+    """{'dropped_rows','dropped_groups','total_groups'} of the LATEST
+    invocation of a named cap; empty dict if the metric never registered.
+    ``Observation.get`` blocks until the query has run — forever when it
+    never does — so wait at most ~100 ms for the observed row
+    (``getRowOrEmpty``).  When there is none, or it came back empty, run
+    the standalone aggregation over the same frame: the same numbers, one
+    extra job.  The result is cached and the plan references dropped."""
+    latest = _CAP_LATEST.get(metric)
+    if isinstance(latest, tuple):
+        obs, fallback = latest
+        row = obs._jo.getRowOrEmpty()
+        if row.isDefined() and row.get().length():
+            latest = dict(obs.get)
+        else:
+            latest = fallback.first().asDict()
+        _CAP_LATEST[metric] = latest
+    return dict(latest or {})
 
 
 CAP_METRICS = ("minhash_lsh_max_bucket", "simhash_max_bucket",
@@ -277,12 +239,9 @@ def cap_drop_report() -> dict[str, dict]:
     flagship output, so silent truncation is visible end-to-end.  A metric
     whose cap never armed this session reports explicit zeros with
     ``uncapped: True`` (the lossless gate paths)."""
-    out: dict[str, dict] = {}
-    for m in CAP_METRICS:
-        h = _CAP_LATEST.get(m)
-        out[m] = (h.get() if h is not None else
-                  {"dropped_rows": 0, "dropped_groups": 0, "uncapped": True})
-    return out
+    return {m: cap_drop_stats(m) or {"dropped_rows": 0, "dropped_groups": 0,
+                                     "uncapped": True}
+            for m in CAP_METRICS}
 
 
 # --- minhash + LSH -----------------------------------------------------------
@@ -341,7 +300,6 @@ def minhash_lsh_pairs(df: DataFrame, *, id_col: str = "doc_id",
                       col: str = "text", k: int = 3, n_hashes: int = 64,
                       bands: int = 16,
                       max_bucket: int | None = None,
-                      stats_out: dict | None = None,
                       distinct: bool = True) -> DataFrame:
     """Candidate near-dup pairs via banded LSH: equal band-slice of the
     minhash signature -> same bucket -> pair.  rows_per_band = n_hashes/bands.
@@ -390,8 +348,7 @@ def minhash_lsh_pairs(df: DataFrame, *, id_col: str = "doc_id",
         .select("id", F.col("bb.band").alias("band"), F.col("bb.bucket").alias("bucket"))
     pairs = (bucket_pairs(banded, ["band", "bucket"], "id",
                           max_bucket=max_bucket,
-                          metric="minhash_lsh_max_bucket",
-                          stats_out=stats_out)
+                          metric="minhash_lsh_max_bucket")
              .select(F.col("_a.id").alias("id_a"),
                      F.col("_b.id").alias("id_b")))
     return pairs.distinct() if distinct else pairs
@@ -399,47 +356,43 @@ def minhash_lsh_pairs(df: DataFrame, *, id_col: str = "doc_id",
 
 def dedup_minhash(df: DataFrame, *, id_col: str = "doc_id", col: str = "text",
                   k: int = 3, threshold: float = 0.7, n_hashes: int = 64,
-                  bands: int = 16, exact_first: bool = True,
-                  max_bucket: int | None = None,
-                  stats_out: dict | None = None,
-                  reuse: bool = True) -> DataFrame:
+                  bands: int = 16,
+                  max_bucket: int | None = None) -> DataFrame:
     """LSH candidates verified by exact jaccard — rows that survive dedup.
     Survivor = smaller id of each confirmed pair wins; every id that appears
     as a bigger-id duplicate is dropped.
 
-    ``exact_first`` collapses text-identical docs BEFORE banding (one
-    fingerprint groupBy): identical docs share every band bucket, so a mass
-    of m copies would otherwise emit m^2/2 candidate pairs into LSH — the
-    degenerate hot bucket.  Semantics are unchanged: an exact duplicate has
-    the same jaccard to every other doc as its surviving representative, so
-    the pair set over representatives plus the exact-loser set reproduces
-    the all-pairs result."""
-    # PERF (r06/r06b): the (id, text) projection feeds the dedup-side
-    # consumers — materialize once instead of re-running the source
-    # subtree per consumer (the bench source is a union-shaped scan; the
-    # plan repeated it 9+ times).  The exact-first split rides ONE
-    # fingerprint window: rn==1 rows are the representatives and rn>1
-    # rows ARE the exact losers (identical to the old reps anti-join —
-    # every non-representative is a loser — minus the anti-join's two
-    # shuffled sides).  The final anti-join still returns the ORIGINAL
-    # df, full schema.
-    final_df = df
-    if exact_first:
-        from pyspark.sql import Window
-        w_fp = Window.partitionBy(fingerprint(col)).orderBy(F.col(id_col))
-        marked = _reuse(df.select(F.col(id_col), F.col(col))
-                        .withColumn("_rn", F.row_number().over(w_fp)),
-                        reuse)
-        exact_losers = (marked.filter(F.col("_rn") > 1).select(id_col))
-        work = marked.filter(F.col("_rn") == 1).select(id_col, col)
-        if set(df.columns) == {id_col, col}:
-            # the checkpointed frame holds exactly df's rows — the final
-            # anti-join can read it instead of re-running the source
-            # subtree (one scan fewer; row multiset identical)
-            final_df = marked.select(*df.columns)
-    else:
-        exact_losers = None
-        work = _reuse(df.select(F.col(id_col), F.col(col)), reuse)
+    Text-identical docs collapse BEFORE banding (one fingerprint window):
+    identical docs share every band bucket, so a mass of m copies would
+    otherwise emit m^2/2 candidate pairs into LSH — the degenerate hot
+    bucket.  Semantics are unchanged: an exact duplicate has the same
+    jaccard to every other doc as its surviving representative, so the
+    pair set over representatives plus the exact-loser set reproduces the
+    all-pairs result."""
+    from pyspark.sql import Window
+    # PERF (r06/r06b): the (id, text) projection feeds every dedup-side
+    # consumer (the candidate fetch, both exact splits, the final
+    # anti-join).  Catalyst's ReuseExchange only fires for byte-identical
+    # canonical subplans, which per-branch column pruning defeats, so it
+    # is materialized once with a lazy localCheckpoint (it fills during
+    # the first action; the bench source is a union-shaped scan that the
+    # plan otherwise repeated 9+ times).  Checkpoint blocks live in
+    # executor storage with no lineage: an executor loss fails the job
+    # instead of recomputing.  The exact split rides ONE fingerprint
+    # window: rn==1 rows are the representatives and rn>1 rows ARE the
+    # exact losers (every non-representative is a loser).
+    w_fp = Window.partitionBy(fingerprint(col)).orderBy(F.col(id_col))
+    marked = (df.select(F.col(id_col), F.col(col))
+              .withColumn("_rn", F.row_number().over(w_fp))
+              .localCheckpoint(eager=False))
+    exact_losers = marked.filter(F.col("_rn") > 1).select(id_col)
+    work = marked.filter(F.col("_rn") == 1).select(id_col, col)
+    # when the checkpointed frame holds exactly df's rows, the final
+    # anti-join reads it instead of re-running the source subtree (one
+    # scan fewer; row multiset identical); otherwise it returns the
+    # ORIGINAL df, full schema
+    final_df = (marked.select(*df.columns)
+                if set(df.columns) == {id_col, col} else df)
     # PERF (r06b): no pair/doc-level distincts on the internal path — the
     # candidate fetch is a LEFT SEMI join (inherently deduping, one stage
     # fewer than inner-join-on-distinct with the same row set), the pair
@@ -448,8 +401,7 @@ def dedup_minhash(df: DataFrame, *, id_col: str = "doc_id", col: str = "text",
     # are irrelevant.  Row results are identical.
     cand = minhash_lsh_pairs(work, id_col=id_col, col=col, k=k,
                              n_hashes=n_hashes, bands=bands,
-                             max_bucket=max_bucket, stats_out=stats_out,
-                             distinct=False)
+                             max_bucket=max_bucket, distinct=False)
     # PERF (r06): one explode instead of union-of-two-selects — the union
     # form re-ran the whole candidate-pair join once per side.
     cand_docs = (work.join(
@@ -457,9 +409,8 @@ def dedup_minhash(df: DataFrame, *, id_col: str = "doc_id", col: str = "text",
         id_col, "left_semi"))
     verified = ngram_jaccard_pairs(cand_docs, id_col=id_col, col=col, k=k,
                                    threshold=threshold)
-    losers = verified.select(F.col("id_b").alias(id_col))
-    if exact_losers is not None:
-        losers = losers.union(exact_losers)
+    losers = (verified.select(F.col("id_b").alias(id_col))
+              .union(exact_losers))
     return final_df.join(losers, id_col, "left_anti")
 
 
@@ -514,8 +465,7 @@ def simhash60_portable(col: str = "text") -> Column:
 
 def simhash_near_pairs(df: DataFrame, *, id_col: str = "doc_id",
                        col: str = "text", max_hamming: int = 3,
-                       max_bucket: int | None = None,
-                       stats_out: dict | None = None) -> DataFrame:
+                       max_bucket: int | None = None) -> DataFrame:
     """Near-dup pairs by simhash hamming distance, blocked on CHUNK PAIRS:
     the 60-bit portable simhash splits into 6 chunks of 10 bits; hamming<=3
     flips at most 3 chunks, so at least 3 chunks are equal and hence at
@@ -548,8 +498,7 @@ def simhash_near_pairs(df: DataFrame, *, id_col: str = "doc_id",
     blocks = sh.select("id", "sh", F.explode(F.array(*pair_structs)).alias("c")) \
         .select("id", "sh", "c.blk", "c.val")
     pairs = bucket_pairs(blocks, ["blk", "val"], "id", "sh",
-                         max_bucket=max_bucket, metric="simhash_max_bucket",
-                         stats_out=stats_out)
+                         max_bucket=max_bucket, metric="simhash_max_bucket")
     ham = F.bit_count(F.col("_a.sh").bitwiseXOR(F.col("_b.sh"))).cast("int")
     return (pairs.select(F.col("_a.id").alias("id_a"),
                          F.col("_b.id").alias("id_b"), ham.alias("hamming"))
@@ -603,8 +552,7 @@ def winnow_fingerprints(df: DataFrame, *, id_col: str = "doc_id",
 def winnow_containment_pairs(df: DataFrame, *, id_col: str = "doc_id",
                              col: str = "text", k: int = 3, window: int = 4,
                              min_shared: int = 5,
-                             max_posting: int | None = None,
-                             stats_out: dict | None = None) -> DataFrame:
+                             max_posting: int | None = None) -> DataFrame:
     """Containment / plagiarism-style candidate pairs: docs sharing at least
     ``min_shared`` winnowing fingerprints.  The sketch is an inverted index
     (fp -> docs); candidates are the pairs inside each posting list
@@ -614,7 +562,7 @@ def winnow_containment_pairs(df: DataFrame, *, id_col: str = "doc_id",
     fps = winnow_fingerprints(df, id_col=id_col, col=col, k=k,
                               window=window)
     return (bucket_pairs(fps, "fp", id_col, max_bucket=max_posting,
-                         metric="winnow_max_posting", stats_out=stats_out)
+                         metric="winnow_max_posting")
             .groupBy(F.col(f"_a.{id_col}").alias("id_a"),
                      F.col(f"_b.{id_col}").alias("id_b"))
             .agg(F.count("*").alias("shared"))

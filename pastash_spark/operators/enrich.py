@@ -77,15 +77,16 @@ def is_private_ip(col) -> "F.Column":
     return F.coalesce(c.rlike(PRIVATE_IP_RE), F.lit(False))
 
 
-def geoip(df: DataFrame, geo_table: DataFrame, *, ip_field: str = "ip",
-          how: str = "left") -> DataFrame:
-    """geoip enrichment: broadcast join on ip, skipping private ranges
+def geoip(df: DataFrame, geo_table: DataFrame, *,
+          ip_field: str = "ip") -> DataFrame:
+    """geoip enrichment: broadcast left join on ip, skipping private ranges
     (filter_geoip.js:88-143).  ``geo_table`` carries (ip, country, city, ...)
-    — private IPs keep NULL attributes without probing the table."""
+    — private IPs and unknown IPs keep NULL attributes (the reference never
+    drops an event), and private IPs never probe the table."""
     pub = df.withColumn("_geo_key",
                         F.when(~is_private_ip(ip_field), F.col(ip_field)))
     joined = pub.join(F.broadcast(geo_table.withColumnRenamed("ip", "_geo_key")),
-                      on="_geo_key", how=how)
+                      on="_geo_key", how="left")
     return joined.drop("_geo_key")
 
 

@@ -52,8 +52,8 @@ def ip2int(col: Column) -> Column:
 def scored_correlation(df: DataFrame, *,
                        vectors: Sequence[Mapping[str, Any]] = HSP_VECTORS,
                        id_col: str = "callid", order: str = "line_no",
-                       threshold: int = 100, max_bucket: int = 64,
-                       out_prefix: str = "hsp_") -> DataFrame:
+                       threshold: int = 100,
+                       max_bucket: int = 64) -> DataFrame:
     """qrelate-style weighted multi-key correlation
     (filter_app_hsp.js:20-30 vectors + :156 qrelate.process).
 
@@ -85,8 +85,8 @@ def scored_correlation(df: DataFrame, *,
     instead of going quadratic.  The truncated rows and buckets are
     counted under the ``hsp_max_bucket`` cap metric (see
     dataset.cap_drop_report), never silently discarded.
-    Adds: ``{out_prefix}correlation`` (adopted id, NULL when unlinked)
-    and ``{out_prefix}score``."""
+    Adds: ``hsp_correlation`` (adopted id, NULL when unlinked) and
+    ``hsp_score``."""
     cols = set(df.columns)
     handles = []
     for v in vectors:
@@ -108,9 +108,8 @@ def scored_correlation(df: DataFrame, *,
                 F.concat(val, F.lit(v["suffix"])).alias("hval"),
                 score.alias("hscore"))))
     if not handles:
-        return (df.withColumn(out_prefix + "correlation",
-                              F.lit(None).cast("string"))
-                .withColumn(out_prefix + "score", F.lit(0)))
+        return (df.withColumn("hsp_correlation", F.lit(None).cast("string"))
+                .withColumn("hsp_score", F.lit(0)))
 
     # PERF (r06): explode first, null-filter after — the previous
     # F.filter(...) HOF is CodegenFallback and dragged every handle
@@ -183,12 +182,10 @@ def scored_correlation(df: DataFrame, *,
             .agg(F.min_by(F.struct("_aid", "_score"), F.col("_ao"))
                  .alias("_w"))
             .select(F.col("_bo"),
-                    F.col("_w._aid").alias(out_prefix + "correlation"),
-                    F.col("_w._score").cast("long")
-                    .alias(out_prefix + "score")))
+                    F.col("_w._aid").alias("hsp_correlation"),
+                    F.col("_w._score").cast("long").alias("hsp_score")))
     return (df.join(best, df[order] == best["_bo"], "left").drop("_bo")
-            .withColumn(out_prefix + "score",
-                        F.coalesce(out_prefix + "score", F.lit(0))))
+            .withColumn("hsp_score", F.coalesce("hsp_score", F.lit(0))))
 
 
 def app_hsp_cdr(df: DataFrame, *, field: str = "message",

@@ -52,6 +52,15 @@ def regex_groups(src: Column, java_re: str, groups: Sequence[int]) -> Column:
         F.split(F.regexp_replace(src, whole, rep), _SEP, -1))
 
 
+def inline_flags(pattern: str, flags: str | None) -> str:
+    """``pattern`` under JS RegExp ``flags`` (filter_regex.js passes them to
+    new RegExp): i/m/s become a Java inline ``(?ims)`` prefix; g is
+    meaningless for a single match (the reference matches once per event
+    too), and no other letter has a Java inline form."""
+    inline = "".join(ch for ch in flags or "" if ch in "ims")
+    return f"(?{inline}){pattern}" if inline else pattern
+
+
 def regex_extract(
     df: DataFrame,
     regex: "CompiledGrok | str | None" = None,
@@ -104,13 +113,7 @@ def regex_extract(
         java_re, out_fields = regex, list(fields)
         groups = list(range(1, len(out_fields) + 1))
 
-    if regex_flags:
-        # JS RegExp flags (filter_regex.js passes them to new RegExp):
-        # i/m/s have inline equivalents; g is meaningless for a
-        # single-extract (the reference extracts once per event too).
-        inline = "".join(ch for ch in regex_flags if ch in "ims")
-        if inline:
-            java_re = f"(?{inline})" + java_re
+    java_re = inline_flags(java_re, regex_flags)
 
     # Java character classes (\w \b \s) are ASCII-only by default; the
     # reference's engines (Oniguruma for grok, JS for regex) are
@@ -163,11 +166,8 @@ def grep(df: DataFrame, regex: str, *, field: str = DEFAULT_FIELD,
          invert: bool = False, regex_flags: str | None = None) -> DataFrame:
     """Keep rows whose field matches (filter_grep.js:26-32); regex_flags
     maps JS i/m/s to inline flags like filter_regex."""
-    if regex_flags:
-        inline = "".join(ch for ch in regex_flags if ch in "ims")
-        if inline:
-            regex = f"(?{inline})" + regex
-    m = F.coalesce(F.col(field).rlike(regex), F.lit(False))
+    m = F.coalesce(F.col(field).rlike(inline_flags(regex, regex_flags)),
+                   F.lit(False))
     return df.filter(~m if invert else m)
 
 

@@ -194,8 +194,7 @@ def exact_cosine_pairs(df: DataFrame, *, id_col: str = "vec_id",
 def lsh_near_dup_pairs(df: DataFrame, *, id_col: str = "vec_id",
                        vec_col: str = "embedding", threshold: float = 0.9,
                        n_tables: int = 3, n_planes: int = 8,
-                       dim: int | None = None, seed0: int = 42,
-                       reuse: bool = True) -> DataFrame:
+                       dim: int | None = None, seed0: int = 42) -> DataFrame:
     """HIGH-threshold embedding near-dup pairs — the 100 TB path: candidates
     from T independent random-projection tables (pairs inside each bucket,
     bucket_pairs; a pair qualifies if ANY table buckets it together), then
@@ -209,13 +208,13 @@ def lsh_near_dup_pairs(df: DataFrame, *, id_col: str = "vec_id",
     replicate the exact candidate condition — the approximation itself is
     driver-verifiable.
     """
-    from pastash_spark.operators.dataset import _reuse, bucket_pairs
+    from pastash_spark.operators.dataset import bucket_pairs
     # base feeds the bucket UDF AND both verify sides — materialize it once
-    # (see dataset._reuse for the ReuseExchange rationale and the
-    # cluster-scale note)
-    base = _reuse(df.select(F.col(id_col).alias("id"),
-                            F.col(vec_col).cast("array<double>").alias("v")),
-                  reuse)
+    # (lazy localCheckpoint; see dataset.dedup_minhash for why ReuseExchange
+    # does not share it and for the cluster caveat)
+    base = (df.select(F.col(id_col).alias("id"),
+                      F.col(vec_col).cast("array<double>").alias("v"))
+            .localCheckpoint(eager=False))
     # ALL tables' buckets in ONE Arrow pass (one (T*P, dim) matmul per
     # batch), then ONE pair pass keyed on (table, bucket): a pair is a
     # candidate iff some table buckets it together — one shuffle, not T.

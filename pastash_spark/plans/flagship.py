@@ -24,6 +24,7 @@ from pastash_spark.operators import parse as P
 from pastash_spark.operators import route as R
 from pastash_spark.operators.enrich import broadcast_lookup
 from pastash_spark.session import local_frame
+from pastash_spark.sources.lineage import BUCKET_COL
 
 # Grok pattern for the rendered syslog-style header in datagen.token_sequences:
 #   <pri>MMM DD HH:mm:ss host prog[pid]: ntok=N first=T doc=ID
@@ -143,6 +144,31 @@ def run(spark: SparkSession, df: DataFrame | None = None,
     return build(df, lookup)
 
 
+def write_batch(subset: DataFrame, buckets, lookup: DataFrame,
+                sink_path: str) -> dict:
+    """Run the pipeline on one batch of lineage buckets, write its routed
+    rows under ``sink_path`` and return ``{bucket: (rows, tokens)}`` — the
+    ``process_and_write`` contract of ``lineage.run_resumable``.
+
+    Idempotent per-bucket sink write: the bucket column LEADS the partition
+    layout, so dynamic overwrite replaces exactly this batch's (bucket,
+    route) partitions — a retry rewrites the same directories, and later
+    batches can never clobber earlier ones (partitioning by the route alone
+    would overwrite whole sinks).  The counts are read back from the
+    partitions just written, so the batch is parsed once."""
+    routed = build(subset, lookup)["routed"]
+    (routed.write.mode("overwrite")
+     .partitionBy(BUCKET_COL, R.ROUTE_COL)
+     .option("partitionOverwriteMode", "dynamic")
+     .parquet(sink_path))
+    per_bucket = (subset.sparkSession.read.parquet(sink_path)
+                  .filter(F.col(BUCKET_COL).isin(list(buckets)))
+                  .groupBy(BUCKET_COL)
+                  .agg(F.count("*").alias("r"),
+                       F.sum("n_tok").alias("t")).collect())
+    return {r[BUCKET_COL]: (r.r, int(r.t)) for r in per_bucket}
+
+
 def run_with_lineage(spark: SparkSession, df: DataFrame, work_dir: str,
                      *, n_buckets: int = 8,
                      buckets_per_job: int = 4) -> DataFrame:
@@ -161,7 +187,7 @@ def run_with_lineage(spark: SparkSession, df: DataFrame, work_dir: str,
     import os
 
     from pastash_spark.sources.lineage import (
-        BUCKET_COL, LineageLog, run_resumable, with_bucket)
+        LineageLog, run_resumable, with_bucket)
 
     lookup = datagen.source_lookup(spark)
     bucketed = with_bucket(df, key="doc_id", n_buckets=n_buckets)
@@ -169,17 +195,7 @@ def run_with_lineage(spark: SparkSession, df: DataFrame, work_dir: str,
     sink_path = os.path.join(work_dir, "sinks")
 
     def process_and_write(subset: DataFrame, buckets) -> dict:
-        routed = build(subset, lookup)["routed"]
-        (routed.write.mode("overwrite")
-         .partitionBy(BUCKET_COL, R.ROUTE_COL)
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(sink_path))
-        per_bucket = (spark.read.parquet(sink_path)
-                      .filter(F.col(BUCKET_COL).isin(list(buckets)))
-                      .groupBy(BUCKET_COL)
-                      .agg(F.count("*").alias("r"),
-                           F.sum("n_tok").alias("t")).collect())
-        return {r[BUCKET_COL]: (r.r, int(r.t)) for r in per_bucket}
+        return write_batch(subset, buckets, lookup, sink_path)
 
     first = run_resumable(bucketed, log, process_and_write,
                           n_buckets=n_buckets,

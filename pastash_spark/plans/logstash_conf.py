@@ -315,10 +315,6 @@ _LIST_PARAMS: dict[str, tuple[str, ...]] = {
     "regex": ("fields", "numerical_fields"),
 }
 
-
-def _inline_flags(pattern: str, flags: str) -> str:
-    inline = "".join(ch for ch in flags if ch in "ims")
-    return f"(?{inline}){pattern}" if inline else pattern
 # standard per-plugin params that become follow-up stages
 _FOLLOWUPS = ("add_tags", "remove_tags", "add_fields", "remove_fields")
 
@@ -357,7 +353,8 @@ def _plugin_to_spec(name: str, params: dict) -> list[dict]:
         spec.pop("max_delay", None)
         flags = spec.pop("regex_flags", None)
         if flags and "start_line_regex" in spec:
-            spec["start_line_regex"] = _inline_flags(
+            from pastash_spark.operators.parse import inline_flags
+            spec["start_line_regex"] = inline_flags(
                 spec["start_line_regex"], flags)
     return [spec] + followups
 

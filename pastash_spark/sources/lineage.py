@@ -215,9 +215,9 @@ def run_resumable(
     commit each batch's lineage afterwards.
 
     ``process_and_write(df_subset, bucket_list)`` runs the pipeline on the
-    subset and writes the sinks idempotently for exactly those buckets.  It
-    returns either ``(rows, tokens)`` batch totals, or a per-bucket dict
-    ``{bucket: (rows, tokens)}`` for exact per-bucket lineage metrics.
+    subset, writes the sinks idempotently for exactly those buckets, and
+    returns a per-bucket dict ``{bucket: (rows, tokens)}`` — the exact
+    per-bucket lineage metrics (a bucket it omits commits as 0 rows).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     done = lineage.completed_buckets()
@@ -230,24 +230,12 @@ def run_resumable(
         subset = df_bucketed.filter(F.col(BUCKET_COL).isin(batch))
         result = process_and_write(subset, batch)
         wall = time.time() - t0
-        entries: list[tuple[int, int | None, int | None, float | None]] = []
-        if isinstance(result, dict):
-            for b in batch:
-                r, t = result.get(b, (0, 0))
-                entries.append((b, r, t, wall))
-                stats["rows"] += r
-                stats["tokens"] += t
-        else:
-            rows, tokens = result
-            # batch totals: apportion across the committed buckets so the
-            # persisted table SUMs to the true totals (remainder -> first)
-            n = len(batch)
-            for i, b in enumerate(batch):
-                r = (rows or 0) // n + (1 if i < (rows or 0) % n else 0)
-                t = (tokens or 0) // n + (1 if i < (tokens or 0) % n else 0)
-                entries.append((b, r, t, wall))
-            stats["rows"] += rows or 0
-            stats["tokens"] += tokens or 0
+        entries = []
+        for b in batch:
+            r, t = result.get(b, (0, 0))
+            entries.append((b, r, t, wall))
+            stats["rows"] += r
+            stats["tokens"] += t
         # ONE append job per batch — still commit-after-write, so the
         # crash window stays "re-process at most one batch"
         lineage.commit_many(entries, run_id=run_id)

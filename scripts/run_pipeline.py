@@ -37,8 +37,6 @@ def main() -> None:
     ap.add_argument("--master", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
-
     from pastash_spark import datagen
     from pastash_spark.plans import flagship
     from pastash_spark.session import get_spark
@@ -56,22 +54,7 @@ def main() -> None:
     log = LineageLog(spark, args.lineage)
 
     def process(subset, buckets):
-        routed = flagship.build(subset, lookup)["routed"]
-        # Idempotent per-bucket sink write: the bucket column LEADS the
-        # partition layout, so dynamic overwrite replaces exactly this
-        # batch's (bucket, route) partitions — a retry rewrites the same
-        # directories, and later batches can never clobber earlier ones
-        # (partitioning by _route alone would overwrite whole sinks).
-        (routed.write.mode("overwrite")
-         .partitionBy("_bucket", "_route")
-         .option("partitionOverwriteMode", "dynamic")
-         .parquet(args.output))
-        per_bucket = (spark.read.parquet(args.output)
-                      .filter(F.col("_bucket").isin(list(buckets)))
-                      .groupBy("_bucket")
-                      .agg(F.count("*").alias("r"), F.sum("n_tok").alias("t"))
-                      .collect())
-        return {r["_bucket"]: (r.r, int(r.t)) for r in per_bucket}
+        return flagship.write_batch(subset, buckets, lookup, args.output)
 
     t0 = time.time()
     stats = run_resumable(bucketed, log, process, n_buckets=args.buckets,

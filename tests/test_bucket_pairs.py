@@ -48,13 +48,9 @@ def test_bucket_pairs_matches_combinations_replay(spark):
 
 def test_bucket_pairs_cap_keeps_cap_drops_cap_plus_one(spark):
     df = spark.createDataFrame(ROWS, "k int, o int, p string")
-    stats: dict = {}
-    got = _pairs(df, max_bucket=CAP, metric="test_bucket_cap",
-                 stats_out=stats)
+    got = _pairs(df, max_bucket=CAP, metric="test_bucket_cap")
     assert got == _replay(ROWS, CAP)
     assert {k for k, _, _ in got} == {2, 3}          # 3 kept, 4 dropped
-    assert stats["test_bucket_cap"].get() == {
-        "dropped_rows": 4, "dropped_groups": 1, "total_groups": 4}
     assert D.cap_drop_stats("test_bucket_cap") == {
         "dropped_rows": 4, "dropped_groups": 1, "total_groups": 4}
 
@@ -68,19 +64,16 @@ def test_bucket_pairs_multi_key(spark):
 
 def test_bucket_pairs_cap_dropping_every_bucket(spark):
     df = spark.createDataFrame(ROWS, "k int, o int, p string")
-    stats: dict = {}
-    assert _pairs(df, max_bucket=0, metric="test_bucket_cap_all",
-                  stats_out=stats) == []
-    assert stats["test_bucket_cap_all"].get() == {
+    assert _pairs(df, max_bucket=0, metric="test_bucket_cap_all") == []
+    assert D.cap_drop_stats("test_bucket_cap_all") == {
         "dropped_rows": len(ROWS), "dropped_groups": 4, "total_groups": 4}
 
 
 def test_cap_stats_of_a_query_that_never_ran(spark):
-    """The Observation never fires, so the handle must not block on it: it
+    """The Observation never fires, so the read must not block on it: it
     answers from the standalone aggregation, with the same numbers."""
     df = spark.createDataFrame(ROWS, "k int, o int, p string")
-    stats: dict = {}
     D.bucket_pairs(df, "k", "o", "p", max_bucket=CAP,
-                   metric="test_bucket_cap_unrun", stats_out=stats)
-    assert stats["test_bucket_cap_unrun"].get() == {
+                   metric="test_bucket_cap_unrun")
+    assert D.cap_drop_stats("test_bucket_cap_unrun") == {
         "dropped_rows": 4, "dropped_groups": 1, "total_groups": 4}

@@ -163,12 +163,13 @@ def test_lineage_resume_skips_done_buckets(spark, tmp_path):
 
     def process(subset, buckets):
         calls.append(sorted(buckets))
-        n = subset.count()
-        return n, n * 10
+        per_bucket = subset.groupBy(BUCKET_COL).count().collect()
+        return {r[BUCKET_COL]: (r["count"], r["count"] * 10)
+                for r in per_bucket}
 
     stats1 = run_resumable(df, log, process, n_buckets=4, buckets_per_job=2)
     assert stats1["processed"] == 4 and stats1["skipped"] == 0
-    assert stats1["rows"] == 400
+    assert stats1["rows"] == 400 and stats1["tokens"] == 4000
 
     # resume: everything already committed -> no work
     stats2 = run_resumable(df, log, process, n_buckets=4, buckets_per_job=2)

@@ -198,17 +198,16 @@ def test_rtpproxy_lookups_are_asof_windows_not_joins(spark):
 
 def test_rtpproxy_matcher_is_one_jvm_regex_pass_per_family(spark):
     """The rtpproxy line matcher runs in the JVM: no Python evaluation node
-    anywhere in the operator's plan, and the matcher (the subtree `_reuse`
-    checkpoints) runs each family's pattern once per line, not once per
-    captured field."""
+    in the matcher (the subtree the operator checkpoints) or in the
+    operator's plan downstream of the checkpoint, and the matcher runs
+    each family's pattern once per line, not once per captured field."""
     from pastash_spark.operators.correlate import (
         _RTP_FAMILIES, _rtp_match, app_rtpproxy_correlate)
     df = spark.createDataFrame([(1, "x")], "line_no long, message string")
-    # reuse=False: with the checkpoint the matcher's nodes do not show
-    plan = _plan(app_rtpproxy_correlate(df, reuse=False))
-    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
-        assert node not in plan, node
     plan = _plan(_rtp_match(df, F.col("message"), "line_no"))
+    for p in (plan, _plan(app_rtpproxy_correlate(df))):
+        for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+            assert node not in p, node
     assert plan.count("regexp_replace") == len(_RTP_FAMILIES)
     for _, rx, _ in _RTP_FAMILIES:
         assert plan.count(r"\A[\s\S]*?(?:(?d)" + rx + ")") == 1, rx
@@ -267,7 +266,7 @@ def test_carried_context_fills_are_row_frames(spark):
         "ord long, ts_us long, session_id string, type int, subtype int, "
         "event_name string")
     plans = {
-        "sonus": (_plan(C.app_sonus_reassemble(lines.drop("host"))), 2),
+        "sonus": (_plan(C.app_sonus_reassemble(lines.drop("host"))), 1),
         "avaya": (_plan(C.app_avaya_correlate(lines.drop("host"))), 3),
         "ingate": (_plan(C.app_ingate_correlate(lines.drop("host"))), 1),
         "cisco": (_plan(C.app_cisco_correlate(lines.drop("path"))), 1),

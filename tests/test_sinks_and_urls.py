@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import random
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -284,3 +286,22 @@ def test_app_sonus_reassembly(spark):
     assert out[0].correlation_id == "abc-123"
     assert "Incoming message" in out[0].rcinfo
     assert "sending from" in out[1].rcinfo
+
+    # a direction line between two payload lines: rcinfo is the fill in
+    # force at the message's last kept line, whatever order rows arrive in
+    rows = [
+        ("s2", 1, "Incoming message on 10.0.0.3:5060"),
+        ("s2", 2, "BYE sip:bob SIP/2.0"),
+        ("s2", 3, "sending from 10.0.0.4:5060"),
+        ("s2", 4, "Call-ID: xyz-9"),
+        ("s2", 5, ""),
+    ]
+    for seed in range(3):
+        shuffled = list(rows)
+        random.Random(seed).shuffle(shuffled)
+        df = spark.createDataFrame(
+            shuffled, "path string, line_no int, message string")
+        out = app_sonus_reassemble(df).collect()
+        assert [(r.payload, r.rcinfo, r.line_no) for r in out] == [
+            ("BYE sip:bob SIP/2.0\nCall-ID: xyz-9",
+             "sending from 10.0.0.4:5060", 2)], seed
