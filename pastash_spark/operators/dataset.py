@@ -40,6 +40,21 @@ def portable_tokenize(col: str = "text") -> Column:
                        lambda w: (F.ascii(w) * 100 + F.length(w)) % 50257)
 
 
+def portable_hash60_py(s: str) -> int:
+    """60-bit deterministic hash both engines compute bit-for-bit: first 15
+    hex chars of md5 as an integer.  Python: int(md5.hexdigest()[:15], 16) —
+    Spark SQL: ``portable_hash60`` — DuckDB:
+    CAST('0x'||substring(md5(x),1,15) AS BIGINT).  This is what lets the
+    LSH queries ship FULL-fidelity SQL oracles instead of rows-only checks."""
+    import hashlib
+    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+
+
+def portable_hash60(c: Column) -> Column:
+    """``portable_hash60_py`` of a string column, JVM-side (codegen)."""
+    return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
+
+
 def fingerprint(col: str = "text") -> Column:
     """Normalized-document fingerprint: md5 over whitespace-collapsed,
     lowercased text (the `mutate_hash` dedup key pattern,
@@ -77,21 +92,26 @@ def dedup_exact_keep(df: DataFrame, *, col: str = "text",
 # mode — O(words^2) per document, measured as the dominant cost at bench
 # scale.  One Arrow pass with numpy does the whole signature per batch.
 
+def _kword_windows(text: str | None, k: int) -> list[str]:
+    """Every k-word window of ``text`` (words split on single spaces), in
+    document order, duplicates kept; empty when it has fewer than k words."""
+    ws = (text or "").split(" ")
+    return [" ".join(ws[i:i + k]) for i in range(len(ws) - k + 1)]
+
+
+def _pos_shingle_list(text: str | None, k: int) -> list[str]:
+    """Positional k-word shingles; a text shorter than k words is its own
+    single shingle."""
+    return _kword_windows(text, k) or [text or ""]
+
+
 def shingles(col: str = "text", k: int = 3) -> Column:
     """Distinct k-word shingle array — one vectorized Arrow pass."""
     @F.pandas_udf("array<string>")
     def sh(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            ws = (t or "").split(" ")
-            if len(ws) <= k:
-                out.append([" ".join(ws)])
-            else:
-                seen = dict.fromkeys(
-                    " ".join(ws[i:i + k]) for i in range(len(ws) - k + 1))
-                out.append(list(seen))
-            # dict.fromkeys = order-preserving distinct
-        return pd.Series(out)
+        # dict.fromkeys = order-preserving distinct
+        return pd.Series([list(dict.fromkeys(_pos_shingle_list(t, k)))
+                          for t in texts])
 
     return sh(F.col(col))
 
@@ -271,14 +291,8 @@ def minhash_signature(col: str = "text", k: int = 3,
 
     @F.pandas_udf("array<bigint>")
     def sig(texts: pd.Series) -> pd.Series:
-        shingle_lists = []
-        for t in texts:
-            ws = (t or "").split(" ")
-            if len(ws) <= k:
-                shingle_lists.append([" ".join(ws)])
-            else:
-                shingle_lists.append(list(dict.fromkeys(
-                    " ".join(ws[i:i + k]) for i in range(len(ws) - k + 1))))
+        shingle_lists = [list(dict.fromkeys(_pos_shingle_list(t, k)))
+                         for t in texts]
         n_docs = len(shingle_lists)
         counts = np.fromiter((len(s) for s in shingle_lists),
                              dtype=np.int64, count=n_docs)
@@ -422,8 +436,6 @@ def simhash60_portable(col: str = "text") -> Column:
     simhash and the driver gate verifies the hamming-pair output at full
     fidelity — not just row counts.  One Arrow pass per batch; per-batch
     word-hash memo amortizes the md5 cost across repeated vocabulary."""
-    import hashlib
-
     @F.pandas_udf("long")
     def sh(texts: pd.Series) -> pd.Series:
         # PERF (r06): one flat pass per BATCH instead of per-document
@@ -441,13 +453,12 @@ def simhash60_portable(col: str = "text") -> Column:
         counts = np.fromiter((len(ws) for ws in word_lists),
                              dtype=np.int64, count=n)
         flat = np.empty(int(counts.sum()), dtype=np.int64)
-        md5 = hashlib.md5
         i = 0
         for ws in word_lists:
             for w in ws:
                 h = cache.get(w)
                 if h is None:
-                    h = int(md5(w.encode()).hexdigest()[:15], 16)
+                    h = portable_hash60_py(w)
                     cache[w] = h
                 flat[i] = h
                 i += 1
@@ -513,12 +524,7 @@ def pos_shingles(col: str = "text", k: int = 3) -> Column:
     winnowing input (dedup would break window minima).  One Arrow pass."""
     @F.pandas_udf("array<string>")
     def sh(texts: pd.Series) -> pd.Series:
-        out = []
-        for t in texts:
-            ws = (t or "").split(" ")
-            n = max(len(ws) - k + 1, 1)
-            out.append([" ".join(ws[i:i + k]) for i in range(n)])
-        return pd.Series(out)
+        return pd.Series([_pos_shingle_list(t, k) for t in texts])
 
     return sh(F.col(col))
 
@@ -542,7 +548,7 @@ def winnow_fingerprints(df: DataFrame, *, id_col: str = "doc_id",
     from pyspark.sql import Window
     pos = df.select(F.col(id_col),
                     F.posexplode(pos_shingles(col, k)).alias("pos", "_sh"))
-    h = F.conv(F.substring(F.md5("_sh"), 1, 15), 16, 10).cast("long")
+    h = portable_hash60(F.col("_sh"))
     w = (Window.partitionBy(id_col).orderBy("pos")
          .rowsBetween(-(window - 1), 0))
     return (pos.withColumn("fp", F.min(h).over(w))
@@ -575,8 +581,8 @@ def portable_bucket(col, n_buckets: int):
     """Engine-portable bucket id: md5-prefix hash mod n (identical in Spark
     and DuckDB, unlike xxhash64) — the cross-engine stand-in for a hash
     repartitioning key."""
-    h = F.conv(F.substring(F.md5(F.col(col).cast("string")), 1, 15), 16, 10)
-    return F.pmod(h.cast("long"), F.lit(n_buckets)).cast("int")
+    return F.pmod(portable_hash60(F.col(col).cast("string")),
+                  F.lit(n_buckets)).cast("int")
 
 
 def pack_sequences(df: DataFrame, *, seq_len: int, n_buckets: int = 64,
@@ -651,14 +657,11 @@ def ngram_repetition(df: DataFrame, *, col: str = "text", n: int = 2,
     shuffle (a groupBy(doc, gram) formulation would shuffle every n-gram
     occurrence).  Keep rule example: keep iff top_count * 5 < total
     (top 2-gram under 20%)."""
-    k = n
-
     @F.pandas_udf("struct<top_count: long, total: long>")
     def rep(texts: pd.Series) -> pd.DataFrame:
         tops, totals = [], []
         for t in texts:
-            ws = (t or "").split(" ")
-            grams = [" ".join(ws[i:i + k]) for i in range(len(ws) - k + 1)]
+            grams = _kword_windows(t, n)
             totals.append(len(grams))
             if not grams:
                 tops.append(0)

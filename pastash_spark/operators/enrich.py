@@ -24,10 +24,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def broadcast_lookup(df: DataFrame, lookup: DataFrame, on: str | Sequence[str],
-                     *, how: str = "left") -> DataFrame:
+def broadcast_lookup(df: DataFrame, lookup: DataFrame,
+                     on: str | Sequence[str]) -> DataFrame:
     """Generic broadcast-join enrichment (the ipproto/geoip dict pattern,
-    filter_ipproto.js:41-53 / filter_geoip.js:117-136).
+    filter_ipproto.js:41-53 / filter_geoip.js:117-136): a left join, so a
+    fact with no lookup row keeps NULL attributes.
 
     Always broadcasts the lookup side: enrichment dims are small by
     construction, and a broadcast join is shuffle-free on the fact side —
@@ -35,7 +36,7 @@ def broadcast_lookup(df: DataFrame, lookup: DataFrame, on: str | Sequence[str],
     (skewed probe keys are harmless when nothing repartitions by them).
     """
     keys = [on] if isinstance(on, str) else list(on)
-    return df.join(F.broadcast(lookup), on=keys, how=how)
+    return df.join(F.broadcast(lookup), on=keys, how="left")
 
 
 def range_lookup(df: DataFrame, ranges: DataFrame, value_col: str,

@@ -1,11 +1,14 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exactness baseline, and an LSH-bucketed
-variant as the scale path.  Dot products stay JVM-side via F.aggregate /
-zip_with — no Python in the scoring loop.  At 100 TB the broadcast of the
-query set is the key property: scoring is a map-only pass over the corpus
-(one scan, zero shuffle), and only the per-partition top-k survivors reach
-the final top-k reduce.
+Brute-force cosine top-k as the exactness baseline, and sign-LSH / IVF
+variants as the scale path.  Top-k candidates score JVM-side via F.aggregate
+/ zip_with (``cosine``); the bulk passes are vectorized Arrow UDFs: one
+matrix product per batch for the sign-LSH buckets (``sign_buckets``) and
+the IVF cell assignment, numpy per grid cell in ``exact_cosine_pairs`` and
+per candidate batch in ``lsh_near_dup_pairs``.  At 100 TB the broadcast of
+the query set is the key property: scoring is a map-only pass over the
+corpus (one scan, zero shuffle), and only the per-partition top-k survivors
+reach the final top-k reduce.
 """
 
 from __future__ import annotations
@@ -13,9 +16,10 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pastash_spark.operators.dataset import bucket_pairs, portable_hash60_py
 from pastash_spark.session import local_frame
 
 
@@ -30,6 +34,18 @@ def _norm(a):
 
 def cosine(a, b):
     return _dot(a, b) / (_norm(a) * _norm(b))
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best-scored neighbors of each query: rank 1..k by ``_sim``
+    descending, ties to the smaller ``neighbor_id`` — the one ranking tail
+    of every top-k search.  Output: (query_id, neighbor_id, rank, sim)."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"),
+                                               F.asc("neighbor_id"))
+    return (scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= k)
+            .select("query_id", "neighbor_id", "rank",
+                    F.col("_sim").alias("sim")))
 
 
 def brute_force_topk(corpus: DataFrame, queries: DataFrame, *,
@@ -51,20 +67,7 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, *,
               .withColumn("_sim", cosine(
                   F.col("_qv").cast("array<double>"),
                   F.col("_cv").cast("array<double>"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", F.col("_sim").alias("sim")))
-
-
-def portable_hash60_py(s: str) -> int:
-    """60-bit deterministic hash both engines compute bit-for-bit: first 15
-    hex chars of md5 as an integer.  Python: int(md5.hexdigest()[:15], 16) —
-    Spark SQL: CAST(conv(substring(md5(x),1,15),16,10) AS BIGINT) — DuckDB:
-    CAST('0x'||substring(md5(x),1,15) AS BIGINT).  This is what lets the
-    LSH queries ship FULL-fidelity SQL oracles instead of rows-only checks."""
-    import hashlib
-    return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
+    return _top_k(scored, k)
 
 
 def plane_component_py(p: int, j: int, *, seed: int = 42) -> float:
@@ -83,34 +86,34 @@ def _plane_matrix(n_planes: int, dim: int, seed: int) -> np.ndarray:
                     dtype=np.float64)
 
 
-def random_projection_buckets(df: DataFrame, *, vec_col: str = "embedding",
-                              n_planes: int = 8, seed: int = 42,
-                              dim: int | None = None,
-                              bucket_col: str = "bucket") -> DataFrame:
-    """Sign-random-projection LSH bucket id (SimHash for vectors): bucket =
-    bits of sign(v . r_p) for n deterministic pseudo-random hyperplanes
-    (md5-derived on the driver — reproducible across runs AND engines; the
-    SQL oracles re-derive the identical planes).
+def sign_buckets(v: str, *, n_tables: int, n_planes: int,
+                 dim: int | None) -> Column:
+    """Sign-random-projection LSH buckets (SimHash for vectors) of the
+    vector column named ``v``: ``array<long>``, one bucket per table.
+    Table t's bucket is the bits of sign(v . r_p) over the ``n_planes``
+    hyperplanes ``_plane_matrix(n_planes, dim, 42 + t)`` (md5-derived on
+    the driver — reproducible across runs AND engines; the SQL oracles
+    re-derive the identical planes).
 
-    One Arrow pass per batch: all n_planes dot products are a single BLAS
-    matrix product.  (The previous formulation — one zip_with+aggregate
-    HOF pair per plane — evaluated 2*n_planes interpreted array walks per
-    row; the matmul is the same math an order of magnitude cheaper, and
-    the per-row cost no longer grows with plan size.)"""
+    One Arrow pass per batch for ALL tables: the T*P dot products are a
+    single BLAS matrix product.  (A zip_with+aggregate HOF pair per plane
+    walks the array 2*P times per row, interpreted; a union of per-table
+    passes scans the input T times.)  Callers posexplode the array to
+    (table, bucket)."""
     if dim is None:
         raise ValueError("pass dim= (embedding dimensionality)")
-    planes = _plane_matrix(n_planes, dim, seed)
+    planes = np.concatenate(
+        [_plane_matrix(n_planes, dim, 42 + t) for t in range(n_tables)])
     weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
 
-    @F.pandas_udf("long")
-    def bucket_udf(vs: pd.Series) -> pd.Series:
-        m = np.stack([np.asarray(v, dtype=np.float64) for v in vs]) \
+    @F.pandas_udf("array<long>")
+    def buckets(vs: pd.Series) -> pd.Series:
+        m = np.stack([np.asarray(x, dtype=np.float64) for x in vs]) \
             if len(vs) else np.empty((0, dim))
-        bits = (m @ planes.T) > 0
-        return pd.Series((bits * weights).sum(axis=1).astype(np.int64))
+        bits = ((m @ planes.T) > 0).reshape(len(vs), n_tables, n_planes)
+        return pd.Series(list((bits * weights).sum(axis=2).astype(np.int64)))
 
-    return df.withColumn(bucket_col,
-                         bucket_udf(F.col(vec_col).cast("array<double>")))
+    return buckets(F.col(v).cast("array<double>"))
 
 
 def exact_cosine_pairs(df: DataFrame, *, id_col: str = "vec_id",
@@ -194,7 +197,7 @@ def exact_cosine_pairs(df: DataFrame, *, id_col: str = "vec_id",
 def lsh_near_dup_pairs(df: DataFrame, *, id_col: str = "vec_id",
                        vec_col: str = "embedding", threshold: float = 0.9,
                        n_tables: int = 3, n_planes: int = 8,
-                       dim: int | None = None, seed0: int = 42) -> DataFrame:
+                       dim: int | None = None) -> DataFrame:
     """HIGH-threshold embedding near-dup pairs — the 100 TB path: candidates
     from T independent random-projection tables (pairs inside each bucket,
     bucket_pairs; a pair qualifies if ANY table buckets it together), then
@@ -208,28 +211,17 @@ def lsh_near_dup_pairs(df: DataFrame, *, id_col: str = "vec_id",
     replicate the exact candidate condition — the approximation itself is
     driver-verifiable.
     """
-    from pastash_spark.operators.dataset import bucket_pairs
     # base feeds the bucket UDF AND both verify sides — materialize it once
     # (lazy localCheckpoint; see dataset.dedup_minhash for why ReuseExchange
     # does not share it and for the cluster caveat)
     base = (df.select(F.col(id_col).alias("id"),
                       F.col(vec_col).cast("array<double>").alias("v"))
             .localCheckpoint(eager=False))
-    # ALL tables' buckets in ONE Arrow pass (one (T*P, dim) matmul per
-    # batch), then ONE pair pass keyed on (table, bucket): a pair is a
-    # candidate iff some table buckets it together — one shuffle, not T.
-    all_planes = np.concatenate(
-        [_plane_matrix(n_planes, dim, seed0 + t) for t in range(n_tables)])
-    weights = (np.int64(1) << np.arange(n_planes, dtype=np.int64))
-
-    @F.pandas_udf("array<long>")
-    def buckets_udf(vs: pd.Series) -> pd.Series:
-        m = np.stack([np.asarray(x, dtype=np.float64) for x in vs]) \
-            if len(vs) else np.empty((0, dim))
-        bits = ((m @ all_planes.T) > 0).reshape(len(vs), n_tables, n_planes)
-        return pd.Series(list((bits * weights).sum(axis=2).astype(np.int64)))
-
-    bk = base.select("id", F.posexplode(buckets_udf("v")).alias("t", "bk"))
+    # ALL tables' buckets in ONE Arrow pass, then ONE pair pass keyed on
+    # (table, bucket): a pair is a candidate iff some table buckets it
+    # together — one shuffle, not T.
+    bk = base.select("id", F.posexplode(sign_buckets(
+        "v", n_tables=n_tables, n_planes=n_planes, dim=dim)).alias("t", "bk"))
     cand_ids = (bucket_pairs(bk, ["t", "bk"], "id")
                 .select(F.col("_a.id").alias("id_a"),
                         F.col("_b.id").alias("id_b"))
@@ -237,6 +229,9 @@ def lsh_near_dup_pairs(df: DataFrame, *, id_col: str = "vec_id",
     va = base.select(F.col("id").alias("id_a"), F.col("v").alias("_va"))
     vb = base.select(F.col("id").alias("id_b"), F.col("v").alias("_vb"))
 
+    # stays a pandas UDF: the HOF ``cosine`` here returned the same pairs
+    # but ran slower (sf0.1, local[4], median 1.64 -> 1.95 s, slower in 6
+    # of 6 interleaved pairs)
     @F.pandas_udf("double")
     def cos_udf(a: pd.Series, b: pd.Series) -> pd.Series:
         if not len(a):
@@ -306,17 +301,13 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, *,
     scored = (cb.join(F.broadcast(qb), "cell")
               .filter(F.col("neighbor_id") != F.col("query_id"))
               .withColumn("_sim", cosine(F.col("_qv"), F.col("_cv"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank"))
+    return _top_k(scored, k).drop("sim")
 
 
 def lsh_topk(corpus: DataFrame, queries: DataFrame, *,
              id_col: str = "vec_id", vec_col: str = "embedding",
              k: int = 10, n_planes: int = 8, dim: int | None = None,
-             n_tables: int = 1, seed0: int = 42) -> DataFrame:
+             n_tables: int = 1) -> DataFrame:
     """Approximate top-k: score only within matching random-projection
     buckets — the candidate join is an equi-join on (table, bucket), so
     corpus scan cost is unchanged but pair count drops ~2^n_planes-fold
@@ -330,21 +321,15 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, *,
     force; for recall-critical serving prefer ivf_topk (nprobe/n_centroids
     bounds scanned corpus fraction directly).
     """
-    def bucketed(df, idc, vc):
-        out = None
-        for t in range(n_tables):
-            b = random_projection_buckets(
-                df, vec_col=vc, n_planes=n_planes, dim=dim,
-                seed=seed0 + t).withColumn("_tbl", F.lit(t))
-            out = b if out is None else out.unionByName(b)
-        return out
+    def bucketed(df, vc):
+        return df.select("*", F.posexplode(sign_buckets(
+            vc, n_tables=n_tables, n_planes=n_planes,
+            dim=dim)).alias("_tbl", "bucket"))
 
     cb = bucketed(corpus.select(F.col(id_col).alias("neighbor_id"),
-                                F.col(vec_col).alias("_cv")),
-                  "neighbor_id", "_cv")
+                                F.col(vec_col).alias("_cv")), "_cv")
     qb = bucketed(queries.select(F.col(id_col).alias("query_id"),
-                                 F.col(vec_col).alias("_qv")),
-                  "query_id", "_qv")
+                                 F.col(vec_col).alias("_qv")), "_qv")
     cand = (cb.join(F.broadcast(qb), ["_tbl", "bucket"])
             .filter(F.col("neighbor_id") != F.col("query_id"))
             .select("query_id", "neighbor_id", "_qv", "_cv")
@@ -352,7 +337,4 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, *,
     scored = cand.withColumn("_sim", cosine(
         F.col("_qv").cast("array<double>"),
         F.col("_cv").cast("array<double>")))
-    w = Window.partitionBy("query_id").orderBy(F.desc("_sim"), F.asc("neighbor_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "neighbor_id", "rank", F.col("_sim").alias("sim")))
+    return _top_k(scored, k)

@@ -46,7 +46,7 @@ def parse_stage(df: DataFrame) -> DataFrame:
 def enrich_stage(df: DataFrame, lookup: DataFrame) -> DataFrame:
     """Broadcast source-dim join (shuffle-free on the fact side, so the 40%
     hot `web` key costs nothing extra) + derived quality weight."""
-    df = broadcast_lookup(df, lookup, on="source", how="left")
+    df = broadcast_lookup(df, lookup, on="source")
     return df.withColumn(
         "weighted_tokens",
         F.col("n_tok") * F.coalesce(F.col("source_weight"), F.lit(0.0)))

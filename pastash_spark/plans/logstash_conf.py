@@ -433,8 +433,6 @@ def run_conf_files(spark, text: str, *, base_dir: str | None = None) -> list[str
 
     from pyspark.sql import functions as F
 
-    from pastash_spark.functions.conditions import compile_condition
-    from pastash_spark.plans import builder
     from pastash_spark.sources.readers import read_lines
     from pastash_spark.sources.sinks import ndjson_serialize
 
@@ -493,11 +491,8 @@ def run_conf_files(spark, text: str, *, base_dir: str | None = None) -> list[str
     if df is None:
         raise ValueError("run_conf_files: config has no input")
 
-    out_df = builder.build(df, specs["filter"])
     written: list[str] = []
-    for spec in specs["output"]:
-        spec = dict(spec)
-        gate = spec.pop("only_if", None)
+    for spec, view in build_conf(df, text)[1]:
         if spec["op"] == "hep":
             # hep output (output_hep.js; the shipped audiocodes recipe's
             # sink): HEPv3-encapsulate each event and deposit the frames
@@ -509,8 +504,6 @@ def run_conf_files(spark, text: str, *, base_dir: str | None = None) -> list[str
             if not lz:
                 raise ValueError("run_conf_files: hep output needs "
                                  "landing_zone= (frame deposit directory)")
-            view = out_df if gate in (None, True) else \
-                out_df.filter(compile_condition(gate, out_df.schema))
             pay = "payload" if "payload" in view.columns else "message"
             corr = ("correlation_id" if "correlation_id" in view.columns
                     else None)
@@ -535,8 +528,6 @@ def run_conf_files(spark, text: str, *, base_dir: str | None = None) -> list[str
             continue
         if spec["op"] != "file":
             continue
-        view = out_df if gate in (None, True) else \
-            out_df.filter(compile_condition(gate, out_df.schema))
         path = resolve(spec["path"])
         if spec.get("serializer", "json_logstash") == "json_logstash":
             ts = "@timestamp" if "@timestamp" in view.columns else None

@@ -988,24 +988,24 @@ def q_ann_brute(spark, sf_dir):
             .select("query_id", "neighbor_id", "rank"))
 
 
-def _ann_plane_sql(p: int, dim: int = 64, seed: int = 42) -> str:
-    """The SAME deterministic hyperplane similarity.py bakes into the Spark
-    plan, as a DuckDB list literal (repr round-trips doubles exactly)."""
+def _lsh_bucket_sql(seed: int, n_planes: int = 8, dim: int = 64) -> str:
+    """One sign-LSH table's bucket as DuckDB SQL over the vector ``v``: the
+    SAME deterministic hyperplanes ``similarity.sign_buckets`` bakes into
+    the Spark plan, as list literals (repr round-trips doubles exactly)."""
     from pastash_spark.operators.similarity import plane_component_py
-    return "[" + ", ".join(
-        repr(plane_component_py(p, j, seed=seed)) for j in range(dim)) + "]"
-
-
-_ANN_BUCKET_SQL = " + ".join(
-    f"(CASE WHEN list_dot_product(v, {_ann_plane_sql(p)}) > 0 "
-    f"THEN {1 << p} ELSE 0 END)"
-    for p in range(6))
+    terms = []
+    for p in range(n_planes):
+        lit = "[" + ", ".join(
+            repr(plane_component_py(p, j, seed=seed)) for j in range(dim)) + "]"
+        terms.append(f"(CASE WHEN list_dot_product(v, {lit}) > 0 "
+                     f"THEN {1 << p} ELSE 0 END)")
+    return " + ".join(terms)
 
 
 @_q("ann_lsh_topk", f"""
 WITH corpus AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v
                 FROM embeddings),
-cb AS (SELECT vec_id, v, {_ANN_BUCKET_SQL} AS bucket FROM corpus),
+cb AS (SELECT vec_id, v, {_lsh_bucket_sql(42, n_planes=6)} AS bucket FROM corpus),
 qb AS (SELECT vec_id AS query_id, v AS qv, bucket FROM cb WHERE vec_id < 5),
 scored AS (
   SELECT qb.query_id, cb.vec_id AS neighbor_id,
@@ -1429,17 +1429,6 @@ def q_ann_ivf(spark, sf_dir):
     emb = _t(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5)
     return S.ivf_topk(emb, queries, k=5, n_centroids=8, nprobe=2)
-
-
-def _lsh_bucket_sql(seed: int, n_planes: int = 8, dim: int = 64) -> str:
-    from pastash_spark.operators.similarity import plane_component_py
-    terms = []
-    for p in range(n_planes):
-        lit = "[" + ", ".join(
-            repr(plane_component_py(p, j, seed=seed)) for j in range(dim)) + "]"
-        terms.append(f"(CASE WHEN list_dot_product(v, {lit}) > 0 "
-                     f"THEN {1 << p} ELSE 0 END)")
-    return " + ".join(terms)
 
 
 @_q("embedding_near_dup_lsh", f"""

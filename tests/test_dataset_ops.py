@@ -259,11 +259,75 @@ def test_ngram_repetition_counts(spark):
     df = spark.createDataFrame(
         [(1, "a b a b a b"),      # grams: ab ba ab ba ab -> top 3 / 5
          (2, "w x y z"),          # 3 distinct grams     -> top 1 / 3
-         (3, "solo")],            # no grams             -> 0 / 0
+         (3, "solo"),             # no grams             -> 0 / 0
+         (4, "p q"),              # exactly n words      -> 1 / 1
+         (5, "x  y x  y")],       # 'x ', ' y', 'y x', 'x ', ' y' -> 2 / 5
         "doc_id long, text string")
     got = {r.doc_id: (r.top_count, r.total)
            for r in D.ngram_repetition(df, n=2).collect()}
-    assert got == {1: (3, 5), 2: (1, 3), 3: (0, 0)}
+    assert got == {1: (3, 5), 2: (1, 3), 3: (0, 0), 4: (1, 1), 5: (2, 5)}
+
+
+def _shingles_replay(t, k):
+    """Reference distinct-shingle loop: a text of at most k words is its
+    own single shingle."""
+    ws = (t or "").split(" ")
+    if len(ws) <= k:
+        return [" ".join(ws)]
+    return list(dict.fromkeys(
+        " ".join(ws[i:i + k]) for i in range(len(ws) - k + 1)))
+
+
+def _pos_shingles_replay(t, k):
+    ws = (t or "").split(" ")
+    return [" ".join(ws[i:i + k]) for i in range(max(len(ws) - k + 1, 1))]
+
+
+def test_shingles_match_loop_replay(spark):
+    texts = [None, "", "solo", "a b c", "a b c a b c a b c", "x  y x  y z",
+             "one two three four five"]
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    for k in (1, 2, 3):
+        got = {r.id: (r.sh, r.pos) for r in df.select(
+            "id", D.shingles("text", k).alias("sh"),
+            D.pos_shingles("text", k).alias("pos")).collect()}
+        for i, t in enumerate(texts):
+            assert got[i] == (_shingles_replay(t, k),
+                              _pos_shingles_replay(t, k)), (t, k)
+    # repeated windows: shingles dedupe in first-seen order, positional
+    # shingles keep every occurrence
+    assert _shingles_replay(texts[4], 3) == ["a b c", "b c a", "c a b"]
+    assert len(_pos_shingles_replay(texts[4], 3)) == 7
+
+
+def test_sign_buckets_match_numpy_replay(spark):
+    """Table t buckets by the sign bits over hyperplanes seeded 42 + t;
+    float and double inputs bucket alike, and a zero vector is bucket 0
+    in every table."""
+    dim, n_planes, n_tables = 8, 5, 3
+    rng = np.random.RandomState(11)
+    planes = [np.array([[S.plane_component_py(p, j, seed=42 + t)
+                         for j in range(dim)] for p in range(n_planes)])
+              for t in range(n_tables)]
+    vecs = {"float": [rng.randn(dim).astype("float32") for _ in range(6)],
+            "double": [rng.randn(dim) for _ in range(6)]}
+    for typ, vs in vecs.items():
+        vs = vs + [np.zeros(dim)]
+        df = spark.createDataFrame(
+            [(i, [float(x) for x in v]) for i, v in enumerate(vs)],
+            f"id int, v array<{typ}>")
+        got = {r.id: r.b for r in df.select("id", S.sign_buckets(
+            "v", n_tables=n_tables, n_planes=n_planes, dim=dim)
+            .alias("b")).collect()}
+        for i, v in enumerate(vs):
+            x = np.asarray(v, dtype=np.float64)
+            want = [sum(1 << p for p in range(n_planes)
+                        if float(np.dot(planes[t][p], x)) > 0)
+                    for t in range(n_tables)]
+            assert got[i] == want, (typ, i)
+        assert got[len(vs) - 1] == [0] * n_tables
+    with pytest.raises(ValueError, match="dim"):
+        S.sign_buckets("v", n_tables=1, n_planes=2, dim=None)
 
 
 def test_ann_recall_vs_brute_force(spark):

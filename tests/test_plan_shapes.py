@@ -443,3 +443,24 @@ def test_capped_pair_operators_observe_in_query(spark):
         assert "CollectMetrics" in plan
         assert "Join" not in plan
         assert "ExistingRDD" not in plan
+
+
+def test_lsh_topk_tables_share_one_scan(spark, tmp_path):
+    """All sign-LSH tables bucket in one Arrow pass over one scan per side:
+    more tables cost a wider matrix product, not more scans or UDF nodes."""
+    import numpy as np
+    from pastash_spark.operators.similarity import lsh_topk
+    rng = np.random.RandomState(5)
+    path = str(tmp_path / "emb")
+    spark.createDataFrame(
+        [(i, rng.randn(16).astype("float32").tolist()) for i in range(200)],
+        "vec_id int, embedding array<float>").write.parquet(path)
+    emb = spark.read.parquet(path)
+    q = emb.filter(F.col("vec_id") < 5)
+
+    def shape(n_tables):
+        plan = _plan(lsh_topk(emb, q, k=3, n_planes=4, dim=16,
+                              n_tables=n_tables))
+        return plan.count("FileScan parquet"), plan.count("ArrowEvalPython")
+
+    assert shape(8) == shape(1) == (2, 2)
