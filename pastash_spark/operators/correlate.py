@@ -10,8 +10,9 @@ variants live in streaming/.
 
 from __future__ import annotations
 
+import functools
 import re
-from typing import Sequence
+from typing import NamedTuple, Sequence
 
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
@@ -217,16 +218,23 @@ def esl_correlate(df: DataFrame, *, key: str = "correlation_id",
                         - _epoch(F.col("created_at"))))
 
 
+def _first_match(arms) -> Column:
+    """One CASE WHEN over ``(condition, value)`` arms: the first arm whose
+    condition holds gives the value, else NULL."""
+    expr = None
+    for cond, val in arms:
+        expr = F.when(cond, val) if expr is None else expr.when(cond, val)
+    return expr
+
+
 def type_dispatch(df: DataFrame, type_col: str,
                   handlers: "dict[object, Column]",
                   target: str, default: Column | None = None) -> DataFrame:
     """app_janus-style type-dispatched handling (filter_app_janus.js:34-121):
     the per-type handler table becomes one mutually-exclusive CASE column —
     evaluated once per row instead of a JS handler lookup per event."""
-    expr = None
-    for tval, col in handlers.items():
-        cond = F.col(type_col) == tval
-        expr = F.when(cond, col) if expr is None else expr.when(cond, col)
+    expr = _first_match((F.col(type_col) == tval, col)
+                        for tval, col in handlers.items())
     if default is not None:
         expr = expr.otherwise(default)
     return df.withColumn(target, expr)
@@ -888,8 +896,79 @@ def app_cisco_correlate(df: DataFrame, *, field: str = "message",
 
 # --- janus trace/span assembly ------------------------------------------------
 
-_JANUS_USER_EVENTS = ("joined", "configured", "published", "subscribing",
-                      "subscribed", "updated", "unpublished", "leaving")
+# The janus span model, declared once: janus_trace_spans and its streaming
+# twin (streaming/state.py janus_span_stream) derive every predicate, span
+# name, service and parent from the two tables below.  A row is of kind
+# (type, subtype) when both equal; a None subtype matches any.
+
+
+class _Family(NamedTuple):
+    """A paired family (an uptrace LRU entry kind).  A row of the kind whose
+    ``opens`` field holds the value opens the family's span; one whose
+    ``closes`` field holds its value emits that span with its real
+    duration.  A row may do both: its own open counts, so it pairs with
+    itself."""
+    family: str
+    name: str                   # the open span's name
+    service: str
+    type: int
+    subtype: int | None
+    opens: tuple[str, str]      # (field, value)
+    closes: tuple[str, str]
+
+
+class _Point(NamedTuple):
+    """A zero-duration point span, parented to the span of ``parent`` open
+    at the row (NULL if that family never opened; the root always
+    exists).  A row of the kind matches when ``field`` is None or its
+    ``field`` value is a key of the ``name`` map."""
+    parent: str
+    service: str
+    type: int
+    subtype: int | None
+    field: str | None
+    name: str | dict[str, str]
+
+
+_JANUS_ROOT = "sess"            # its span is the trace root
+_JANUS_FAMILIES = (      # uptrace lru sess_/att_/sdp_/ice_ (:140-330)
+    _Family("sess", "Session", "Session", 1, None,
+            ("event_name", "created"), ("event_name", "destroyed")),
+    _Family("att", "Handle attached", "Handle", 2, None,
+            ("event_name", "attached"), ("event_name", "detached")),
+    _Family("sdp", "JSEP Event - Offer", "JSEP", 8, None,
+            ("jsep_type", "offer"), ("jsep_owner", "local")),
+    _Family("ice", "ICE gathering", "ICE", 16, 1,
+            ("ice_state", "gathering"), ("ice_state", "ready")),
+)
+# the first matching row wins
+_JANUS_POINTS = (
+    _Point("sess", "Session", 1, None, "event_name",
+           {"destroyed": "Session destroyed"}),
+    _Point("att", "Handle", 2, None, "event_name",
+           {"detached": "Handle detached"}),
+    _Point("sdp", "JSEP", 8, None, "jsep_owner",
+           {"local": "JSEP Event - Answer"}),
+    _Point("ice", "ICE", 16, 1, "ice_state",       # tracer :447-566
+           {"connecting": "ICE connecting", "connected": "ICE connected",
+            "ready": "ICE ready"}),
+    _Point("ice", "ICE", 16, 2, None, "Local Candidate"),
+    _Point("ice", "ICE", 16, 3, None, "Remote Candidate"),
+    _Point("ice", "ICE", 16, 4, None, "Selected Candidates"),
+    _Point("ice", "ICE", 16, 5, "dtls_state",
+           {"trying": "DTLS trying", "connected": "DTLS connected"}),
+    _Point("ice", "ICE", 16, 6, None, "Connection Up"),
+    _Point("sess", "External", 4, None, None,      # tracer :300-320
+           "External Event"),
+    _Point("sess", "Plugin", 64, None, "data_event",   # tracer :698-814
+           {e: f"User {e}" for e in ("joined", "configured", "published",
+                                     "subscribing", "subscribed", "updated",
+                                     "unpublished", "leaving")}),
+    _Point("sess", "Transport Originated", 128, None, None,
+           "Transport connected"),
+    _Point("sess", "Core", 256, 1, None, "Startup"),
+    _Point("sess", "Core", 256, 2, None, "Shutdown"),
+)
 
 
 def janus_trace_spans(df: DataFrame, *, order: str = "event_id",
@@ -900,38 +979,20 @@ def janus_trace_spans(df: DataFrame, *, order: str = "event_id",
     (:174-919, flat deterministic-id spans) and app_janus_uptrace/
     filter_app_janus_uptrace.js (:140-420, LRU-paired start/end spans with
     real durations).  We implement the uptrace PAIRING with the tracer's
-    span NAMES/services — per session (the trace):
-
-      * type 1 ``created`` OPENS the root ``Session`` span; ``destroyed``
-        CLOSES it (uptrace :153-173 lru sess_*) and emits the point span
-        ``Session destroyed``.
-      * type 2 ``attached`` opens ``Handle attached`` (lru att_*, parent =
-        Session); ``detached`` closes it + point ``Handle detached``.
-      * type 8 jsep ``offer`` opens ``JSEP Event - Offer`` (lru sdp_*);
-        owner ``local`` closes it + point ``JSEP Event - Answer``.
-      * type 16 subtype 1 ``gathering`` opens ``ICE gathering`` (lru
-        ice_*); ``connecting``/``connected`` are point children;
-        ``ready`` closes it + point ``ICE ready``.  Subtypes 2/3/4 emit
-        point children ``Local Candidate``/``Remote Candidate``/
-        ``Selected Candidates``; subtype 5 ``DTLS trying``/``DTLS
-        connected``; subtype 6 ``Connection Up`` — all parented to the
-        open ICE span (tracer :447-566).
-      * type 4 -> point ``External Event`` (service External); type 64
-        data.event in joined/configured/published/subscribing/subscribed/
-        updated/unpublished/leaving -> point ``User <event>`` (service
-        Plugin) — both parented to the Session span (tracer :300-320,
-        :698-814).
-      * type 128 -> point ``Transport connected`` (service ``Transport
-        Originated``); type 256 subtype 1/2 -> ``Startup``/``Shutdown``
-        (service Core).  No session exists, so the trace key is the
-        EMITTER.  Documented divergences: the tracer keys 128 on
-        ``Math.random()`` (:636) — we key deterministically; its 256
-        branch compares the stringified subtype with ``=== 1`` (:662-668)
-        so it never actually emits — we implement the documented intent.
+    span NAMES/services, per trace key: the session, or ``em:<emitter>``
+    for the session-less types 128/256.  The span model (which rows open
+    and close each paired family, and every point span with its service
+    and parent) is the ``_JANUS_FAMILIES``/``_JANUS_POINTS`` tables above.
+    Documented divergences: the tracer keys 128 on ``Math.random()``
+    (:636) — we key deterministically; its 256 branch compares the
+    stringified subtype with ``=== 1`` (:662-668) so it never actually
+    emits — we implement the documented intent.
 
     Like the reference, a close without a live open pairs with the stale
     open (the LRU never deletes att_/sdp_/ice_ entries); an open that is
-    never closed is never exported (the LRU span is dropped unflushed).
+    never closed is never exported (the LRU span is dropped unflushed); a
+    close that no open preceded emits only its point span, with a NULL
+    parent unless the parent is the root (whose id needs no open).
     Batch re-expression: ONE shuffle — a per-trace-key window forward-
     fills each family's open (order, ts), closes emit the paired span
     with its real duration plus their point span, via one array-explode.
@@ -940,220 +1001,146 @@ def janus_trace_spans(df: DataFrame, *, order: str = "event_id",
     reference uses md5 for trace ids but shake256/random bytes for span
     ids — same determinism-or-uniqueness intent, different hash):
     trace_id = md5(trace_key); root span_id = md5(trace_key)[:16]; child
-    span ids = md5(trace_key:family:order)[:16].
+    span ids = md5(trace_key:family:order)[:16] (family ``pt`` for point
+    spans, at their own order).
 
     Expects columns: ``type`` int, ``session_id``, ``order``/``ts``
     (BIGINT event time, e.g. Janus micros) plus the optional per-type
-    string columns subtype(int)/event_name/jsep_type/jsep_owner/
-    ice_state/dtls_state/data_event/emitter (missing ones read as NULL).
-    Output: one row per span — (order, session_id, trace_id, span_id,
-    parent_span_id, name, service, start_us, end_us, duration_us).
-    Type 32 media METRICS are the tracer's prometheus half — covered by
-    app_janus_correlate's enrichment, not spans."""
+    columns the tables read: subtype(int)/event_name/jsep_type/jsep_owner/
+    ice_state/dtls_state/data_event, and emitter (missing ones read as
+    NULL).  Output: one row per span — (order, session_id, trace_id,
+    span_id, parent_span_id, name, service, start_us, end_us,
+    duration_us).  Type 32 media METRICS are the tracer's prometheus half
+    — covered by app_janus_correlate's enrichment, not spans."""
     cols = set(df.columns)
 
+    # cached: every table row reuses one Column per field and per kind
+    # (each Column call is a py4j round trip at build time)
+    @functools.cache
     def c(name: str, dtype: str = "string") -> Column:
         return (F.col(name).cast(dtype) if name in cols
                 else F.lit(None).cast(dtype))
 
     t = F.col("type").cast("int")
-    sub = c("subtype", "int")
-    name_ev = c("event_name")
-    jsep_type, jsep_owner = c("jsep_type"), c("jsep_owner")
-    ice, dtls, data_ev = c("ice_state"), c("dtls_state"), c("data_event")
-    emitter = c("emitter")
     if types is not None:
         df = df.filter(t.isin(*[int(x) for x in types]))
 
+    @functools.cache
+    def kind(typ: int, sub: int | None) -> Column:
+        return (t == typ) if sub is None else (
+            (t == typ) & (c("subtype", "int") == sub))
+
+    def holds(row: _Family, pair: tuple[str, str]) -> Column:
+        return kind(row.type, row.subtype) & (c(pair[0]) == pair[1])
+
+    fams = [f.family for f in _JANUS_FAMILIES]
+    kids = {fam: [j for j, p in enumerate(_JANUS_POINTS) if p.parent == fam]
+            for fam in fams}
+    points = []     # (condition, span name) per point row, in table order
+    for p in _JANUS_POINTS:
+        if p.field is None:
+            points.append((kind(p.type, p.subtype), F.lit(p.name)))
+        else:
+            points.append((kind(p.type, p.subtype)
+                           & c(p.field).isin(*p.name),
+                           _first_match((c(p.field) == v, F.lit(name))
+                                        for v, name in p.name.items())))
+
     tk = F.when(t.isin(128, 256), F.concat(F.lit("em:"), F.coalesce(
-        emitter, F.lit("")))).otherwise(F.col(session).cast("string"))
+        c("emitter"), F.lit("")))).otherwise(F.col(session).cast("string"))
     ts_c = F.col("_ts")
 
-    open_sess = (t == 1) & (name_ev == "created")
-    close_sess = (t == 1) & (name_ev == "destroyed")
-    open_att = (t == 2) & (name_ev == "attached")
-    close_att = (t == 2) & (name_ev == "detached")
-    open_sdp = (t == 8) & (jsep_type == "offer")
-    close_sdp = (t == 8) & (jsep_owner == "local")
-    open_ice = (t == 16) & (sub == 1) & (ice == "gathering")
-    close_ice = (t == 16) & (sub == 1) & (ice == "ready")
-
-    def opened(fam: int, val: Column) -> Column:
-        return F.when(F.col("_ofl") == fam, val)
-
-    ice16 = (t == 16) & sub.isin(2, 3, 4, 5, 6)
-    ice16_name = (
-        F.when(sub == 2, "Local Candidate")
-        .when(sub == 3, "Remote Candidate")
-        .when(sub == 4, "Selected Candidates")
-        .when((sub == 5) & (dtls == "trying"), "DTLS trying")
-        .when((sub == 5) & (dtls == "connected"), "DTLS connected")
-        .when(sub == 6, "Connection Up"))
-    ice1_pt = (t == 16) & (sub == 1) & ice.isin("connecting", "connected",
-                                                "ready")
-    ice1_name = (F.when(ice == "connecting", "ICE connecting")
-                 .when(ice == "connected", "ICE connected")
-                 .otherwise("ICE ready"))
-
     # PERF (r06b): NARROW the frame before the window shuffle — the raw
-    # per-type string columns (event_name/jsep_*/ice_state/dtls_state/
-    # data_event/emitter) are consumed only by per-row predicates, so they
-    # collapse into three tiny pre-shuffle columns: the open-family code
-    # `_ofl`, the close-family code `_cfl`, the point-slot selector
-    # `_pfam` (fully per-row), plus the precomputed point-span NAME
-    # (its only data-dependent strings).  Roughly halves the bytes
-    # through the exchange and the window buffer copies; every value is
-    # computed from the same expressions, one Project earlier.
+    # per-type string columns are read only by per-row predicates, so they
+    # collapse into the open-family code `_ofl`, the close-family code
+    # `_cfl`, the point row `_pt` and the point-span name `_pname`.
+    # Roughly halves the bytes through the exchange and the window buffer.
     pre = df.select(
         tk.alias("_tk"), F.col(order),
         F.col(ts).cast("long").alias("_ts"),
         F.col(session).alias("_session"),
-        (F.when(open_att, 0).when(open_sdp, 1).when(open_ice, 2)
-         .when(open_sess, 3)).alias("_ofl"),
-        (F.when(close_att, 0).when(close_sdp, 1).when(close_ice, 2)
-         .when(close_sess, 3)).alias("_cfl"),
-        (F.when(close_sess, 0)
-         .when(close_att, 1)
-         .when(close_sdp, 2)
-         .when(ice1_pt, 3)
-         .when(ice16 & ice16_name.isNotNull(), 4)
-         .when(t == 4, 5)
-         .when((t == 64) & data_ev.isin(*_JANUS_USER_EVENTS), 6)
-         .when(t == 128, 7)
-         .when((t == 256) & (sub == 1), 8)
-         .when((t == 256) & (sub == 2), 9))
-        .alias("_pfam"),
-        (F.when(close_sess, "Session destroyed")
-         .when(close_att, "Handle detached")
-         .when(close_sdp, "JSEP Event - Answer")
-         .when(ice1_pt, ice1_name)
-         .when(ice16, ice16_name)
-         .when(t == 4, F.lit("External Event"))
-         .when((t == 64) & data_ev.isin(*_JANUS_USER_EVENTS),
-               F.concat(F.lit("User "), data_ev))
-         .when(t == 128, F.lit("Transport connected"))
-         .when((t == 256) & (sub == 1), F.lit("Startup"))
-         .when((t == 256) & (sub == 2), F.lit("Shutdown")))
-        .alias("_pname"))
+        _first_match((holds(f, f.opens), i)
+                     for i, f in enumerate(_JANUS_FAMILIES)).alias("_ofl"),
+        _first_match((holds(f, f.closes), i)
+                     for i, f in enumerate(_JANUS_FAMILIES)).alias("_cfl"),
+        _first_match((cond, j) for j, (cond, _) in enumerate(points))
+        .alias("_pt"),
+        _first_match(points).alias("_pname"))
 
-    # each family's open (order, ts), carried to its close
+    # each family's latest open (order, ts), the row's own included
     base = asof_lookup(pre, key="_tk", order=order, values={
-        "_sess_ts": opened(3, ts_c),
-        "_att_ord": opened(0, F.col(order)), "_att_ts": opened(0, ts_c),
-        "_sdp_ord": opened(1, F.col(order)), "_sdp_ts": opened(1, ts_c),
-        "_ice_ord": opened(2, F.col(order)), "_ice_ts": opened(2, ts_c)})
+        f"_o_{fam}": F.when(F.col("_ofl") == i, F.struct(
+            F.col(order).alias("o"), ts_c.alias("t")))
+        for i, fam in enumerate(fams)})
+    # `_ofam`: the family whose open span this row closes
+    base = base.select("*", _first_match(
+        ((F.col("_cfl") == i) & F.col(f"_o_{fam}").isNotNull(), i)
+        for i, fam in enumerate(fams)).alias("_ofam"))
 
-    # PERF (r06): every deterministic id is computed ONCE per row as a
-    # named column (the old per-branch span structs re-derived the same
-    # md5/concat expressions up to 4x per row and bloated the generated
-    # code); the branch chains collapse to ONE family-selector CaseWhen
-    # per slot plus small per-field CaseWhens keyed on it.  Values are
-    # unchanged: selector order mirrors the old when-chain order exactly,
-    # and the unconditional id columns evaluate the identical expressions
-    # the old branches evaluated lazily (incl. the concat_ws null-skip for
-    # a family that never opened).
-    def child_id(family: str, ord_col: Column) -> Column:
-        return F.substring(
-            F.md5(F.concat_ws(":", F.col("_tk"), F.lit(family),
-                              ord_col.cast("string"))), 1, 16)
+    # PERF (r06/r06b): every id is ONE named column, md5-hashed only on
+    # the rows whose span reads it.  Catalyst runs no common-subexpression
+    # elimination inside a Generate's generator, so anything several span
+    # fields read must be a real column before the explode.
+    ofam, pt = F.col("_ofam"), F.col("_pt")
+    emit_any = ofam.isNotNull() | pt.isNotNull()
+    closing = [ofam == i for i in range(len(fams))]
 
-    # Family SELECTORS are materialized as int columns alongside the ids:
-    # Catalyst does not run common-subexpression elimination inside a
-    # Generate's generator expression, so anything referenced by several
-    # struct fields must be a real column or it re-evaluates per field.
-    cfl = F.col("_cfl")
-    base = base.select(
-        "*",
-        (F.when((cfl == 0) & F.col("_att_ord").isNotNull(), 0)
-         .when((cfl == 1) & F.col("_sdp_ord").isNotNull(), 1)
-         .when((cfl == 2) & F.col("_ice_ord").isNotNull(), 2)
-         .when((cfl == 3) & F.col("_sess_ts").isNotNull(), 3))
-        .alias("_ofam"))
-    # PERF (r06b): every id md5 is GUARDED by the selector that will read
-    # it — a non-emitting row (neither slot fires) pays zero hashes and an
-    # emitting row hashes only its own families (was 6 unconditional md5
-    # per row; the guarded-off ids are null exactly where the pick()
-    # selectors never dereference them, so emitted values are unchanged).
-    ofam_c, pfam_c = F.col("_ofam"), F.col("_pfam")
-    emit_any = ofam_c.isNotNull() | pfam_c.isNotNull()
-    base = base.select(
-        "*",
-        F.when(emit_any, F.md5(F.col("_tk"))).alias("_trace"),
-        F.when(emit_any,
-               F.substring(F.md5(F.col("_tk")), 1, 16)).alias("_root"),
-        F.when((ofam_c == 0) | (pfam_c == 1),
-               child_id("att", F.col("_att_ord"))).alias("_attid"),
-        F.when((ofam_c == 1) | (pfam_c == 2),
-               child_id("sdp", F.col("_sdp_ord"))).alias("_sdpid"),
-        F.when((ofam_c == 2) | (pfam_c == 3) | (pfam_c == 4),
-               child_id("ice", F.col("_ice_ord"))).alias("_iceid"),
-        F.when(pfam_c.isNotNull(),
-               child_id("pt", F.col(order))).alias("_ptid"))
+    def child_id(fam: str, ord_col: Column) -> Column:
+        return F.substring(F.md5(F.concat_ws(
+            ":", F.col("_tk"), F.lit(fam), ord_col.cast("string"))), 1, 16)
 
-    null_parent = F.lit(None).cast("string")
-    root_id = F.col("_root")
-    att_id, sdp_id, ice_id = F.col("_attid"), F.col("_sdpid"), F.col("_iceid")
-    pt_id = F.col("_ptid")
+    ids = [F.when(emit_any, F.md5(F.col("_tk"))).alias("_trace"),
+           F.when(emit_any, F.substring(F.md5(F.col("_tk")), 1, 16))
+           .alias("_root"),
+           F.when(pt.isNotNull(), child_id("pt", F.col(order))).alias("_ptid")]
+    for i, fam in enumerate(fams):
+        if fam != _JANUS_ROOT:
+            opened = F.col(f"_o_{fam}")
+            ids.append(F.when((closing[i] | pt.isin(*kids[fam]))
+                              & opened.isNotNull(),
+                              child_id(fam, opened["o"])).alias(f"_id_{fam}"))
+    base = base.select("*", *ids)
 
-    def pick(sel: Column, vals: "list[Column]") -> Column:
-        expr = None
-        for i, v in enumerate(vals):
-            expr = (F.when(sel == i, v) if expr is None
-                    else expr.when(sel == i, v))
-        return expr
+    def span_id(fam: str) -> Column:
+        return F.col("_root" if fam == _JANUS_ROOT else f"_id_{fam}")
 
-    # paired OPEN-span emission, at the family's close event
-    ofam = F.col("_ofam")
-    o_start = pick(ofam, [F.col("_att_ts"), F.col("_sdp_ts"),
-                          F.col("_ice_ts"), F.col("_sess_ts")])
+    def by_family(val) -> Column:
+        return _first_match(zip(closing, map(val, _JANUS_FAMILIES)))
+
+    # the paired open span, emitted at its family's close
+    start = by_family(lambda f: F.col(f"_o_{f.family}")["t"])
     open_emit = F.when(ofam.isNotNull(), F.struct(
-        pick(ofam, [F.lit("Handle attached"), F.lit("JSEP Event - Offer"),
-                    F.lit("ICE gathering"), F.lit("Session")]).alias("name"),
-        pick(ofam, [F.lit("Handle"), F.lit("JSEP"), F.lit("ICE"),
-                    F.lit("Session")]).alias("service"),
-        pick(ofam, [att_id, sdp_id, ice_id, root_id]).alias("span_id"),
-        pick(ofam, [root_id, root_id, root_id,
-                    null_parent]).alias("parent_span_id"),
-        o_start.cast("long").alias("start_us"),
-        ts_c.cast("long").alias("end_us"),
-        (ts_c - o_start).cast("long").alias("duration_us")))
-
-    pfam = F.col("_pfam")
-    point_emit = F.when(pfam.isNotNull(), F.struct(
+        by_family(lambda f: F.lit(f.name)).alias("name"),
+        by_family(lambda f: F.lit(f.service)).alias("service"),
+        by_family(lambda f: span_id(f.family)).alias("span_id"),
+        by_family(lambda f: F.lit(None).cast("string")
+                  if f.family == _JANUS_ROOT else F.col("_root"))
+        .alias("parent_span_id"),
+        start.alias("start_us"), ts_c.alias("end_us"),
+        (ts_c - start).alias("duration_us")))
+    point_emit = F.when(pt.isNotNull(), F.struct(
         F.col("_pname").alias("name"),
-        pick(pfam, [F.lit("Session"), F.lit("Handle"), F.lit("JSEP"),
-                    F.lit("ICE"), F.lit("ICE"), F.lit("External"),
-                    F.lit("Plugin"), F.lit("Transport Originated"),
-                    F.lit("Core"), F.lit("Core")]).alias("service"),
-        pt_id.alias("span_id"),
-        pick(pfam, [root_id, att_id, sdp_id, ice_id, ice_id, root_id,
-                    root_id, root_id, root_id,
-                    root_id]).alias("parent_span_id"),
-        ts_c.cast("long").alias("start_us"),
-        ts_c.cast("long").alias("end_us"),
-        (ts_c - ts_c).cast("long").alias("duration_us")))
+        _first_match((pt == j, F.lit(p.service))
+                     for j, p in enumerate(_JANUS_POINTS)).alias("service"),
+        F.col("_ptid").alias("span_id"),
+        _first_match((pt.isin(*kids[fam]), span_id(fam)) for fam in fams)
+        .alias("parent_span_id"),
+        ts_c.alias("start_us"), ts_c.alias("end_us"),
+        (ts_c - ts_c).alias("duration_us")))
 
     # Explode the 2-slot span array FIRST and drop the null slots with a
     # plain post-filter.  An F.filter(...) HOF here would be a
     # CodegenFallback expression, forcing the span-struct CaseWhen trees
     # into interpreted per-row evaluation; explode+IsNotNull keeps them in
-    # codegen.  Row set is identical: a null slot exploded then filtered
-    # == a slot removed before explode (and rows where both slots are
-    # null vanish either way).
-    out = (base
-           .select(F.col(order), F.col("_session").alias("session_id"),
-                   F.col("_trace").alias("trace_id"),
-                   F.explode(F.array(open_emit, point_emit)).alias("_sp"))
-           .filter(F.col("_sp").isNotNull())
-           .select(F.col(order), "session_id", "trace_id",
-                   F.col("_sp.span_id").alias("span_id"),
-                   F.col("_sp.parent_span_id").alias("parent_span_id"),
-                   F.col("_sp.name").alias("name"),
-                   F.col("_sp.service").alias("service"),
-                   F.col("_sp.start_us").alias("start_us"),
-                   F.col("_sp.end_us").alias("end_us"),
-                   F.col("_sp.duration_us").alias("duration_us")))
-    return out
+    # codegen.
+    return (base
+            .select(F.col(order), F.col("_session").alias("session_id"),
+                    F.col("_trace").alias("trace_id"),
+                    F.explode(F.array(open_emit, point_emit)).alias("_sp"))
+            .filter(F.col("_sp").isNotNull())
+            .select(order, "session_id", "trace_id", "_sp.span_id",
+                    "_sp.parent_span_id", "_sp.name", "_sp.service",
+                    "_sp.start_us", "_sp.end_us", "_sp.duration_us"))
 
 
 # --- app_rtpproxy -------------------------------------------------------------

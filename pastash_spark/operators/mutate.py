@@ -138,9 +138,6 @@ def eval_expr(df: DataFrame, target: str, expression: str) -> DataFrame:
     return df.withColumn(target, F.expr(expression))
 
 
-tinymath = eval_expr
-
-
 def _mustache_escape_col(c: Column) -> Column:
     """mustache.js HTML entity escaping as chained codegen replaces."""
     from pastash_spark.functions.mustache import _ESCAPES

@@ -247,13 +247,15 @@ def lsh_near_dup_pairs(df: DataFrame, *, id_col: str = "vec_id",
             .select("id_a", "id_b"))
 
 
-def ivf_assign(df: DataFrame, centroids: list, *, vec_col: str = "v",
-               cell_col: str = "cell", nprobe: int = 1) -> DataFrame:
-    """Assign each vector its ``nprobe`` nearest centroid cells (cosine,
-    ties to the smaller centroid id).  ``centroids`` = [(cid, [floats])],
-    small (they ride into the UDF closure; at real scale they'd broadcast).
-    One Arrow pass: the whole batch scores against the centroid matrix as
-    a single normalized matrix product."""
+def ivf_assign(v: str, centroids: list, *, nprobe: int = 1) -> Column:
+    """The ``nprobe`` nearest centroid cells (cosine, ties to the smaller
+    centroid id) of the vector column named ``v``: ``array<long>``.
+    ``centroids`` = [(cid, [floats])], small (they ride into the UDF
+    closure; at real scale they'd broadcast).  One Arrow pass: the whole
+    batch scores against the centroid matrix as a single normalized matrix
+    product.  Callers explode the array inside the generator, so the UDF
+    runs once per row (a projected cell column lets the join's inferred
+    not-null filter re-run it below the projection)."""
     cids = np.array([c[0] for c in centroids], dtype=np.int64)
     cm = np.stack([np.asarray(c[1], dtype=np.float64) for c in centroids])
     cm = cm / np.linalg.norm(cm, axis=1, keepdims=True)
@@ -269,7 +271,7 @@ def ivf_assign(df: DataFrame, centroids: list, *, vec_col: str = "v",
         top = np.argsort(-sims, axis=1, kind="stable")[:, :nprobe]
         return pd.Series(list(cids[top]))
 
-    return df.withColumn(cell_col, cells(F.col(vec_col).cast("array<double>")))
+    return cells(F.col(v).cast("array<double>"))
 
 
 def ivf_topk(corpus: DataFrame, queries: DataFrame, *,
@@ -291,13 +293,12 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, *,
     cents = [(r[0], list(r[1])) for r in
              base.filter(F.col("neighbor_id") < n_centroids)
              .select("neighbor_id", "_cv").collect()]
-    cb = ivf_assign(base, cents, vec_col="_cv", cell_col="_cells", nprobe=1) \
-        .withColumn("cell", F.element_at("_cells", 1)).drop("_cells")
-    qb = ivf_assign(
-        queries.select(F.col(id_col).alias("query_id"),
-                       F.col(vec_col).cast("array<double>").alias("_qv")),
-        cents, vec_col="_qv", cell_col="_cells", nprobe=nprobe) \
-        .select("query_id", "_qv", F.explode("_cells").alias("cell"))
+    cb = base.select("neighbor_id", "_cv", F.explode(
+        ivf_assign("_cv", cents, nprobe=1)).alias("cell"))
+    qb = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("_qv"),
+        F.explode(ivf_assign(vec_col, cents, nprobe=nprobe)).alias("cell"))
     scored = (cb.join(F.broadcast(qb), "cell")
               .filter(F.col("neighbor_id") != F.col("query_id"))
               .withColumn("_sim", cosine(F.col("_qv"), F.col("_cv"))))

@@ -101,6 +101,7 @@ _REGISTRY: dict[str, StageFn] = {
     "app_janus_sip": C.app_janus_sip_correlate,
     # conf-surface plugin names that alias operators above
     "mutate_replace": M.gsub,
+    "tinymath": M.eval_expr,
     "noop": lambda df: df,
 }
 

@@ -27,18 +27,6 @@ _LIST_PARAMS = {"fields", "numerical_fields", "tags", "whitelist", "blacklist",
 _INT_PARAMS = {"max_size", "n_hashes", "bands", "every_n"}
 _FLOAT_PARAMS = {"gap_seconds", "threshold"}
 
-# url op name -> builder op name where they differ
-_ALIASES = {
-    "regex": "regex", "grok": "grok", "grep": "grep", "mutate_replace": "gsub",
-    "compute_field": "compute_field", "compute_date_field": "compute_date_field",
-    "mutate_hash": "mutate_hash", "rename": "rename", "omit": "omit",
-    "split": "split", "truncate": "truncate", "json_fields": "json_fields",
-    "csv": "csv", "syslog_pri": "syslog_pri", "bunyan": "bunyan",
-    "http_status_classifier": "http_status_classifier", "ipproto": "ipproto",
-    "eval": "eval", "tinymath": "eval", "mustache": "mustache",
-    "multiline": "multiline", "reverse_dns": "reverse_dns",
-}
-
 
 def parse_url(url: str) -> dict[str, Any]:
     """One plugin URL -> {"role": ..., "op": ..., **params}."""
@@ -49,10 +37,9 @@ def parse_url(url: str) -> dict[str, Any]:
         raise ValueError(f"bad plugin url {url!r} "
                          "(want role://name://target?params)") from e
     target, _, qs = tail.partition("?")
-    spec: dict[str, Any] = {"role": role,
-                            "op": _ALIASES.get(name, name)}
+    spec: dict[str, Any] = {"role": role, "op": name}
     if target:
-        if role == "filter" and _ALIASES.get(name, name) == "regex":
+        if role == "filter" and name == "regex":
             # regex://<name> resolves a builtin pattern file
             # (filter_regex.js host_field='builtin_regex')
             spec["builtin"] = urllib.parse.unquote(target)

@@ -187,37 +187,46 @@ def janus_span_stream(df: DataFrame, *, session: str = "session_id",
                       order: str = "ord", ts: str = "ts_us",
                       ttl_ms: int = 300_000) -> DataFrame:
     """Streaming twin of correlate.janus_trace_spans for the STATEFUL
-    pairing families (the uptrace LRU, filter_app_janus_uptrace.js:140-330):
-    per-session GroupState carries each family's open (order, ts) —
-    Session created/destroyed, Handle attached/detached, JSEP offer/local,
-    ICE gathering/ready — closes emit the paired open span with its real
-    duration plus the point close span, exactly like the batch kernel's
-    forward-fill.  ``ttl_ms`` is the LRU maxAge: state for a session idle
-    longer than the timeout is dropped, and its unclosed opens are never
-    exported (uptrace drops un-ended LRU spans the same way).  The
-    stateless point types (4, 16/2-6, 64, 128, 256) need no state — run
-    them through the batch operator on the same stream.
+    pairing families (the uptrace LRU, filter_app_janus_uptrace.js:140-330)
+    and the point spans on their rows: per-session GroupState carries each
+    family's open (order, ts); a close emits the paired open span with its
+    real duration, and a row emits its point span, by the same
+    ``_JANUS_FAMILIES``/``_JANUS_POINTS`` rules (and ids) as the batch
+    kernel.  ``ttl_ms`` is the LRU maxAge: state for a session idle longer
+    than the timeout is dropped, and its unclosed opens are never exported
+    (uptrace drops un-ended LRU spans the same way).  Point spans of the
+    other kinds need no state — run them through the batch operator on
+    the same stream.
 
-    The 8-way FSM stays per-row inside the state function (unlike the
+    The state machine stays per-row inside the state function (unlike the
     vectorized lru/multiline twins): a session's events per micro-batch
     are few, and the BATCH kernel (one window + explode, all-native) is
     the hot path for replay/backfill volumes.
 
-    Input columns: session, order, ts, type int, subtype int, event_name,
-    jsep_type, jsep_owner, ice_state.  Output rows match the batch
-    operator's schema."""
+    Input columns: session, order, ts, type int, subtype int, and every
+    field the ``_JANUS_FAMILIES`` rows read (missing ones read as NULL).
+    Output rows match the batch operator's schema."""
     import hashlib
 
+    from pastash_spark.operators.correlate import (
+        _JANUS_FAMILIES, _JANUS_POINTS, _JANUS_ROOT)
+
+    kinds = {(f.type, f.subtype) for f in _JANUS_FAMILIES}
+    points = [p for p in _JANUS_POINTS if (p.type, p.subtype) in kinds]
     out_schema = (f"`{session}` string, `{order}` long, trace_id string, "
                   "span_id string, parent_span_id string, name string, "
                   "service string, start_us long, end_us long, "
                   "duration_us long")
-    # per-family open (order, ts); -1 = absent
-    state_schema = ("sess_ts long, att_ord long, att_ts long, "
-                    "sdp_ord long, sdp_ts long, ice_ord long, ice_ts long")
+    # per-family open (order, ts); NULL = never opened
+    state_cols = [f"{f.family}_{v} long" for f in _JANUS_FAMILIES
+                  for v in ("ord", "ts")]
 
     def _md5(s: str) -> str:
         return hashlib.md5(s.encode("utf-8")).hexdigest()
+
+    def of_kind(r: dict, row) -> bool:
+        return r["type"] == row.type and (
+            row.subtype is None or r.get("subtype") == row.subtype)
 
     def fn(key_t: Tuple[Any, ...], pdfs: Iterator[pd.DataFrame],
            state: GroupState) -> Iterator[pd.DataFrame]:
@@ -227,72 +236,44 @@ def janus_span_stream(df: DataFrame, *, session: str = "session_id",
         sess = key_t[0]
         tid = _md5(str(sess))
         root = tid[:16]
-        st = list(state.get) if state.exists else [-1] * 7
-        (sess_ts, att_ord, att_ts, sdp_ord, sdp_ts, ice_ord, ice_ts) = st
+        st = state.get if state.exists else [None] * len(state_cols)
+        opened = {f.family: (st[2 * i], st[2 * i + 1])
+                  for i, f in enumerate(_JANUS_FAMILIES)
+                  if st[2 * i] is not None}
         rows = []
 
-        def child(fam: str, o: int) -> str:
-            return _md5(f"{sess}:{fam}:{o}")[:16]
+        def span_id(fam: str) -> str | None:
+            if fam == _JANUS_ROOT:
+                return root
+            return (_md5(f"{sess}:{fam}:{opened[fam][0]}")[:16]
+                    if fam in opened else None)
 
         for pdf in pdfs:
-            pdf = pdf.sort_values(order)
-            for r in pdf.itertuples(index=False):
-                t = int(getattr(r, "type"))
-                o = int(getattr(r, order))
-                t_us = int(getattr(r, ts))
-                name = getattr(r, "event_name", None)
-                if t == 1 and name == "created":
-                    sess_ts = t_us
-                elif t == 1 and name == "destroyed":
-                    if sess_ts >= 0:
-                        rows.append((sess, o, tid, root, None, "Session",
-                                     "Session", sess_ts, t_us,
-                                     t_us - sess_ts))
-                    rows.append((sess, o, tid, child("pt", o), root,
-                                 "Session destroyed", "Session",
-                                 t_us, t_us, 0))
-                elif t == 2 and name == "attached":
-                    att_ord, att_ts = o, t_us
-                elif t == 2 and name == "detached":
-                    if att_ord >= 0:
-                        rows.append((sess, o, tid, child("att", att_ord),
-                                     root, "Handle attached", "Handle",
-                                     att_ts, t_us, t_us - att_ts))
-                    rows.append((sess, o, tid, child("pt", o),
-                                 child("att", att_ord) if att_ord >= 0
-                                 else None,
-                                 "Handle detached", "Handle", t_us, t_us, 0))
-                elif t == 8 and getattr(r, "jsep_type", None) == "offer":
-                    sdp_ord, sdp_ts = o, t_us
-                elif t == 8 and getattr(r, "jsep_owner", None) == "local":
-                    if sdp_ord >= 0:
-                        rows.append((sess, o, tid, child("sdp", sdp_ord),
-                                     root, "JSEP Event - Offer", "JSEP",
-                                     sdp_ts, t_us, t_us - sdp_ts))
-                    rows.append((sess, o, tid, child("pt", o),
-                                 child("sdp", sdp_ord) if sdp_ord >= 0
-                                 else None,
-                                 "JSEP Event - Answer", "JSEP",
-                                 t_us, t_us, 0))
-                elif t == 16 and int(getattr(r, "subtype") or 0) == 1:
-                    ice = getattr(r, "ice_state", None)
-                    if ice == "gathering":
-                        ice_ord, ice_ts = o, t_us
-                    elif ice in ("connecting", "connected", "ready"):
-                        nm = {"connecting": "ICE connecting",
-                              "connected": "ICE connected",
-                              "ready": "ICE ready"}[ice]
-                        if ice == "ready" and ice_ord >= 0:
-                            rows.append((sess, o, tid,
-                                         child("ice", ice_ord), root,
-                                         "ICE gathering", "ICE",
-                                         ice_ts, t_us, t_us - ice_ts))
-                        rows.append((sess, o, tid, child("pt", o),
-                                     child("ice", ice_ord) if ice_ord >= 0
-                                     else None,
-                                     nm, "ICE", t_us, t_us, 0))
-        state.update((sess_ts, att_ord, att_ts, sdp_ord, sdp_ts,
-                      ice_ord, ice_ts))
+            for r in pdf.sort_values(order).to_dict("records"):
+                o, t_us = int(r[order]), int(r[ts])
+                for f in _JANUS_FAMILIES:
+                    if not of_kind(r, f):
+                        continue
+                    if r.get(f.opens[0]) == f.opens[1]:
+                        opened[f.family] = (o, t_us)
+                    if r.get(f.closes[0]) == f.closes[1] \
+                            and f.family in opened:
+                        start = opened[f.family][1]
+                        rows.append((sess, o, tid, span_id(f.family),
+                                     None if f.family == _JANUS_ROOT
+                                     else root, f.name, f.service,
+                                     start, t_us, t_us - start))
+                for p in points:
+                    if of_kind(r, p) and (p.field is None
+                                          or r.get(p.field) in p.name):
+                        rows.append((sess, o, tid, _md5(f"{sess}:pt:{o}")[:16],
+                                     span_id(p.parent),
+                                     p.name if p.field is None
+                                     else p.name[r[p.field]],
+                                     p.service, t_us, t_us, 0))
+                        break
+        state.update(tuple(v for f in _JANUS_FAMILIES
+                           for v in opened.get(f.family, (None, None))))
         state.setTimeoutDuration(ttl_ms)
         if rows:
             yield pd.DataFrame(rows, columns=[
@@ -300,6 +281,6 @@ def janus_span_stream(df: DataFrame, *, session: str = "session_id",
                 "name", "service", "start_us", "end_us", "duration_us"])
 
     return (df.groupBy(session)
-            .applyInPandasWithState(fn, out_schema, state_schema,
+            .applyInPandasWithState(fn, out_schema, ", ".join(state_cols),
                                     "append",
                                     GroupStateTimeout.ProcessingTimeTimeout))

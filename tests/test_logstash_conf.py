@@ -351,6 +351,19 @@ class TestEndToEnd421:
         out, _ = build_conf(df, conf)
         assert out.first().message == "X bcX"
 
+    def test_tinymath_plugin(self, spark):
+        """conf plugin `tinymath` (filter_tinymath.js) resolves through the
+        builder registry to the eval operator: its math is Spark SQL."""
+        conf = """
+        filter {
+          tinymath { target => total expression => "a * 2 + b" }
+        }
+        output { file { path => out } }
+        """
+        df = spark.createDataFrame([(3, 4)], "a int, b int")
+        out, _ = build_conf(df, conf)
+        assert out.first().total == 10
+
     def test_net2file_landing_zone(self, spark, tmp_path):
         """test_405_net2file.js shape: a tcp input (landing-zone model —
         the socket collector deposits raw lines into a directory) with the

@@ -464,3 +464,20 @@ def test_lsh_topk_tables_share_one_scan(spark, tmp_path):
         return plan.count("FileScan parquet"), plan.count("ArrowEvalPython")
 
     assert shape(8) == shape(1) == (2, 2)
+
+
+def test_ivf_topk_assigns_cells_once(spark, tmp_path):
+    """The IVF cell UDF runs once per row on each side: the cells explode
+    inside the generator, so the join's inferred not-null filter on the
+    cell column cannot re-run the UDF below a projection."""
+    import numpy as np
+    from pastash_spark.operators.similarity import ivf_topk
+    rng = np.random.RandomState(5)
+    path = str(tmp_path / "emb")
+    spark.createDataFrame(
+        [(i, rng.randn(16).astype("float32").tolist()) for i in range(200)],
+        "vec_id int, embedding array<float>").write.parquet(path)
+    emb = spark.read.parquet(path)
+    plan = _plan(ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=3,
+                          n_centroids=8, nprobe=2))
+    assert plan.count("ArrowEvalPython") == 2

@@ -196,3 +196,67 @@ def test_janus_span_stream_pairing(spark, tmp_path):
     assert att.span_id == att_id and att.duration_us == 550
     assert got["Handle detached"].parent_span_id == att_id
     assert got["Session destroyed"].parent_span_id == tid[:16]
+
+
+def test_janus_span_stream_matches_batch(spark, tmp_path):
+    """The stream and the batch kernel read one span model: for every span
+    name the stream emits, its rows equal janus_trace_spans' rows on the
+    same events — across two micro-batches, with a stale re-pair, orphan
+    closes (parent NULL in both) and a row that opens and closes the JSEP
+    family (it pairs with itself in both)."""
+    from pastash_spark.operators.correlate import janus_trace_spans
+    from pastash_spark.streaming.state import janus_span_stream
+    src = str(tmp_path / "janus_src")
+    schema = ("session_id string, ord long, ts_us long, type int, "
+              "subtype int, event_name string, jsep_type string, "
+              "jsep_owner string, ice_state string")
+    first = [("s1", 1, 100, 1, 0, "created", None, None, None),
+             ("s1", 2, 150, 2, 0, "attached", None, None, None),
+             ("s1", 3, 200, 8, 0, None, "offer", "local", None),
+             ("s1", 4, 250, 16, 1, None, None, None, "gathering"),
+             ("s2", 1, 100, 2, 0, "detached", None, None, None),
+             ("s2", 2, 110, 8, 0, None, None, "local", None),
+             ("s2", 3, 120, 16, 1, None, None, None, "ready")]
+    second = [("s1", 5, 300, 16, 1, None, None, None, "connecting"),
+              ("s1", 6, 350, 16, 1, None, None, None, "ready"),
+              ("s1", 7, 400, 2, 0, "detached", None, None, None),
+              ("s1", 8, 450, 2, 0, "detached", None, None, None),
+              ("s1", 9, 500, 1, 0, "destroyed", None, None, None),
+              ("s1", 10, 550, 16, 2, None, None, None, None)]
+    for rows in (first, second):
+        spark.createDataFrame(rows, schema).coalesce(1).write \
+            .mode("append").json(src)
+        time.sleep(1.1)     # distinct file mtimes: batch order
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).json(src))
+    q = (janus_span_stream(stream).writeStream.format("memory")
+         .queryName("janus_parity").outputMode("append").start())
+    try:
+        _wait_rows(spark, "janus_parity", 14)
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+    assert len(batches) == 2
+
+    def by_name(rows):
+        out: dict = {}
+        for r in rows:
+            out.setdefault(r["name"], []).append(
+                tuple(r[k] for k in sorted(r.asDict())))
+        return {k: sorted(v) for k, v in out.items()}
+
+    got = by_name(spark.table("janus_parity").collect())
+    want = by_name(janus_trace_spans(
+        spark.createDataFrame(first + second, schema),
+        order="ord", ts="ts_us").collect())
+    assert set(got) == {
+        "Session", "Session destroyed", "Handle attached",
+        "Handle detached", "JSEP Event - Offer", "JSEP Event - Answer",
+        "ICE gathering", "ICE connecting", "ICE ready"}
+    assert "Local Candidate" in want       # stateless: batch only
+    for name, rows in got.items():
+        assert rows == want[name], name
+    orphans = [r for r in spark.table("janus_parity").collect()
+               if r.session_id == "s2"]
+    assert len(orphans) == 3
+    assert all(r.parent_span_id is None for r in orphans)
