@@ -19,7 +19,9 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pastash_spark.operators.enrich import asof_join, asof_lookup
-from pastash_spark.operators.parse import regex_groups
+from pastash_spark.operators.parse import (
+    epoch_split, hep_columns, payload_protocol, regex_groups,
+    transport_protocol)
 
 
 def _epoch(c: Column) -> Column:
@@ -451,57 +453,59 @@ def app_janus_sip_correlate(df: DataFrame, *, order: str = "event_id",
 
     sip_raw = F.col("sip").cast("string")
     via_re = r"(?im)^(?:Via|v)\s*:\s*SIP/2\.0/\w+\s+([^;:\s]+)(?::([0-9]+))?"
-    via_host = F.regexp_extract(sip_raw, via_re, 1)
-    via_port = F.regexp_extract(sip_raw, via_re, 2).try_cast("int")
     rport = F.regexp_extract(sip_raw, r"(?i);rport=([0-9]+)", 1) \
         .try_cast("int")
     callid = F.regexp_extract(sip_raw,
                               r"(?im)^(?:Call-ID|i)\s*:\s*(\S+)", 1)
+    via = F.col("_via")
     sips = (df.filter(sip_raw.isNotNull() & (sip_raw != "")
                       & F.col("session_id").isNotNull())
             .select(F.col(order), F.col(ts).cast("long").alias("_ts"),
                     F.col("session_id"), sip_raw.alias("payload"),
                     F.col("ws_event").alias("_ev"),
-                    via_host.alias("_vh"), via_port.alias("_vp"),
-                    rport.alias("_vr"), callid.alias("_cid")))
+                    regex_groups(sip_raw, via_re, (1, 2)).alias("_via"),
+                    rport.alias("_vr"), callid.alias("_cid"))
+            # a Via miss reads '' for the host, as regexp_extract does
+            .select("*", F.coalesce(F.get(via, 1), F.lit("")).alias("_vh"),
+                    F.get(via, 2).try_cast("int").alias("_vp")))
     # cache-miss inference: the session adopts its FIRST SIP event's Via
+    # host and port together
     w_first = (Window.partitionBy("session_id").orderBy(F.col(order))
                .rowsBetween(Window.unboundedPreceding, 0))
-    sips = (sips.withColumn("_inf_ip", F.first("_vh", True).over(w_first))
-            .withColumn("_inf_port", F.first("_vp", True).over(w_first))
+    sips = (sips.withColumn("_inf", F.first(F.struct("_vh", "_vp"))
+                            .over(w_first))
             .join(sess_dim, F.col("session_id") == F.col("_s_id"), "left"))
     has_dim = F.col("_s_id").isNotNull()
     sess_ip = F.when(has_dim, F.col("_sess_ip")) \
-        .otherwise(F.col("_inf_ip"))
+        .otherwise(F.col("_inf._vh"))
     sess_port = F.when(has_dim, F.lit(None).cast("int")) \
-        .otherwise(F.col("_inf_port"))
+        .otherwise(F.col("_inf._vp"))
     is_out = F.col("_ev") == "sip-out"
     is_in = F.col("_ev") == "sip-in"
+    sec = F.col("_ts")
     return (sips.filter(is_out | is_in)
             .select(
                 F.col(order), F.col("session_id"),
-                F.lit(1).alias("proto_type"),
-                F.col("payload"),
-                F.coalesce(F.col("_cid"), F.lit(""))
-                .alias("correlation_id"),
-                F.when(is_out,
-                       F.coalesce(sess_ip, F.lit("127.0.0.1")))
-                .otherwise(F.coalesce(F.col("_vh"), F.lit("127.0.0.1")))
-                .alias("src_ip"),
-                F.when(is_out, F.coalesce(sess_port, F.lit(5050)))
-                .otherwise(F.coalesce(F.col("_vp"), F.lit(5050)))
-                .cast("int").alias("src_port"),
-                F.when(is_out,
-                       F.coalesce(F.col("_vh"), F.lit("127.0.0.1")))
-                .otherwise(sess_ip).alias("dst_ip"),
-                F.when(is_out, F.coalesce(F.col("_vp"), F.lit(5050)))
-                .otherwise(F.coalesce(F.col("_vr"), F.lit(5050)))
-                .cast("int").alias("dst_port"),
-                F.lit(17).alias("protocol"),
-                F.floor(F.col("_ts") / 1000000).cast("long")
-                .alias("ts_sec"),
-                F.floor((F.col("_ts") / 1000) % 1000).cast("long")
-                .alias("ts_usec")))
+                *hep_columns(
+                    proto_type=1, payload=F.col("payload"),
+                    correlation_id=F.coalesce(F.col("_cid"), F.lit("")),
+                    src_ip=F.when(is_out,
+                                  F.coalesce(sess_ip, F.lit("127.0.0.1")))
+                    .otherwise(F.coalesce(F.col("_vh"),
+                                          F.lit("127.0.0.1"))),
+                    src_port=F.when(is_out,
+                                    F.coalesce(sess_port, F.lit(5050)))
+                    .otherwise(F.coalesce(F.col("_vp"), F.lit(5050))),
+                    dst_ip=F.when(is_out, F.coalesce(F.col("_vh"),
+                                                     F.lit("127.0.0.1")))
+                    .otherwise(sess_ip),
+                    dst_port=F.when(is_out,
+                                    F.coalesce(F.col("_vp"), F.lit(5050)))
+                    .otherwise(F.coalesce(F.col("_vr"), F.lit(5050))),
+                    protocol=17,
+                    # the reference's (ts/1000)%1000 millisecond slice
+                    ts_sec=F.floor(sec / 1000000),
+                    ts_usec=F.floor((sec / 1000) % 1000))))
 
 
 # --- app_genesys --------------------------------------------------------------
@@ -556,40 +560,40 @@ def app_genesys_correlate(df: DataFrame, *, field: str = "message",
     # string-arg .replace — which doubles the \r on an already-CRLF
     # body); [^\n] not ``.`` because Java's dot excludes \r too
     payload = F.regexp_replace(body, r"^([^\n]*)\n", "$1\r\n")
-    callid = F.regexp_extract(payload, r"Call-ID: (.*)\r", 1)
+    callid = F.regexp_extract("payload", r"Call-ID: (.*)\r", 1)
     callid = F.when(callid != "", callid).otherwise("false@127.0.0.1")
-    local_ip = F.coalesce(F.get(F.split(callid, "@"), 1),
-                          F.lit("127.0.0.1"))
+    # the head's (transport, remote ip, remote port): one regex_groups
+    # pass per row, under its direction's mask
+    sip = (df.filter(is_rcv | is_snd)
+           .select(ord_c, payload.alias("payload"), is_rcv.alias("_rcv"),
+                   F.when(is_rcv, regex_groups(head, rcv_re, (2, 4, 5)))
+                   .otherwise(regex_groups(head, snd_re, (2, 4, 5)))
+                   .alias("_g"))
+           .withColumn("_callid", callid))
     # first '<localIp>:<port>>' occurrence (the reference builds a
     # per-row RegExp from localIp, :56 — Spark patterns must be literal,
     # so match every host:port> pair and pick the one whose host segment
     # ends with the local ip; URI userinfo like 'a@' glues onto the host
-    # charset, hence endswith rather than equality)
+    # charset, hence endswith rather than equality).  payload and _lip are
+    # columns here, so the filter's lambda holds no regex.
+    sip = sip.withColumn("_lip", F.coalesce(
+        F.get(F.split("_callid", "@"), 1), F.lit("127.0.0.1")))
     hp_re = F.lit(r"([^\s<:>]+):([0-9]+)>")
     hp = F.arrays_zip(
-        F.regexp_extract_all(payload, hp_re, F.lit(1)).alias("h"),
-        F.regexp_extract_all(payload, hp_re, F.lit(2)).alias("p"))
-    mine = F.filter(hp, lambda x: x["h"].endswith(local_ip))
-    local_port = F.coalesce(F.get(mine, 0)["p"], F.lit("5060"))
-
-    def rc(rx, i):
-        return F.regexp_extract(head, rx, i)
-
-    sip = (df.filter(is_rcv | is_snd)
-           .select(ord_c, F.lit(1).alias("proto_type"),
-                   payload.alias("payload"), callid.alias("_callid"),
-                   is_rcv.alias("_rcv"),
-                   F.when(is_rcv, rc(rcv_re, 4)).otherwise(rc(snd_re, 4))
-                   .alias("_rip"),
-                   F.when(is_rcv, rc(rcv_re, 5)).otherwise(rc(snd_re, 5))
-                   .alias("_rport"),
-                   F.when(is_rcv, rc(rcv_re, 2)).otherwise(rc(snd_re, 2))
-                   .alias("_proto"),
-                   local_ip.alias("_lip"), local_port.alias("_lport")))
+        F.regexp_extract_all("payload", hp_re, F.lit(1)).alias("h"),
+        F.regexp_extract_all("payload", hp_re, F.lit(2)).alias("p"))
+    mine = F.filter(hp, lambda x: x["h"].endswith(F.col("_lip")))
+    g = F.col("_g")
+    sip = sip.select(
+        ord_c, "payload", "_callid", "_rcv", "_lip",
+        F.coalesce(F.get(mine, 0)["p"], F.lit("5060")).alias("_lport"),
+        F.get(g, 1).alias("_proto"),
+        # a head miss reads '' for the remote ip, as regexp_extract does
+        F.coalesce(F.get(g, 2), F.lit("")).alias("_rip"),
+        F.get(g, 3).alias("_rport"))
 
     logs = (df.filter(msg.contains("event: message"))
-            .select(ord_c, F.lit(100).alias("proto_type"),
-                    msg.alias("payload"),
+            .select(ord_c, msg.alias("payload"),
                     F.regexp_extract(msg, r"CallUUID\t'(.*)'\n", 1)
                     .alias("_uuid_log"))
             .filter(F.col("_uuid_log") != ""))
@@ -604,28 +608,20 @@ def app_genesys_correlate(df: DataFrame, *, field: str = "message",
         # LRU correlation overrides the header extract (:119-122)
         corr = F.coalesce(F.col("_uuid"),
                           F.when(xcid != "", xcid), F.col("_callid"))
-    sip_out = sip.select(
-        ord_c, "proto_type", "payload", corr.alias("correlation_id"),
-        F.when(F.col("_rcv"), F.col("_rip")).otherwise(F.col("_lip"))
-        .alias("src_ip"),
-        F.when(F.col("_rcv"), F.col("_rport")).otherwise(F.col("_lport"))
-        .try_cast("int").alias("src_port"),
-        F.when(F.col("_rcv"), F.col("_lip")).otherwise(F.col("_rip"))
-        .alias("dst_ip"),
-        F.when(F.col("_rcv"), F.col("_lport")).otherwise(F.col("_rport"))
-        .try_cast("int").alias("dst_port"),
-        F.when(F.col("_proto") == "UDP", 17).otherwise(6)
-        .alias("protocol"))
+    rcv = F.col("_rcv")
+    sip_out = sip.select(ord_c, *hep_columns(
+        proto_type=1, payload=F.col("payload"), correlation_id=corr,
+        src_ip=F.when(rcv, F.col("_rip")).otherwise(F.col("_lip")),
+        src_port=F.when(rcv, F.col("_rport")).otherwise(F.col("_lport")),
+        dst_ip=F.when(rcv, F.col("_lip")).otherwise(F.col("_rip")),
+        dst_port=F.when(rcv, F.col("_lport")).otherwise(F.col("_rport")),
+        protocol=transport_protocol(F.col("_proto"))))
     # log lines: resolve uuid (their correlation IS the uuid; :76-86
     # emits rc [0,'UDP',...] localhost addressing)
-    log_out = logs.select(
-        ord_c, "proto_type", "payload",
-        F.col("_uuid_log").alias("correlation_id"),
-        F.lit("127.0.0.1").alias("src_ip"),
-        F.lit(0).cast("int").alias("src_port"),
-        F.lit("127.0.0.1").alias("dst_ip"),
-        F.lit(0).cast("int").alias("dst_port"),
-        F.lit(17).alias("protocol"))
+    log_out = logs.select(ord_c, *hep_columns(
+        proto_type=100, payload=F.col("payload"),
+        correlation_id=F.col("_uuid_log"), src_ip="127.0.0.1", src_port=0,
+        dst_ip="127.0.0.1", dst_port=0, protocol=17))
     return sip_out.unionByName(log_out)
 
 
@@ -699,33 +695,30 @@ def app_avaya_correlate(df: DataFrame, *, field: str = "message",
     parts = F.split(buf, "#012")
     dt = F.try_to_timestamp(F.get(parts, 0),
                             F.lit("dd/MM/yyyy HH:mm:ss.SSS"))
-    sec = dt.cast("double")
     dg_re = r"L(.*):(.*[0-9])/R(.*):(.*[0-9])/(.*)/"
-    local = F.get(parts, 2)
-    egress = F.get(parts, 3)
-
-    def g(src, i):
-        v = F.regexp_extract(src, dg_re, i)
-        return F.when(v != "", v)
-
     sip = F.element_at(parts, -1)
     corr = (F.trim(F.regexp_extract(
         sip, correlation_hdr + r":\s?(.*)\r", 1))
         if correlation_hdr else F.lit(""))
-    return emit.select(
-        F.col("_blk_ord").alias(order),
-        sip.alias("payload"),
-        corr.alias("correlation_id"),
-        g(local, 3).alias("src_ip"),
-        g(local, 4).try_cast("int").alias("src_port"),
-        F.coalesce(g(egress, 3), g(local, 1)).alias("dst_ip"),
-        F.coalesce(g(egress, 4), g(local, 2)).try_cast("int")
-        .alias("dst_port"),
-        F.when(g(local, 5) == "UDP", 17).otherwise(6).alias("protocol"),
-        F.lit(1).alias("proto_type"),
-        F.floor(sec).cast("long").alias("ts_sec"),
-        F.round((sec - F.floor(sec)) * 1000000).cast("long")
-        .alias("ts_usec"))
+    # one regex_groups pass per datagram field, projected before the
+    # addressing reads it
+    dgrams = emit.select(
+        F.col("_blk_ord").alias(order), sip.alias("_sip"),
+        corr.alias("_corr"), dt.cast("double").alias("_sec"),
+        regex_groups(F.get(parts, 2), dg_re, range(1, 6)).alias("_local"),
+        regex_groups(F.get(parts, 3), dg_re, (3, 4)).alias("_egress"))
+
+    def g(arr, i):
+        v = F.get(F.col(arr), i)
+        return F.when(v != "", v)
+
+    return dgrams.select(F.col(order), *hep_columns(
+        payload=F.col("_sip"), correlation_id=F.col("_corr"),
+        src_ip=g("_local", 3), src_port=g("_local", 4),
+        dst_ip=F.coalesce(g("_egress", 1), g("_local", 1)),
+        dst_port=F.coalesce(g("_egress", 2), g("_local", 2)),
+        protocol=transport_protocol(g("_local", 5)), proto_type=1,
+        **epoch_split(F.col("_sec"))))
 
 
 # --- app_ingate / app_cisco ---------------------------------------------------
@@ -766,19 +759,21 @@ def app_ingate_correlate(df: DataFrame, *, field: str = "message",
                r"connection\s\d+:")
     is_send = msg.contains("send s")
     is_recv = ~is_send & msg.contains("recv")
+    # one regex_groups pass per row under its direction's mask, the groups
+    # in (src ip, src port, dst ip, dst port, proto) order, projected
+    # before the publication reads them; a line whose pattern misses
+    # publishes all-NULL addressing
+    df = df.withColumn(
+        "_g", F.when(is_send, regex_groups(msg, send_re, (3, 4, 1, 2, 5)))
+        .when(is_recv, regex_groups(msg, recv_re, range(1, 6))))
 
-    def g(rx, i):
-        v = F.regexp_extract(msg, rx, i)
+    def g(i):
+        v = F.get(F.col("_g"), i)
         return F.when(v != "", v)
 
-    pub = F.when(is_send, F.struct(
-        g(send_re, 3).alias("sip_"), g(send_re, 4).alias("sport"),
-        g(send_re, 1).alias("dip"), g(send_re, 2).alias("dport"),
-        g(send_re, 5).alias("proto"))) \
-        .when(is_recv, F.struct(
-            g(recv_re, 1).alias("sip_"), g(recv_re, 2).alias("sport"),
-            g(recv_re, 3).alias("dip"), g(recv_re, 4).alias("dport"),
-            g(recv_re, 5).alias("proto")))
+    pub = F.when(is_send | is_recv, F.struct(
+        g(1).alias("sip_"), g(2).alias("sport"), g(3).alias("dip"),
+        g(4).alias("dport"), g(5).alias("proto")))
     cols = [F.col(order)]
     if ts:
         cols.append(F.col(ts))
@@ -811,16 +806,11 @@ def app_ingate_correlate(df: DataFrame, *, field: str = "message",
                  .withColumn("_sip", assemble(F.col("_m"))))
     corr = F.regexp_extract(F.col("_sip"),
                             correlation_hdr + r"\s?(.*?)\r?\n", 1)
-    out_cols = [
-        F.col(order), F.col("_sip").alias("payload"),
-        F.trim(corr).alias("correlation_id"),
-        F.col("_rc.sip_").alias("src_ip"),
-        F.col("_rc.sport").try_cast("int").alias("src_port"),
-        F.col("_rc.dip").alias("dst_ip"),
-        F.col("_rc.dport").try_cast("int").alias("dst_port"),
-        F.when(F.col("_rc.proto") == "UDP", 17).otherwise(6)
-        .alias("protocol"),
-        F.lit(1).alias("proto_type")]
+    out_cols = [F.col(order), *hep_columns(
+        payload=F.col("_sip"), correlation_id=F.trim(corr),
+        src_ip=F.col("_rc.sip_"), src_port=F.col("_rc.sport"),
+        dst_ip=F.col("_rc.dip"), dst_port=F.col("_rc.dport"),
+        protocol=transport_protocol(F.col("_rc.proto")), proto_type=1)]
     if ts:
         out_cols.append(F.col(ts))
     return sip_block.select(*out_cols)
@@ -883,15 +873,11 @@ def app_cisco_correlate(df: DataFrame, *, field: str = "message",
     base = asof_lookup(df, key=key, order=order, values={
         "_cid": cid, "_src": F.when(src != "", src),
         "_dst": F.when(dst != "", dst), "_tsec": ts_sec})
-    sec = F.col("_tsec")
-    return base.select(
-        F.col(order), dev.alias("host"), payload.alias("payload"),
-        F.coalesce(F.col("_cid"), F.lit("")).alias("correlation_id"),
-        F.col("_src").alias("src_ip"), F.col("_dst").alias("dst_ip"),
-        F.floor(sec).cast("long").alias("ts_sec"),
-        F.round((sec - F.floor(sec)) * 1000000).cast("long")
-        .alias("ts_usec"),
-        F.lit(1).alias("proto_type"))
+    return base.select(F.col(order), dev.alias("host"), *hep_columns(
+        payload=payload,
+        correlation_id=F.coalesce(F.col("_cid"), F.lit("")),
+        src_ip=F.col("_src"), dst_ip=F.col("_dst"),
+        **epoch_split(F.col("_tsec")), proto_type=1))
 
 
 # --- janus trace/span assembly ------------------------------------------------
@@ -1528,10 +1514,11 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
                    F.lit(False)))
 
     # ONE pass over `base`: the primary SIP emission, the re-hold second
-    # message and (qos) both MEDIA_END legs are four nullable struct SLOTS
-    # exploded from a single array — a union of branches would re-run the
-    # scan, parse and window subtree per branch.  A null slot (condition
-    # false/null) is dropped after the explode.
+    # message, (qos) both MEDIA_END legs and (logs) the CALL_END and other
+    # SID-line rows are nullable struct SLOTS exploded from a single array
+    # — a union of branches would re-run the scan, parse and window
+    # subtree per branch.  A null slot (condition false/null) is dropped
+    # after the explode.
     def _sip_struct(hit: Column, remote: Column, raw_pay: Column,
                     extra_filter: Column) -> Column:
         """proto_type=1 SIP slot from one parsed (hit, remote, raw_pay)
@@ -1562,25 +1549,20 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
                 payload, correlation_hdr + r":\s?(.*)\r\n\r\n", 1)
             corr = (F.when(payload.startswith("INVITE") & (xcid != ""),
                            xcid).otherwise(corr))
-        proto = F.when(payload.contains("2.0/TCP")
-                       | payload.contains("2.0/TLS"), 6).otherwise(17)
         incoming = hit == 1
         r_ip = F.get(F.split(remote, ":"), 0)
         r_port = F.get(F.split(remote, ":"), 1).try_cast("int")
         return F.when(
             (hit != 0) & ~F.col("_consumed") & extra_filter,
-            F.struct(
-                F.lit(1).alias("proto_type"),
-                payload.alias("payload"), corr.alias("correlation_id"),
-                F.when(incoming, r_ip).otherwise(F.lit(localip))
-                 .alias("src_ip"),
-                F.when(incoming, r_port).otherwise(F.lit(localport))
-                 .cast("int").alias("src_port"),
-                F.when(incoming, F.lit(localip)).otherwise(r_ip)
-                 .alias("dst_ip"),
-                F.when(incoming, F.lit(localport)).otherwise(r_port)
-                 .cast("int").alias("dst_port"),
-                proto.alias("protocol")))
+            F.struct(*hep_columns(
+                proto_type=1, payload=payload, correlation_id=corr,
+                src_ip=F.when(incoming, r_ip).otherwise(F.lit(localip)),
+                src_port=F.when(incoming, r_port)
+                .otherwise(F.lit(localport)),
+                dst_ip=F.when(incoming, F.lit(localip)).otherwise(r_ip),
+                dst_port=F.when(incoming, F.lit(localport))
+                .otherwise(r_port),
+                protocol=payload_protocol(payload))))
 
     # the re-hold's second message rides the SAME order value, directly
     # after its primary row
@@ -1589,8 +1571,6 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
              _sip_struct(F.col("_m_hit"), F.col("_m_remote"),
                          F.col("_m_raw"), F.col("_refrag_ok"))]
     l = F.col("_line")
-    schema_cols = ["proto_type", "payload", "correlation_id", "src_ip",
-                   "src_port", "dst_ip", "dst_port", "protocol"]
 
     if qos:
         # MEDIA_END: the `_ac_tokens` of the raw line (`_p.q`; `_line`
@@ -1632,18 +1612,36 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
                  .alias("REPORT_NAME"),
                 F.lit(dir_).alias("PARTY"),
                 F.lit("HANGUP").alias("TYPE")))
-            return F.struct(
-                F.lit(35).alias("proto_type"), pay.alias("payload"),
-                g(2).alias("correlation_id"), src.alias("src_ip"),
-                sport.try_cast("int").alias("src_port"),
-                dst.alias("dst_ip"),
-                dport.try_cast("int").alias("dst_port"),
-                F.lit(17).alias("protocol"))
+            return F.struct(*hep_columns(
+                proto_type=35, payload=pay, correlation_id=g(2),
+                src_ip=src, src_port=sport, dst_ip=dst, dst_port=dport,
+                protocol=17))
 
         slots.append(F.when(media_ok,
                             report(0, g(7), g(8), g(9), g(10), 17, 11)))
         slots.append(F.when(media_ok,
                             report(1, g(9), g(10), g(7), g(8), 18, 12)))
+
+    if logs:
+        # CALL_END (:287-292): the JSON field vector, localip:0; its
+        # tokens are a column before the slot reads them twice
+        base = base.withColumn("_cdr", F.when(
+            l.contains("CALL_END ") & ~F.col("_consumed"), _ac_tokens(l)))
+        cdr = F.col("_cdr")
+        slots.append(F.when(cdr.isNotNull(), F.struct(*hep_columns(
+            proto_type=100, payload=F.to_json(cdr),
+            correlation_id=F.coalesce(F.get(cdr, 3), F.lit("")),
+            src_ip=localip, src_port=0, dst_ip=localip, dst_port=0,
+            protocol=17))))
+        # other SID-carrying lines (:342-351), localip:514; their NULL
+        # correlation id reads the sidcache below
+        slots.append(F.when(
+            (F.col("sid") != "") & ~is_sipline & ~F.col("_consumed")
+            & ~l.contains("CALL_END ") & ~l.contains("MEDIA_END "),
+            F.struct(*hep_columns(
+                proto_type=100, payload=l, correlation_id=None,
+                src_ip=localip, src_port=514, dst_ip=localip, dst_port=514,
+                protocol=17))))
 
     # Materialize every slot as a COLUMN before the explode: Catalyst does
     # no common-subexpression elimination inside a Generate's generator
@@ -1653,55 +1651,22 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
     slot_names = [f"_slot{i}" for i in range(len(slots))]
     for nm, s in zip(slot_names, slots):
         base = base.withColumn(nm, s)
+    arr = F.array(*[F.col(n) for n in slot_names])
     core = (base.select(F.col(order), "sid",
-                        F.explode(F.array(*[F.col(n) for n in slot_names]))
-                        .alias("_r"))
-            .filter(F.col("_r").isNotNull())
-            .select(F.col(order), "sid",
-                    *[F.col(f"_r.{c}") for c in schema_cols]))
-    outs = [core]
-
+                        F.posexplode(arr).alias("_pos", "_r") if logs
+                        else F.explode(arr).alias("_r"))
+            .filter(F.col("_r").isNotNull()))
+    fields = [F.col(f"_r.{c}") for c in (
+        "proto_type", "payload", "correlation_id", "src_ip", "src_port",
+        "dst_ip", "dst_port", "protocol")]
     if logs:
-        call_end = (base.filter(l.contains("CALL_END ")
-                                & ~F.col("_consumed"))
-                    .withColumn("_cdr", _ac_tokens(l))
-                    .select(
-            F.col(order), "sid", F.lit(100).alias("proto_type"),
-            F.to_json(F.col("_cdr")).alias("payload"),
-            F.coalesce(F.get(F.col("_cdr"), 3), F.lit(""))
-             .alias("correlation_id"),
-            F.lit(localip).alias("src_ip"),
-            F.lit(0).cast("int").alias("src_port"),
-            F.lit(localip).alias("dst_ip"),
-            F.lit(0).cast("int").alias("dst_port"),
-            F.lit(17).alias("protocol")))
-        outs.append(call_end)
-        # other SID-carrying lines: correlation through the sidcache
-        # (set :271-273, get :348) — the Call-ID of the latest SIP message
-        # before the line on its sid; the re-hold's second message comes
-        # after its primary, so it wins on the shared order value
-        others = base.filter(
-            (F.col("sid") != "") & ~is_sipline & ~F.col("_consumed")
-            & ~l.contains("CALL_END ") & ~l.contains("MEDIA_END "))
-        sip_cids = (base.select(
-            F.col(order), "sid",
-            F.coalesce(F.col("_slot1.correlation_id"),
-                       F.col("_slot0.correlation_id")).alias("_cid"))
-            .filter((F.col("sid") != "") & F.col("_cid").isNotNull()))
-        j = asof_join(others.select(F.col(order), "sid", "_line"), sip_cids,
-                      key="sid", order=order, value="_cid", target="_cid")
-        outs.append(j.select(
-            F.col(order), "sid", F.lit(100).alias("proto_type"),
-            F.col("_line").alias("payload"),
-            F.coalesce(F.col("_cid"), F.col("sid"))
-             .alias("correlation_id"),
-            F.lit(localip).alias("src_ip"),
-            F.lit(514).cast("int").alias("src_port"),
-            F.lit(localip).alias("dst_ip"),
-            F.lit(514).cast("int").alias("dst_port"),
-            F.lit(17).alias("protocol")))
-
-    res = outs[0]
-    for o in outs[1:]:
-        res = res.unionByName(o)
-    return res
+        # the sidcache (set :271-273, get :348): a log line reads the
+        # Call-ID of the latest SIP message before it on its sid, else
+        # keeps the sid.  The re-hold's second message comes after its
+        # primary on the shared order value, so it wins.
+        core = asof_lookup(core, key="sid", order=[order, "_pos"], values={
+            "_cid": F.when(F.col("_r.proto_type") == 1,
+                           F.col("_r.correlation_id"))})
+        fields[2] = F.coalesce(fields[2], F.col("_cid"), F.col("sid")) \
+            .alias("correlation_id")
+    return core.select(F.col(order), "sid", *fields)

@@ -957,6 +957,44 @@ def app_sesm(df: DataFrame, *, field: str = DEFAULT_FIELD,
     return df.withColumn(target, line)
 
 
+# --- the HEP rcinfo columns of the SIP app packs -----------------------------
+
+# every column a SIP app pack hands to the hep sink (output_hep.js preHep
+# reads data.rcinfo), with its type; sources.sinks.hep_serialize reads the
+# addressing ones by name
+_HEP_TYPES = {"payload": "string", "correlation_id": "string",
+              "src_ip": "string", "src_port": "int", "dst_ip": "string",
+              "dst_port": "int", "protocol": "int", "proto_type": "int",
+              "ts_sec": "bigint", "ts_usec": "bigint"}
+
+
+def hep_columns(**cols: "Column | str | int | None") -> list[Column]:
+    """A SIP app pack's HEP output columns, in its keyword order: each value
+    (a column or a literal) try-cast to its name's type, so a port that
+    does not parse reads NULL.  A pack passes the names it has."""
+    return [(v if isinstance(v, Column) else F.lit(v))
+            .try_cast(_HEP_TYPES[k]).alias(k) for k, v in cols.items()]
+
+
+def transport_protocol(name: Column) -> Column:
+    """HEP ip protocol of a transport name: 17 for UDP, else 6."""
+    return F.when(name == "UDP", 17).otherwise(6)
+
+
+def payload_protocol(payload: Column) -> Column:
+    """HEP ip protocol of a SIP payload: 6 when it names a 2.0/TCP or
+    2.0/TLS transport, else 17."""
+    return F.when(payload.contains("2.0/TCP") | payload.contains("2.0/TLS"),
+                  6).otherwise(17)
+
+
+def epoch_split(sec: Column) -> dict[str, Column]:
+    """HEP ``ts_sec``/``ts_usec`` of epoch seconds: the whole seconds and
+    the rounded microsecond rest."""
+    whole = F.floor(sec)
+    return {"ts_sec": whole, "ts_usec": F.round((sec - whole) * 1000000)}
+
+
 def app_summa(df: DataFrame, *, field: str = DEFAULT_FIELD,
               proto_type: int = 100) -> DataFrame:
     """SUMMA JSON event -> HEP log envelope (plugins/filters/app_summa/
@@ -976,21 +1014,19 @@ def app_summa(df: DataFrame, *, field: str = DEFAULT_FIELD,
                      j("origin.session_id"),
                      j("destination.session_id"),
                      j("source.session_id"))
-    src = F.coalesce(j("source.host"), F.lit("10.0.0.1:0"))
-    dst = F.coalesce(j("destination.host"), F.lit("10.0.0.2:0"))
+    src = F.split(F.coalesce(j("source.host"), F.lit("10.0.0.1:0")), ":")
+    dst = F.split(F.coalesce(j("destination.host"), F.lit("10.0.0.2:0")),
+                  ":")
     return (df.filter(cid.isNotNull() & (cid != ""))
-            .select(m.alias("payload"),
-                    cid.alias("correlation_id"),
-                    F.lit(proto_type).alias("proto_type"),
-                    F.get(F.split(src, ":"), 0).alias("src_ip"),
-                    F.coalesce(F.get(F.split(src, ":"), 1)
-                               .try_cast("int"), F.lit(0))
-                    .alias("src_port"),
-                    F.get(F.split(dst, ":"), 0).alias("dst_ip"),
-                    F.coalesce(F.get(F.split(dst, ":"), 1)
-                               .try_cast("int"), F.lit(0))
-                    .alias("dst_port"),
-                    F.lit(6).alias("protocol")))
+            .select(*hep_columns(
+                payload=m, correlation_id=cid, proto_type=proto_type,
+                src_ip=F.get(src, 0),
+                src_port=F.coalesce(F.get(src, 1).try_cast("int"),
+                                    F.lit(0)),
+                dst_ip=F.get(dst, 0),
+                dst_port=F.coalesce(F.get(dst, 1).try_cast("int"),
+                                    F.lit(0)),
+                protocol=6)))
 
 
 def app_sonus_monitor(df: DataFrame, *, field: str = "payload",
@@ -1005,31 +1041,28 @@ def app_sonus_monitor(df: DataFrame, *, field: str = "payload",
     implements the documented intent: FIRST match's groups, the payload
     itself for the TCP test.  Defaults mirror :57-63."""
     m = F.col(field).cast("string")
+    # one regex_groups pass per header pattern, projected before the
+    # fields read it
+    grouped = df.withColumns({
+        "_src": regex_groups(m, r"srcIp: ([0-9.]+):([0-9]+)", (1, 2)),
+        "_dst": regex_groups(m, r"dstIp: ([0-9.]+):([0-9]+)", (1, 2)),
+        "_ts": regex_groups(m, r"Timestamp=([0-9]+)\.([0-9]+)", (1, 2))})
 
-    def g(rx: str, i: int, default):
-        v = F.regexp_extract(m, rx, i)
+    def g(arr: str, i: int, default=None):
+        v = F.get(F.col(arr), i)
         return F.when(v != "", v).otherwise(F.lit(default))
 
-    out = df.withColumn("src_ip", g(r"srcIp: ([0-9.]+):([0-9]+)", 1,
-                                    "127.0.0.1")) \
-        .withColumn("src_port", g(r"srcIp: ([0-9.]+):([0-9]+)", 2, "5061")
-                    .try_cast("int")) \
-        .withColumn("dst_ip", g(r"dstIp: ([0-9.]+):([0-9]+)", 1,
-                                "127.0.0.2")) \
-        .withColumn("dst_port", g(r"dstIp: ([0-9.]+):([0-9]+)", 2, "5061")
-                    .try_cast("int")) \
-        .withColumn("ts_sec", F.regexp_extract(
-            m, r"Timestamp=([0-9]+)\.([0-9]+)", 1).try_cast("long")) \
-        .withColumn("ts_usec", F.regexp_extract(
-            m, r"Timestamp=([0-9]+)\.([0-9]+)", 2).try_cast("long")) \
-        .withColumn("protocol",
-                    F.when(m.contains("2.0/TCP") | m.contains("2.0/TLS"),
-                           6).otherwise(17)) \
-        .withColumn("proto_type", F.lit(1))
+    rc = {"src_ip": g("_src", 1, "127.0.0.1"),
+          "src_port": g("_src", 2, "5061"),
+          "dst_ip": g("_dst", 1, "127.0.0.2"),
+          "dst_port": g("_dst", 2, "5061"),
+          "ts_sec": g("_ts", 1), "ts_usec": g("_ts", 2),
+          "protocol": payload_protocol(m), "proto_type": 1}
     if correlation_hdr:
-        out = out.withColumn(
-            "correlation_id",
-            F.trim(F.regexp_extract(m, correlation_hdr + r":\s?(.*)\r", 1)))
+        rc["correlation_id"] = F.trim(F.regexp_extract(
+            m, correlation_hdr + r":\s?(.*)\r", 1))
+    out = grouped.withColumns(dict(zip(rc, hep_columns(**rc)))) \
+        .drop("_src", "_dst", "_ts")
     if remove_headers:
         out = out.withColumn(
             field,

@@ -507,21 +507,13 @@ def run_conf_files(spark, text: str, *, base_dir: str | None = None) -> list[str
             pay = "payload" if "payload" in view.columns else "message"
             corr = ("correlation_id" if "correlation_id" in view.columns
                     else None)
-            # per-event rcinfo (output_hep.js preHep reads data.rcinfo):
-            # when the upstream stage (app_audiocodes/app_rtpproxy/hep
-            # correlation packs) produced addressing columns, frame each
-            # row with ITS proto_type/protocol/src/dst instead of the
-            # LOG-type localhost defaults
-            rc_cols = {
-                f"{name}_col": name for name in
-                ("proto_type", "protocol", "src_ip", "src_port",
-                 "dst_ip", "dst_port") if name in view.columns}
             ts = next((c for c in ("ts", "@timestamp", "timestamp")
                        if c in view.columns), None)
+            # per-event rcinfo: hep_serialize frames each row with the
+            # proto_type/protocol/src/dst columns an upstream app pack made
             framed = hep_serialize(
                 view, payload_col=pay, correlation_col=corr,
-                ts_col=ts, capture_id=int(spec.get("hep_id", 2001)),
-                **rc_cols)
+                ts_col=ts, capture_id=int(spec.get("hep_id", 2001)))
             path = resolve(lz)
             framed.select("hep").write.mode("overwrite").parquet(path)
             written.append(path)

@@ -200,25 +200,16 @@ def hep_serialize(df: DataFrame, *, payload_col: str = "payload",
                   correlation_col: str | None = "correlation_id",
                   ts_col: str | None = None,
                   proto_type: int = 100, capture_id: int = 2001,
-                  capture_pass: str = "MyHep",
-                  proto_type_col: str | None = None,
-                  protocol_col: str | None = None,
-                  src_ip_col: str | None = None,
-                  src_port_col: str | None = None,
-                  dst_ip_col: str | None = None,
-                  dst_port_col: str | None = None,
-                  protocol: int = 17,
-                  src_ip: str = "127.0.0.1", dst_ip: str = "127.0.0.2",
-                  src_port: int = 0, dst_port: int = 0,
                   target: str = "hep") -> DataFrame:
     """HEP/EEP sink serializer (output_hep.js:36-90 semantics: wrap each
     event's payload + correlation id + capture credentials into a HEPv3
     packet; transport delivery is the landing-zone/transport boundary, as
-    with gelf).  The reference's preHep reads data.rcinfo PER EVENT
-    (payload type, protocol, src/dst addressing) — pass the ``*_col``
-    parameters to source those chunks from row columns (the app_* packs
-    emit exactly these names); the scalar kwargs are the fallbacks for
-    rows/pipelines without them.  One Arrow pass; timestamps come from
+    with gelf).  The reference's preHep reads data.rcinfo PER EVENT: the
+    frame's ``proto_type``, ``protocol``, ``src_ip``, ``src_port``,
+    ``dst_ip`` and ``dst_port`` columns (the names `parse.hep_columns`
+    gives the app packs), where present, source those chunks; a missing
+    column or a NULL reads the default (``proto_type``, else UDP from
+    127.0.0.1:0 to 127.0.0.2:0).  One Arrow pass; timestamps come from
     ``ts_col`` (epoch seconds derived plan-side) or 0 for deterministic
     output."""
     sec = (F.col(ts_col).cast("timestamp").cast("double")
@@ -227,18 +218,18 @@ def hep_serialize(df: DataFrame, *, payload_col: str = "payload",
             else F.lit(""))
     payload = F.col(payload_col).cast("string")
 
-    def _rc(col: str | None, default, dtype: str):
+    def _rc(col: str, default, dtype: str):
         c = (F.coalesce(F.col(col).cast(dtype), F.lit(default))
-             if col else F.lit(default))
+             if col in df.columns else F.lit(default))
         return c.cast(dtype)
 
     rcinfo = F.struct(
-        _rc(proto_type_col, proto_type, "int").alias("pt"),
-        _rc(protocol_col, protocol, "int").alias("proto"),
-        _rc(src_ip_col, src_ip, "string").alias("sip"),
-        _rc(src_port_col, src_port, "int").alias("sport"),
-        _rc(dst_ip_col, dst_ip, "string").alias("dip"),
-        _rc(dst_port_col, dst_port, "int").alias("dport"))
+        _rc("proto_type", proto_type, "int").alias("pt"),
+        _rc("protocol", 17, "int").alias("proto"),
+        _rc("src_ip", "127.0.0.1", "string").alias("sip"),
+        _rc("src_port", 0, "int").alias("sport"),
+        _rc("dst_ip", "127.0.0.2", "string").alias("dip"),
+        _rc("dst_port", 0, "int").alias("dport"))
 
     @F.pandas_udf("binary")
     def pack(p: pd.Series, c: pd.Series, s: pd.Series,
@@ -252,8 +243,7 @@ def hep_serialize(df: DataFrame, *, payload_col: str = "payload",
                 pay, correlation_id=cid or "", proto_type=int(pt),
                 protocol=int(proto_), src_ip=sip or "127.0.0.1",
                 dst_ip=dip or "127.0.0.2", src_port=int(sport),
-                dst_port=int(dport),
-                capture_id=capture_id, capture_pass=capture_pass,
+                dst_port=int(dport), capture_id=capture_id,
                 time_sec=int(t), time_usec=int(round((t % 1) * 1e6))))
         return pd.Series(out)
 

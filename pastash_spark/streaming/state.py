@@ -98,7 +98,8 @@ def lru_state_stream(df: DataFrame, *, key: str, action: str = "action",
             got = pdf[value].where(pdf[action].eq("set")).ffill()
             if cur is not None:
                 got = got.fillna(cur)
-            last_set = pdf[value][pdf[action].eq("set")]
+            # a NULL set publishes nothing, as in the batch asof_lookup
+            last_set = pdf[value][pdf[action].eq("set")].dropna()
             if len(last_set):
                 cur = last_set.iloc[-1]
             outs.append(pd.DataFrame({

@@ -185,6 +185,67 @@ def test_audiocodes_default_is_sid_partitioned_no_global_window(spark):
             assert node not in p, node
 
 
+def test_audiocodes_logs_plans_its_subtree_once(spark):
+    """logs=True adds the CALL_END and other-line rows as two more slots of
+    the one explode and reads the sidcache in one as-of window over it, so
+    the scan -> parse -> sid-window subtree is planned once; the default
+    (logs=False) plan keeps its one scan, Window and Exchange."""
+    from pastash_spark.operators.correlate import app_audiocodes_correlate
+    df = spark.createDataFrame([(1, "x")], "line_no long, message string")
+    logs = _plan(app_audiocodes_correlate(df, order="line_no", logs=True))
+    assert logs.count("Scan ExistingRDD") == 1
+    plain = _plan(app_audiocodes_correlate(df, order="line_no"))
+    assert plain.count("Scan ExistingRDD") == 1
+    assert _windows(plain) == 1 and plain.count("Exchange") == 1
+
+
+def _lambda_bodies(plan: str) -> list[str]:
+    """The text of every ``lambdafunction(...)`` call in a plan string."""
+    out = []
+    for m in re.finditer(r"lambdafunction\(", plan):
+        depth, i = 1, m.end()
+        while depth:
+            depth += {"(": 1, ")": -1}.get(plan[i], 0)
+            i += 1
+        out.append(plan[m.end():i - 1])
+    return out
+
+
+def test_genesys_port_lambda_holds_no_regex(spark):
+    """The genesys local-port pick filters host:port pairs in a
+    higher-order function, which runs interpreted once per element: its
+    lambda reads the payload and local ip as columns, never the regex
+    chain that derives them."""
+    from pastash_spark.operators.correlate import app_genesys_correlate
+    df = spark.createDataFrame([(1, "x")], "line_no long, message string")
+    bodies = _lambda_bodies(_optimized(app_genesys_correlate(df)))
+    assert bodies
+    for body in bodies:
+        assert "regexp_" not in body, body
+
+
+def test_sip_pack_patterns_run_once(spark):
+    """Each multi-group pattern of a SIP app pack is one regex_groups pass
+    (a whole-line regexp_replace) per row, its arrays projected before the
+    fields read them — the optimizer must not inline a pass per field.
+    avaya runs its datagram pattern on two fields."""
+    from pastash_spark.operators import correlate as C, parse as P
+    lines = spark.createDataFrame(
+        [(1, "p1", "x")], "line_no long, path string, message string")
+    janus = spark.createDataFrame(
+        [(1, 10, 2, "s1", None, "sip-out", None, "x")],
+        "event_id long, ts_us long, type int, session_id string, "
+        "ws_id string, ws_event string, ws_ip string, sip string")
+    passes = {
+        "janus_sip": (C.app_janus_sip_correlate(janus), 1),
+        "genesys": (C.app_genesys_correlate(lines), 2),
+        "avaya": (C.app_avaya_correlate(lines), 2),
+        "ingate": (C.app_ingate_correlate(lines), 2),
+        "sonus_monitor": (P.app_sonus_monitor(lines, field="message"), 3)}
+    for pack, (df, n) in passes.items():
+        assert _plan(df).count(r"\A[\s\S]*?(?:") == n, pack
+
+
 def test_rtpproxy_lookups_are_asof_windows_not_joins(spark):
     """Every rtpproxy cache lookup is one as-of window over a merged
     stream — never a range join plus a latest-row pick, which builds every

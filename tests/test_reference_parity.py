@@ -640,6 +640,18 @@ class TestAppJanusSip:
         # no session entry: ip AND port inferred from the first Via (:97)
         assert (r.src_ip, r.src_port) == ("10.0.0.5", 5071)
 
+    def test_cache_miss_keeps_first_via_host_and_port_together(self, spark):
+        """The session adopts its FIRST SIP event's Via host and port as one
+        entry (:97-104 cache.set): a first Via with no port keeps the 5050
+        fallback on later events, never a later event's port."""
+        no_port = self.SIP.replace("10.0.0.5:5071", "10.0.0.5")
+        later = self.SIP.replace("10.0.0.5:5071", "10.0.0.6:5099")
+        rows = [(1, 1000000, 2, "s9", None, "sip-out", None, no_port),
+                (2, 2000000, 2, "s9", None, "sip-out", None, later)]
+        got = {r.event_id: (r.src_ip, r.src_port)
+               for r in self._run(spark, rows)}
+        assert got == {1: ("10.0.0.5", 5050), 2: ("10.0.0.5", 5050)}
+
 
 class TestAppGenesys:
     """plugins/filters/app_genesys/filter_app_genesys.js — CID:CUUID
@@ -892,6 +904,139 @@ class TestAppCisco:
         assert r.dst_ip == "r1" and r.src_ip == "10.0.0.5"
         # x-cid overrides Call-ID (:101-106)
         assert r.correlation_id == "xcid-9"
+
+
+class TestSipPackSkeleton:
+    """The SIP app packs share one HEP skeleton (parse.hep_columns and one
+    regex_groups pass per multi-group pattern): their output schemas stay
+    as they were, and a line that passes a pack's mask but misses its
+    pattern reads what one regexp_extract per group read ('' where that
+    was '', NULL where it was NULL)."""
+
+    SCHEMAS = {
+        "janus_sip": "event_id bigint, session_id string, proto_type int, "
+                     "payload string, correlation_id string, src_ip string, "
+                     "src_port int, dst_ip string, dst_port int, "
+                     "protocol int, ts_sec bigint, ts_usec bigint",
+        "genesys": "line_no bigint, proto_type int, payload string, "
+                   "correlation_id string, src_ip string, src_port int, "
+                   "dst_ip string, dst_port int, protocol int",
+        "avaya": "line_no bigint, payload string, correlation_id string, "
+                 "src_ip string, src_port int, dst_ip string, dst_port int, "
+                 "protocol int, proto_type int, ts_sec bigint, "
+                 "ts_usec bigint",
+        "ingate": "line_no bigint, payload string, correlation_id string, "
+                  "src_ip string, src_port int, dst_ip string, "
+                  "dst_port int, protocol int, proto_type int, ts bigint",
+        "cisco": "line_no bigint, host string, payload string, "
+                 "correlation_id string, src_ip string, dst_ip string, "
+                 "ts_sec bigint, ts_usec bigint, proto_type int",
+        "summa": "payload string, correlation_id string, proto_type int, "
+                 "src_ip string, src_port int, dst_ip string, dst_port int, "
+                 "protocol int",
+        "sonus_monitor": "payload string, src_ip string, src_port int, "
+                         "dst_ip string, dst_port int, ts_sec bigint, "
+                         "ts_usec bigint, protocol int, proto_type int, "
+                         "correlation_id string",
+        "audiocodes": "line_no bigint, sid string, proto_type int, "
+                      "payload string, correlation_id string, "
+                      "src_ip string, src_port int, dst_ip string, "
+                      "dst_port int, protocol int",
+        "audiocodes_logs": "line_no bigint, sid string, proto_type int, "
+                           "payload string, correlation_id string, "
+                           "src_ip string, src_port int, dst_ip string, "
+                           "dst_port int, protocol int",
+    }
+
+    @pytest.mark.parametrize("pack", sorted(SCHEMAS))
+    def test_output_schema(self, spark, pack):
+        from pastash_spark.operators import correlate as C, parse as P
+        lines = spark.createDataFrame(
+            [], "line_no long, path string, host string, message string")
+        build = {
+            "janus_sip": lambda: C.app_janus_sip_correlate(
+                spark.createDataFrame(
+                    [], "event_id long, ts_us long, type int, "
+                        "session_id string, ws_id string, ws_event string, "
+                        "ws_ip string, sip string")),
+            "genesys": lambda: C.app_genesys_correlate(lines),
+            "avaya": lambda: C.app_avaya_correlate(lines),
+            "ingate": lambda: C.app_ingate_correlate(
+                lines.withColumn("ts", F.col("line_no")), ts="ts"),
+            "cisco": lambda: C.app_cisco_correlate(lines.drop("path")),
+            "summa": lambda: P.app_summa(lines.select("message")),
+            "sonus_monitor": lambda: P.app_sonus_monitor(
+                spark.createDataFrame([], "payload string"),
+                correlation_hdr="Call-ID"),
+            "audiocodes": lambda: C.app_audiocodes_correlate(lines),
+            "audiocodes_logs": lambda: C.app_audiocodes_correlate(
+                lines, logs=True),
+        }[pack]
+        got = ", ".join(f"{f.name} {f.dataType.simpleString()}"
+                        for f in build().schema)
+        assert got == self.SCHEMAS[pack]
+
+    def _lines(self, spark, lines):
+        return spark.createDataFrame(
+            [(i + 1, l) for i, l in enumerate(lines)],
+            "line_no long, message string")
+
+    def test_janus_sip_via_miss_reads_empty_host(self, spark):
+        from pastash_spark.operators import correlate as C
+        sip = "INVITE sip:x SIP/2.0\r\nCall-ID: j-2\r\n\r\n"
+        df = spark.createDataFrame(
+            [(1, 1000000, 2, "s7", None, "sip-out", None, sip),
+             (2, 2000000, 2, "s7", None, "sip-in", None, sip)],
+            "event_id long, ts_us long, type int, session_id string, "
+            "ws_id string, ws_event string, ws_ip string, sip string")
+        got = {r.event_id: (r.src_ip, r.src_port, r.dst_ip, r.dst_port)
+               for r in C.app_janus_sip_correlate(df).collect()}
+        assert got == {1: ("", 5050, "", 5050), 2: ("", 5050, "", 5050)}
+
+    def test_genesys_head_miss(self, spark):
+        from pastash_spark.operators import correlate as C
+        line = ("12:00:01 SIPTR: Received [0,UDP] a malformed head \n"
+                "INVITE sip:x SIP/2.0\r\n"
+                "Contact: <sip:a@10.0.0.9:5080>\r\n"
+                "Call-ID: gen-2@10.0.0.9\r\n\r\n")
+        r = C.app_genesys_correlate(self._lines(spark, [line])).first()
+        assert (r.src_ip, r.src_port) == ("", None)
+        assert (r.dst_ip, r.dst_port) == ("10.0.0.9", 5080)
+        assert r.protocol == 6 and r.correlation_id == "gen-2@10.0.0.9"
+
+    def test_ingate_send_miss_publishes_null_addressing(self, spark):
+        from pastash_spark.operators import correlate as C
+        df = self._lines(spark, [
+            "Info: sipfw: recv from 4.8.12.4:5061 via 8.8.8.8:6005 UDP "
+            "connection 3:",
+            "Info: sipfw: send sl to nowhere",
+            TestAppIngate.BLOCK])
+        r = C.app_ingate_correlate(df, key=()).first()
+        assert (r.src_ip, r.src_port, r.dst_ip, r.dst_port) == (
+            None, None, None, None)
+        assert r.protocol == 6 and r.correlation_id == "ing-77"
+
+    def test_avaya_malformed_datagram(self, spark):
+        from pastash_spark.operators import correlate as C
+        bad = TestAppAvaya()._block(7).replace(
+            "L10.0.0.1:5060/R10.0.0.7:5062/UDP/", "Lbad/Rbad/UDP/")
+        df = self._lines(spark, [bad, TestAppAvaya()._block(8)])
+        r = C.app_avaya_correlate(df, key=()).first()
+        assert (r.src_ip, r.src_port, r.dst_ip, r.dst_port) == (
+            None, None, None, None)
+        assert r.protocol == 6
+        assert (r.ts_sec, r.ts_usec) == (1675246830, 500000)
+
+    def test_sonus_monitor_headers_without_port(self, spark):
+        from pastash_spark.operators import parse as P
+        pay = ("srcIp: 10.0.0.5\ndstIp: 10.0.0.9\nTimestamp=1700000000\n"
+               "INVITE sip 2.0/UDP\r\n")
+        df = spark.createDataFrame([(pay,)], "payload string")
+        r = P.app_sonus_monitor(df).first()
+        assert (r.src_ip, r.src_port) == ("127.0.0.1", 5061)
+        assert (r.dst_ip, r.dst_port) == ("127.0.0.2", 5061)
+        assert (r.ts_sec, r.ts_usec) == (None, None)
+        assert r.protocol == 17
 
 
 class TestAppHsp:

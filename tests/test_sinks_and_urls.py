@@ -226,10 +226,7 @@ def test_hep_serialize_per_row_rcinfo(spark):
         "payload string, correlation_id string, proto_type int, "
         "protocol int, src_ip string, src_port int, dst_ip string, "
         "dst_port int")
-    rows = hep_serialize(
-        df, proto_type_col="proto_type", protocol_col="protocol",
-        src_ip_col="src_ip", src_port_col="src_port",
-        dst_ip_col="dst_ip", dst_port_col="dst_port").collect()
+    rows = hep_serialize(df).collect()
     c1 = _hep3_decode(bytes([r for r in rows
                              if r.correlation_id == "c-1"][0].hep))
     assert c1[0x0B] == bytes([1]) and c1[0x02] == bytes([6])

@@ -137,6 +137,37 @@ def test_lru_state_stream_set_get(spark, tmp_path):
     assert got[("j", 1)] is None       # get with nothing set
 
 
+def test_lru_state_stream_null_set_keeps_value(spark, tmp_path):
+    """A NULL-valued set publishes nothing, in the stream as in the batch
+    asof_lookup: a get in the next micro-batch still reads the last
+    non-NULL value."""
+    from pastash_spark.operators.enrich import asof_lookup
+    src = str(tmp_path / "src")
+    schema = "key string, seq long, action string, value string"
+    first = [("k", 1, "set", "v1"), ("k", 2, "set", None)]
+    second = [("k", 3, "get", None)]
+    for rows in (first, second):
+        spark.createDataFrame(rows, schema).coalesce(1).write \
+            .mode("append").json(src)
+        time.sleep(1.1)     # distinct file mtimes: batch order
+    stream = (spark.readStream.schema(schema)
+              .option("maxFilesPerTrigger", 1).json(src))
+    q = (lru_state_stream(stream, key="key").writeStream.format("memory")
+         .queryName("lru_null").outputMode("append").start())
+    try:
+        _wait_rows(spark, "lru_null", 3)
+        batches = [p for p in q.recentProgress if p["numInputRows"] > 0]
+    finally:
+        q.stop()
+    assert len(batches) == 2
+    got = {r.seq: r.got for r in spark.table("lru_null").collect()}
+    want = {r.seq: r.got for r in asof_lookup(
+        spark.createDataFrame(first + second, schema), key="key",
+        order="seq", values={"got": F.when(F.col("action") == "set",
+                                           F.col("value"))}).collect()}
+    assert got == want == {1: "v1", 2: "v1", 3: "v1"}
+
+
 def test_multiline_stream_flush_on_start_line_and_timeout(spark, tmp_path):
     src = str(tmp_path / "src")
     spark.createDataFrame(
