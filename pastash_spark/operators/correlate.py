@@ -572,21 +572,22 @@ def app_genesys_correlate(df: DataFrame, *, field: str = "message",
            .withColumn("_callid", callid))
     # first '<localIp>:<port>>' occurrence (the reference builds a
     # per-row RegExp from localIp, :56 — Spark patterns must be literal,
-    # so match every host:port> pair and pick the one whose host segment
-    # ends with the local ip; URI userinfo like 'a@' glues onto the host
-    # charset, hence endswith rather than equality).  payload and _lip are
-    # columns here, so the filter's lambda holds no regex.
+    # so match every host:port> pair in one regex pass and pick the one
+    # whose host segment ends with the local ip; URI userinfo like 'a@'
+    # glues onto the host charset, hence endswith rather than equality).
+    # payload and _lip are columns here, and the host charset has no ':',
+    # so the filter's lambda splits host from port with substring_index.
     sip = sip.withColumn("_lip", F.coalesce(
         F.get(F.split("_callid", "@"), 1), F.lit("127.0.0.1")))
-    hp_re = F.lit(r"([^\s<:>]+):([0-9]+)>")
-    hp = F.arrays_zip(
-        F.regexp_extract_all("payload", hp_re, F.lit(1)).alias("h"),
-        F.regexp_extract_all("payload", hp_re, F.lit(2)).alias("p"))
-    mine = F.filter(hp, lambda x: x["h"].endswith(F.col("_lip")))
+    hp = F.regexp_extract_all(
+        "payload", F.lit(r"([^\s<:>]+:[0-9]+)>"), F.lit(1))
+    mine = F.filter(hp, lambda x: F.substring_index(x, ":", 1)
+                    .endswith(F.col("_lip")))
     g = F.col("_g")
     sip = sip.select(
         ord_c, "payload", "_callid", "_rcv", "_lip",
-        F.coalesce(F.get(mine, 0)["p"], F.lit("5060")).alias("_lport"),
+        F.coalesce(F.substring_index(F.get(mine, 0), ":", -1),
+                   F.lit("5060")).alias("_lport"),
         F.get(g, 1).alias("_proto"),
         # a head miss reads '' for the remote ip, as regexp_extract does
         F.coalesce(F.get(g, 2), F.lit("")).alias("_rip"),
@@ -1362,11 +1363,7 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
                              correlation_hdr: str | None = None,
                              logs: bool = False, qos: bool = True,
                              partition_by_sid: bool = True,
-                             version: str = "7.20A.260.012",
-                             debug: bool = False, file_debug: bool = False,
-                             bypass: bool = False, autolocal: bool = False,
-                             ini=False, iniwatch: bool = False,
-                             correlation_contact: bool = False) -> DataFrame:
+                             version: str = "7.20A.260.012") -> DataFrame:
     """AudioCodes SBC syslog -> SIP/HEP correlation (plugins/filters/
     app_audiocodes/filter_app_audiocodes.js, default version
     7.20A.260.012).  The reference keeps driver-side state across lines —
@@ -1411,10 +1408,6 @@ def app_audiocodes_correlate(df: DataFrame, *, field: str = "message",
     # (identical result to the old regexp_replace of the literal pattern,
     # without regex-engine cost per line)
     line0 = F.replace(F.col(field), F.lit("\r\n"), F.lit("#012"))
-    # debug/file_debug/bypass/iniwatch are accepted for recipe
-    # compatibility but inert (logging / raw-passthrough knobs);
-    # ini/autolocal interface-alias resolution is config-file plumbing —
-    # out of scope, pass the resolved values via localip/localport.
     in_re, out_re = _AC_SIP_RES.get(version, _AC_SIP_RES["7.20A.260.012"])
 
     # ``key`` partitions the reassembly stream (one device/file per

@@ -252,14 +252,7 @@ def apply_when(df: DataFrame, cond: Column,
     """
     cond = F.coalesce(cond, F.lit(False))
     hit = op(df.filter(cond))
-    miss = df.filter(~cond)
-    for c in hit.columns:
-        if c not in miss.columns:
-            miss = miss.withColumn(c, F.lit(None).cast(hit.schema[c].dataType))
-    for c in miss.columns:
-        if c not in hit.columns:
-            hit = hit.withColumn(c, F.lit(None).cast(miss.schema[c].dataType))
-    return hit.unionByName(miss)
+    return hit.unionByName(df.filter(~cond), allowMissingColumns=True)
 
 
 def only_type(df: DataFrame, type_value: str,

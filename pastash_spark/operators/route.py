@@ -87,14 +87,7 @@ def fan_out_write(df: DataFrame, base_path: str, *,
 def bypass_union(original: DataFrame, aggregated: DataFrame) -> DataFrame:
     """cacheloop `bypass`: pass originals through alongside the aggregate
     stream (filter_cacheloop.js:105-114) — union with null-padded schemas."""
-    o, a = original, aggregated
-    for c in a.columns:
-        if c not in o.columns:
-            o = o.withColumn(c, F.lit(None).cast(a.schema[c].dataType))
-    for c in o.columns:
-        if c not in a.columns:
-            a = a.withColumn(c, F.lit(None).cast(o.schema[c].dataType))
-    return o.unionByName(a)
+    return original.unionByName(aggregated, allowMissingColumns=True)
 
 
 def replicate(df: DataFrame, n: int) -> list[DataFrame]:

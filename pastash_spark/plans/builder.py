@@ -19,6 +19,8 @@ Spec shape:
 
 from __future__ import annotations
 
+import re
+from functools import reduce
 from typing import Any, Callable, Sequence
 
 from pyspark.sql import DataFrame
@@ -135,11 +137,8 @@ def _apply_stage(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     # (base_component.js:165-247): only_type, only_field_exist_<name>,
     # only_field_equal_<name>=<value> — ALL conditions must hold (AND)
     gates = []
-    if (g := spec.pop("only_if", None)) is not None:
-        gates.append(g)
     if (t := spec.pop("only_type", None)) is not None:
         gates.append({"op": "==", "left": {"field": "type"}, "right": t})
-    import re as _re
     for k in list(spec):
         # NB: the reference checks `!data[field]` — JS TRUTHINESS, so an
         # empty string fails only_field_exist too; the bare {"field"} leaf
@@ -149,14 +148,14 @@ def _apply_stage(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
         # STRICT !==, so number-vs-string never matches; ours
         # string-compares — identical on the string fields URL params
         # actually gate on.)
-        if m := _re.match(r"^only_field_exist_(.+)$", k):
+        if m := re.match(r"^only_field_exist_(.+)$", k):
             spec.pop(k)
             gates.append({"field": m.group(1)})
-        elif m := _re.match(r"^only_field_equal_(.+)$", k):
+        elif m := re.match(r"^only_field_equal_(.+)$", k):
             gates.append({"op": "and", "left": {"field": m.group(1)},
                           "right": {"op": "==", "left": {"field": m.group(1)},
                                     "right": spec.pop(k)}})
-        elif m := _re.match(r"^only_field_match_(.+)$", k):
+        elif m := re.match(r"^only_field_match_(.+)$", k):
             gates.append({"op": "and", "left": {"field": m.group(1)},
                           "right": {"op": "=~", "left": {"field": m.group(1)},
                                     "right": spec.pop(k)}})
@@ -178,35 +177,33 @@ _IF_SEQ = 0
 def _apply_if(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
     """if/elif/else with first-match-wins decided on the ORIGINAL rows.
 
-    All branch conditions compile into ONE when-cascade that materializes a
-    hidden branch-index column BEFORE any branch body runs; each body is then
-    gated on that precomputed index.  A branch that mutates the very field
-    its own condition tested therefore cannot re-trigger a later elif/else —
-    the reference evaluates the whole chain against the incoming event once
-    (config_mapper.js:32-58)."""
+    One ``route.route`` call labels every row with the index of the first
+    branch whose condition holds (the ``else`` body's index when none
+    does) BEFORE any body runs, so a body that rewrites the field its own
+    condition tested cannot re-trigger a later elif/else — the reference
+    evaluates the whole chain against the incoming event once
+    (config_mapper.js:32-58).  Each body runs on its label's rows, the
+    missing ``else`` being an empty body, and the parts rejoin through
+    ``unionByName`` into one Union: a k-body block plans k scans of its
+    input.  A body
+    sees the columns of the rows entering the block, never the new columns
+    of a sibling body — in the reference an event runs one branch only;
+    columns a body adds read NULL on the other bodies' rows."""
     global _IF_SEQ
     _IF_SEQ += 1
-    idx_col = f"_branch_idx_{_IF_SEQ}"   # unique per if-block (nesting-safe)
+    idx = f"_branch_idx_{_IF_SEQ}"   # unique per if-block (nesting-safe)
 
-    chains: list[tuple[Any, Sequence[dict]]] = [(spec["cond"], spec["then"])]
-    for e in spec.get("elif", []):
-        chains.append((e["cond"], e["then"]))
-    expr = None
-    for i, (cond_ast, _) in enumerate(chains):
-        cond = F.coalesce(compile_condition(cond_ast, df.schema), F.lit(False))
-        expr = F.when(cond, i) if expr is None else expr.when(cond, i)
-    bodies: list[Sequence[dict]] = [stages for _, stages in chains]
-    if spec.get("else"):
-        expr = expr.otherwise(len(bodies))
-        bodies.append(spec["else"])
-    else:
-        expr = expr.otherwise(-1)
-
-    out = df.withColumn(idx_col, expr)
-    for i, stages in enumerate(bodies):
-        out = M.apply_when(out, F.col(idx_col) == i,
-                           lambda d, s=stages: build(d, s))
-    return out.drop(idx_col)
+    chains = [(spec["cond"], spec["then"])]
+    chains += [(e["cond"], e["then"]) for e in spec.get("elif", [])]
+    labelled = R.route(
+        df, [(str(i), compile_condition(c, df.schema))
+             for i, (c, _) in enumerate(chains)],
+        default=str(len(chains)), target=idx)
+    bodies = [stages for _, stages in chains] + [spec.get("else", [])]
+    parts = [build(labelled.filter(F.col(idx) == str(i)), stages)
+             for i, stages in enumerate(bodies)]
+    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True),
+                  parts).drop(idx)
 
 
 def build(df: DataFrame, stages: Sequence[dict[str, Any]]) -> DataFrame:

@@ -303,12 +303,16 @@ _PARAM_DEFAULTS: dict[str, dict[str, Any]] = {
     # batch multiline groups per input file in arrival order (the
     # reference's implicit single-stream order)
     "multiline": {"key": ["path"], "order": "line_no"},
-    # the r05 stateful app packs: the reference's one-agent-global caches
-    # become per-file windows on the conf surface (scale-safe default;
-    # pass key => [] explicitly to reproduce the global stream)
-    "app_ingate": {"key": ["path"], "order": "line_no"},
-    "app_avaya": {"key": ["path"], "order": "line_no"},
-    "app_cisco": {"key": ["path"], "order": "line_no"},
+}
+# conf params with no batch meaning, dropped by the mapper: multiline's
+# arrival-time flush (the streaming twin honours it via its state
+# timeout); audiocodes' logging/raw-passthrough knobs and its INI
+# interface-alias plumbing (pass the resolved localip/localport instead)
+_INERT_PARAMS: dict[str, tuple[str, ...]] = {
+    "multiline": ("max_delay",),
+    **dict.fromkeys(("app_audiocodes", "audiocodes"), (
+        "debug", "file_debug", "bypass", "autolocal", "ini", "iniwatch",
+        "correlation_contact")),
 }
 # params that are comma-joined strings on the conf surface but lists here
 _LIST_PARAMS: dict[str, tuple[str, ...]] = {
@@ -339,18 +343,17 @@ def _plugin_to_spec(name: str, params: dict) -> list[dict]:
                     v = [v]
             followups.append({"op": fu, key: v})
     renames = _PARAM_RENAMES.get(name, {})
+    inert = _INERT_PARAMS.get(name, ())
     spec = {"op": name}
     for k, v in params.items():
-        spec[renames.get(k, k)] = v
+        if k not in inert:
+            spec[renames.get(k, k)] = v
     for k, v in _PARAM_DEFAULTS.get(name, {}).items():
         spec.setdefault(k, v)
     for k in _LIST_PARAMS.get(name, ()):
         if isinstance(spec.get(k), str):
             spec[k] = [p.strip() for p in spec[k].split(",")]
     if name == "multiline":
-        # max_delay is an arrival-time flush with no batch meaning (the
-        # streaming twin honours it via its state timeout)
-        spec.pop("max_delay", None)
         flags = spec.pop("regex_flags", None)
         if flags and "start_line_regex" in spec:
             from pastash_spark.operators.parse import inline_flags
@@ -429,10 +432,12 @@ def run_conf_files(spark, text: str, *, base_dir: str | None = None) -> list[str
     same scan.  Relative paths resolve under ``base_dir``.  Returns the
     written output paths (each a directory of part files — the distributed
     analogue of the reference's single append-file)."""
+    import inspect
     import os
 
     from pyspark.sql import functions as F
 
+    from pastash_spark.plans import builder
     from pastash_spark.sources.readers import read_lines
     from pastash_spark.sources.sinks import ndjson_serialize
 
@@ -443,20 +448,18 @@ def run_conf_files(spark, text: str, *, base_dir: str | None = None) -> list[str
     specs = conf_to_specs(text)
 
     def _needs_line_no(stages) -> bool:
+        # a stage reads arrival order when its resolved `order` (the spec
+        # value, else its operator's default) is line_no
         for st in stages:
-            if st.get("op") == "multiline" and st.get("order") == "line_no":
+            fn = builder._REGISTRY.get(st.get("op"))
+            param = inspect.signature(fn).parameters.get("order") \
+                if fn else None
+            if st.get("order", param and param.default) == "line_no":
                 return True
-            # the app correlation packs consume arrival order by default
-            if st.get("op") in ("app_audiocodes", "audiocodes",
-                                "app_rtpproxy") \
-                    and st.get("order", "line_no") == "line_no":
+            bodies = [st.get("then"), st.get("else")]
+            bodies += [e["then"] for e in st.get("elif", [])]
+            if any(b and _needs_line_no(b) for b in bodies):
                 return True
-            for sub in (st.get("then"), st.get("else")):
-                if sub and _needs_line_no(sub):
-                    return True
-            for e in st.get("elif", []):
-                if _needs_line_no(e["then"]):
-                    return True
         return False
 
     line_no = _needs_line_no(specs["filter"])

@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pastash_spark.session import local_frame
+from pastash_spark.sources.readers import read_lines
 
 BUCKET_COL = "_bucket"
 
@@ -163,19 +164,13 @@ def tail_new_lines(spark: SparkSession, pattern: str,
     re-reads at most one pass (idempotent sink required, same contract as
     run_resumable).
 
-    Per-file line numbers derive from monotonically_increasing_id, which is
-    ordered within a partition; the text reader emits each file's lines in
-    offset order, and files under maxPartitionBytes (128 MB default — any
-    sanely rotated log) map to single ordered splits.
+    Per-file line numbers come from ``readers.read_lines``; they follow
+    file offsets because files under maxPartitionBytes (128 MB default —
+    any sanely rotated log) map to single ordered splits.
     """
     from pyspark.sql import Window
 
-    lines = (spark.read.text(pattern)
-             .select(F.col("value").alias("message"),
-                     F.input_file_name().alias("path"),
-                     F.monotonically_increasing_id().alias("_mid")))
-    w = Window.partitionBy("path").orderBy("_mid")
-    lines = lines.withColumn("line_no", F.row_number().over(w)).drop("_mid")
+    lines = read_lines(spark, pattern, with_line_no=True)
     first = Window.partitionBy("path").orderBy("line_no")
     lines = lines.withColumn(
         "marker", F.first(F.md5("message")).over(first))

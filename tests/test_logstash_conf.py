@@ -573,3 +573,54 @@ class TestAudiocodesRecipe:
         assert len(r) == 1 and r[0].correlation_id == "cid-740"
         assert r[0].payload.startswith("INVITE sip:x@y SIP/2.0\r\n")
         assert "[Time:" not in r[0].payload
+
+
+class TestOrderReadingPacksFromFiles:
+    """Packs whose `order` defaults to line_no run from a `file` input:
+    run_conf_files numbers the input lines for every stage whose resolved
+    order (the spec value, else the operator's default) is line_no."""
+
+    AVAYA = ("tracer SIPMSGT #012--------------------#012"
+             "01/02/2023 10:20:30.500#012hdr#012"
+             "L10.0.0.1:5060/R10.0.0.{}:5062/UDP/#012"
+             "INVITE sip:x SIP/2.0#015#012Call-ID: av-1#015#012")
+    PACKS = {
+        "app_ingate": ("app_ingate {}", [
+            "Info: sipfw: send sf (0x1) to 4.8.12.4:5061 via 1.1.1.1:6005 "
+            "UDP connection 2:",
+            "<134>May 27 02:52:53 netlogger:              SIP/2.0 200 OK"],
+            "src_ip", [(2, "1.1.1.1")]),
+        "app_avaya": ("app_avaya {}", [AVAYA.format(7), AVAYA.format(8)],
+                      "src_ip", [(1, "10.0.0.7")]),
+        "app_cisco": ("app_cisco { host => path }", [
+            "Jul 12 16:59:53.123: //1234//SIP/Msg/ccsipDisplayMsg:",
+            "Sent:", "INVITE sip:bob@10.0.0.9:5060 SIP/2.0",
+            "Call-ID: cid-cisco-1"],
+            "correlation_id", [(1, ""), (2, ""), (3, ""),
+                               (4, "cid-cisco-1")]),
+        "app_sonus": ("app_sonus {}", [
+            "Incoming message on 10.0.0.1:5060", "INVITE sip:bob SIP/2.0",
+            "Call-ID: abc-123", "", "sending from 10.0.0.2:5060",
+            "SIP/2.0 200 OK", "Call-ID: abc-123", ""],
+            "correlation_id", [(2, "abc-123"), (6, "abc-123")]),
+        "app_genesys": ("app_genesys {}", [
+            "12:00:01 SIPTR: Received [0,UDP] 300 bytes from "
+            "10.0.0.7:5060 ",
+            "12:00:02 SIPSR: Sending  [0,TCP] 280 bytes to 10.0.0.7:5060 "],
+            "src_ip", [(1, "10.0.0.7"), (2, "127.0.0.1")]),
+    }
+
+    @pytest.mark.parametrize("pack", sorted(PACKS))
+    def test_pack_runs_from_file_input(self, spark, tmp_path, pack):
+        import json
+        plugin, lines, field, want = self.PACKS[pack]
+        (tmp_path / "in.txt").write_text("\n".join(lines) + "\n")
+        conf = f"""
+        input {{ file {{ path => in.txt }} }}
+        filter {{ {plugin} }}
+        output {{ file {{ path => out.ndjson }} }}
+        """
+        run_conf_files(spark, conf, base_dir=str(tmp_path))
+        recs = [json.loads(r.value) for r in
+                spark.read.text(str(tmp_path / "out.ndjson")).collect()]
+        assert sorted((r["line_no"], r[field]) for r in recs) == want

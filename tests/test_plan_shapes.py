@@ -224,6 +224,16 @@ def test_genesys_port_lambda_holds_no_regex(spark):
         assert "regexp_" not in body, body
 
 
+def test_genesys_host_port_pairs_extract_once(spark):
+    """The genesys local-port pick reads every ``host:port>`` pair of the
+    payload in one regexp_extract_all pass; host and port split off each
+    pair by plain string functions, not a second extract per group."""
+    from pastash_spark.operators.correlate import app_genesys_correlate
+    df = spark.createDataFrame([(1, "x")], "line_no long, message string")
+    plan = _optimized(app_genesys_correlate(df))
+    assert plan.count("regexp_extract_all(") == 1
+
+
 def test_sip_pack_patterns_run_once(spark):
     """Each multi-group pattern of a SIP app pack is one regex_groups pass
     (a whole-line regexp_replace) per row, its arrays projected before the
@@ -542,3 +552,36 @@ def test_ivf_topk_assigns_cells_once(spark, tmp_path):
     plan = _plan(ivf_topk(emb, emb.filter(F.col("vec_id") < 5), k=3,
                           n_centroids=8, nprobe=2))
     assert plan.count("ArrowEvalPython") == 2
+
+
+def test_if_block_plans_one_scan_per_body(spark):
+    """An if/elif/else block labels its rows once (route.route) and rejoins
+    its bodies in one union: a k-body block plans k scans of its input,
+    not one more per earlier branch-and-union.  Bodies add different
+    columns; each reads NULL on the other bodies' rows."""
+    from pastash_spark.plans.builder import build
+
+    def lt(n):
+        return {"op": "<", "left": {"field": "v"}, "right": n}
+
+    def add(**fields):
+        return [{"op": "add_fields", "fields": fields}]
+
+    df = spark.createDataFrame([(v,) for v in range(12)], "v int")
+    out = build(df, [{
+        "op": "if", "cond": lt(2), "then": add(cls="a"),
+        "elif": [{"cond": lt(4), "then": add(cls="b")},
+                 {"cond": lt(6), "then": add(cls="c", extra="x")},
+                 {"cond": lt(8), "then": add(cls="d")},
+                 {"cond": lt(10), "then": []}],
+        "else": add(tail="z")}])
+    assert _optimized(out).count("LogicalRDD") == 6
+    assert out.columns == ["v", "cls", "extra", "tail"]
+    got = sorted(tuple(r) for r in out.collect())
+    assert got == [
+        (0, "a", None, None), (1, "a", None, None),
+        (2, "b", None, None), (3, "b", None, None),
+        (4, "c", "x", None), (5, "c", "x", None),
+        (6, "d", None, None), (7, "d", None, None),
+        (8, None, None, None), (9, None, None, None),
+        (10, None, None, "z"), (11, None, None, "z")]
